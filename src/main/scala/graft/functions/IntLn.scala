@@ -91,8 +91,4 @@ object IntLn {
     */
   def roundE6(prefix: String, idiv: String): String =
     s"((${prefix}ln_e12 + 500000) $idiv 1000000)"
-
-  /** Rounded e9 quantization. */
-  def roundE9(prefix: String, idiv: String): String =
-    s"((${prefix}ln_e12 + 500) $idiv 1000)"
 }

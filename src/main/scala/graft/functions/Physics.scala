@@ -34,13 +34,11 @@ object Physics {
   def dirZ(zenith: Column): Column =
     sin(radians(lit(90.0) - zenith))
 
-  /** Inverse: cartesian → (zenith°, azimuth°), reconstructing
+  /** Inverse: cartesian → zenith°, reconstructing
     * z = sqrt(1−x²−y²) (reference create_train_valid_test_datasets.py:104-110).
     */
   def zenithOf(x: Column, y: Column): Column =
     lit(90.0) - degrees(atan2(sqrt(lit(1.0) - x * x - y * y), sqrt(x * x + y * y)))
-  def azimuthOf(x: Column, y: Column): Column =
-    pmod(degrees(atan2(y, x)), lit(360.0))
 
   /** Standard scaling (x−μ)/σ with *fitted* literals — the broadcast-stats
     * apply step (reference train_classification.py:193-200). Stats are

@@ -73,11 +73,6 @@ object Tensors {
   def argmax(arr: Column): Column =
     (array_position(arr, array_max(arr)) - 1).cast("int")
 
-  /** Flatten an n×n grid row-major (reference .flatten(),
-    * train_classification.py:184).
-    */
-  def flattenGrid(matrix: Column): Column = flatten(matrix)
-
   /** Reshape a flat array into rows of `width` (reference .reshape(N,16,16)). */
   def reshape(flat: Column, rows: Int, width: Int): Column =
     transform(sequence(lit(0), lit(rows - 1)), r =>

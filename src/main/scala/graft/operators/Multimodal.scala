@@ -456,18 +456,6 @@ object Multimodal {
           col("length").cast("int").as("n_bytes"),
           col("path").as("origin")).as("meta"))
 
-  /** Wrap a text table as a media table: (id, media binary, meta struct) —
-    * text-as-bytes is itself a modality (tokenizer-ingest shape).
-    */
-  def asMediaTable(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id").as("media_id"),
-      col("text").cast("binary").as("media"),
-      struct(
-        lit("text/plain").as("format"),
-        length(col("text").cast("binary")).as("n_bytes"),
-        col("source").as("origin")).as("meta"))
-
   /** Real image resize: decode PPM → nearest-neighbor downscale by `factor`
     * → re-encode. Pure projection: binary in, smaller binary + updated meta
     * out, no shuffle, parallelism = scan parallelism.

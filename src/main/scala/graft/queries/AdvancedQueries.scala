@@ -642,47 +642,9 @@ object AdvancedQueries {
     // table O(V), the Pregel message shape without any driver state.
     QueryDef("q238_label_propagation",
       s"""WITH ${SpatialEdges.cte},
-         |ed AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
-         |      UNION ALL SELECT v, u FROM e0),
-         |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM ed),
-         |c1 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-         |       FROM ed e JOIN l0 l ON l.id = e.dst GROUP BY 1, 2),
-         |l1 AS MATERIALIZED (
-         |  SELECT id, lbl FROM (
-         |    SELECT id, lbl,
-         |           row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl)
-         |             AS rn
-         |    FROM c1) t WHERE rn = 1),
-         |c2 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-         |       FROM ed e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-         |l2 AS (
-         |  SELECT id, lbl FROM (
-         |    SELECT id, lbl,
-         |           row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl)
-         |             AS rn
-         |    FROM c2) t WHERE rn = 1)
+         |${SpatialLpa.cte}
          |SELECT id, lbl AS community FROM l2 ORDER BY id""".stripMargin) { (s, d) =>
-      val e0 = SpatialEdges.frame(s, d)
-      // persisted HASH-CLUSTERED BY dst (the PageRank edge-layout pattern,
-      // guide §2.4): every propagation round joins ed on dst against the
-      // O(V) label relation — too big to broadcast at scale — so the edge
-      // side would otherwise re-exchange once per round; one layout paid
-      // once serves both rounds
-      val ed = e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e0.select(col("v").as("src"), col("u").as("dst")))
-        .repartition(col("dst"))
-        .persist() // both propagation rounds scan it
-      val l0 = ed.select(col("src").as("id"), col("src").as("lbl")).distinct()
-      def round(labels: org.apache.spark.sql.DataFrame) = {
-        val cnt = ed.join(labels.withColumnRenamed("id", "dst"), "dst")
-          .groupBy(col("src").as("id"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy("id").orderBy(col("c").desc, col("lbl"))
-        cnt.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-          .select("id", "lbl")
-          .localCheckpoint() // round plans must not nest
-      }
-      round(round(l0))
+      SpatialLpa.labels(SpatialLpa.edges(SpatialEdges.frame(s, d)))
         .select(col("id"), col("lbl").as("community"))
         .orderBy("id")
     },
@@ -702,25 +664,7 @@ object AdvancedQueries {
     // one broadcast 1-row total on top of LPA's own exchanges.
     QueryDef("q270_modularity",
       s"""WITH ${SpatialEdges.cte},
-         |ed AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
-         |      UNION ALL SELECT v, u FROM e0),
-         |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM ed),
-         |c1 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-         |       FROM ed e JOIN l0 l ON l.id = e.dst GROUP BY 1, 2),
-         |l1 AS MATERIALIZED (
-         |  SELECT id, lbl FROM (
-         |    SELECT id, lbl,
-         |           row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl)
-         |             AS rn
-         |    FROM c1) t WHERE rn = 1),
-         |c2 AS (SELECT e.src AS id, l.lbl, count(*) AS c
-         |       FROM ed e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-         |l2 AS MATERIALIZED (
-         |  SELECT id, lbl FROM (
-         |    SELECT id, lbl,
-         |           row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl)
-         |             AS rn
-         |    FROM c2) t WHERE rn = 1),
+         |${SpatialLpa.cte},
          |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0),
          |dg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
          |       FROM ed GROUP BY src),
@@ -747,23 +691,8 @@ object AdvancedQueries {
          |      FROM parts p, q) t
          |WHERE rn <= 10 ORDER BY size DESC, community""".stripMargin) { (s, d) =>
       val e0 = SpatialEdges.frame(s, d).persist() // LPA rounds + m + e_in
-      // dst-clustered like q238's ed (see there): both LPA rounds join on
-      // dst against the O(V) label relation
-      val ed = e0.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e0.select(col("v").as("src"), col("u").as("dst")))
-        .repartition(col("dst"))
-        .persist() // both propagation rounds + the degree census
-      val l0 = ed.select(col("src").as("id"), col("src").as("lbl")).distinct()
-      def lpaRound(labels: org.apache.spark.sql.DataFrame) = {
-        val cnt = ed.join(labels.withColumnRenamed("id", "dst"), "dst")
-          .groupBy(col("src").as("id"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy("id").orderBy(col("c").desc, col("lbl"))
-        cnt.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-          .select("id", "lbl")
-          .localCheckpoint() // round plans must not nest
-      }
-      val l2 = lpaRound(lpaRound(l0)).persist() // d_sum census + e_in join
+      val ed = SpatialLpa.edges(e0) // also feeds the degree census
+      val l2 = SpatialLpa.labels(ed).persist() // d_sum census + e_in join
       val m = e0.agg(count(lit(1)).as("m"))
       val dg = ed.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       val cm = l2.join(dg, "id")
@@ -4254,6 +4183,59 @@ private object SpatialEdges {
         && (col("ax") - col("bx")) * (col("ax") - col("bx"))
            + (col("ay") - col("by")) * (col("ay") - col("by")) <= r * r)
       .select("u", "v")
+  }
+}
+
+/** q238/q270's deterministic 2-round label propagation over the spatial
+  * graph: every vertex starts as its own label, and each round takes the
+  * most frequent neighbour label (count DESC, label ASC).
+  */
+private object SpatialLpa {
+
+  /** Oracle CTEs `ed` (e0 in both orientations), `l0` and the per-round
+    * `c<r>`/`l<r>`; `l2` holds the final labels. Follows `SpatialEdges.cte`.
+    */
+  val cte: String = {
+    def round(r: Int) =
+      s"""c$r AS (SELECT e.src AS id, l.lbl, count(*) AS c
+         |       FROM ed e JOIN l${r - 1} l ON l.id = e.dst GROUP BY 1, 2),
+         |l$r AS MATERIALIZED (
+         |  SELECT id, lbl FROM (
+         |    SELECT id, lbl,
+         |           row_number() OVER (PARTITION BY id ORDER BY c DESC, lbl)
+         |             AS rn
+         |    FROM c$r) t WHERE rn = 1)""".stripMargin
+    s"""ed AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
+       |      UNION ALL SELECT v, u FROM e0),
+       |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM ed),
+       |${round(1)},
+       |${round(2)}""".stripMargin
+  }
+
+  /** `ed` as (src, dst), persisted HASH-CLUSTERED BY dst (the PageRank
+    * edge-layout pattern, guide §2.4): every propagation round joins ed on
+    * dst against the O(V) label relation — too big to broadcast at scale —
+    * so the edge side would otherwise re-exchange once per round; one
+    * layout paid once serves both rounds.
+    */
+  def edges(e0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    e0.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(e0.select(col("v").as("src"), col("u").as("dst")))
+      .repartition(col("dst"))
+      .persist() // both propagation rounds scan it
+
+  /** (id, lbl) after two rounds over [[edges]]. */
+  def labels(ed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    def round(labels: org.apache.spark.sql.DataFrame) = {
+      val cnt = ed.join(labels.withColumnRenamed("id", "dst"), "dst")
+        .groupBy(col("src").as("id"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+      val w = Window.partitionBy("id").orderBy(col("c").desc, col("lbl"))
+      cnt.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+        .select("id", "lbl")
+        .localCheckpoint() // round plans must not nest
+    }
+    round(round(ed.select(col("src").as("id"), col("src").as("lbl")).distinct()))
   }
 }
 

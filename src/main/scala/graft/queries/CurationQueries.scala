@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.{CountMin, Hashes, MisraGries}
 import graft.operators.{DupSpans, Hilbert, MinHash, Redact, SimHash, UrlCanon, ZOrder}
 
@@ -707,15 +707,9 @@ object CurationQueries {
         |FROM (SELECT token, cnt FROM ex ORDER BY cnt DESC, token LIMIT 5), t
         |ORDER BY cnt DESC, token""".stripMargin) { (s, d) =>
       val (depth, width) = (4, 512)
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_cms_stream_q_").toFile
       // result reads only the memory sink + source parquet, so the landing
       // dir deletes at query exit (playbook #41; no localCheckpoint needed)
-      try {
+      Scratch.run(s, "graft_cms_stream_q_") { root =>
         val tok = Tables.documents(s, d)
           .select(explode(split(col("text"), " ", -1)).as("token"))
           .persist() // feeds the landing write, the exact counts, the total,
@@ -746,7 +740,7 @@ object CurationQueries {
             ((est - col("cnt")) * width <= lit(3L) * col("n")).as("upper_ok"),
             (col("sk") === col("bsk")).as("stream_eq_batch"))
           .orderBy(col("cnt").desc, col("token"))
-      } finally rmrf(root)
+      }
     },
 
     // Streaming Misra-Gries — q107's heavy-hitters summary maintained by a
@@ -770,15 +764,9 @@ object CurationQueries {
         |FROM ex, t WHERE cnt * 50 > n
         |ORDER BY cnt DESC, token""".stripMargin) { (s, d) =>
       val k = 49
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mg_stream_q_").toFile
       // result reads only the memory sink + source parquet, so the landing
       // dir deletes at query exit (playbook #41; no localCheckpoint needed)
-      try {
+      Scratch.run(s, "graft_mg_stream_q_") { root =>
         val tok = Tables.documents(s, d)
           .select(explode(split(col("text"), " ", -1)).as("token"))
           .persist() // feeds the landing write, the exact counts, and the total
@@ -804,7 +792,7 @@ object CurationQueries {
             array_contains(col("cands"), col("token")).as("in_sketch"),
             (size(col("cands")) <= k).as("size_ok"))
           .orderBy(col("cnt").desc, col("token"))
-      } finally rmrf(root)
+      }
     },
 
     // Streaming HLL distinct counts — the third sketch family through the
@@ -821,15 +809,9 @@ object CurationQueries {
         |SELECT source, CAST(count(DISTINCT token) AS BIGINT) AS exact_tokens,
         |       TRUE AS within_bound, TRUE AS stream_eq_batch
         |FROM tok GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_hll_stream_q_").toFile
       // result reads only the memory sink + source parquet, so the landing
       // dir deletes at query exit (playbook #41; no localCheckpoint needed)
-      try {
+      Scratch.run(s, "graft_hll_stream_q_") { root =>
         val tok = Tables.documents(s, d)
           .select(col("source"), explode(split(col("text"), " ", -1)).as("token"))
           .persist() // feeds the landing write, the exact counts, the batch twin
@@ -857,7 +839,7 @@ object CurationQueries {
               / col("exact_tokens") <= lit(0.08)).as("within_bound"),
             (col("approx_tokens") === col("batch_approx")).as("stream_eq_batch"))
           .orderBy("source")
-      } finally rmrf(root)
+      }
     },
 
     // Tokenizer-coverage / OOV-rate report: elect a capped top-256
@@ -2433,12 +2415,6 @@ object CurationQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_pack_q_").toFile
       val W = PackSql.W
       val t = Tables.documents(s, d)
         .select(col("doc_id"),
@@ -2448,11 +2424,7 @@ object CurationQueries {
         .persist() // wave split boundary + both landing writes
       val mid = t.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
         .head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_pack_q_", StatefulStreams.RocksDb) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType().add("doc_id", LongType)
@@ -2483,14 +2455,6 @@ object CurationQueries {
           .orderBy("shard", "doc_id")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     }
   )

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.Hashes
 import graft.operators.{MinHash, SimHash}
 
@@ -498,13 +498,7 @@ object DedupQueries {
     QueryDef("q476_stream_survivors", QualitySurvivorsSql.sql) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_surv_q_").toFile
-      try {
+      Scratch.run(s, "graft_surv_q_") { root =>
         val surv = qualitySurvivors(Tables.documents(s, d))
           .persist() // static corpus statistic: probed by every batch
         surv.count(): Unit
@@ -539,7 +533,7 @@ object DedupQueries {
           .localCheckpoint()
         surv.unpersist()
         res
-      } finally rmrf(root)
+      }
     },
 
     // q37 with the web-scale skew guard: band buckets holding more than
@@ -1139,13 +1133,7 @@ object DedupQueries {
     QueryDef("q457_stream_substr_gate", SubstrGateSql.sql) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sgate_q_").toFile
-      try {
+      Scratch.run(s, "graft_sgate_q_") { root =>
         val docs = Tables.documents(s, d)
         val corpus = docs.where(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("text"))
@@ -1192,7 +1180,7 @@ object DedupQueries {
           .orderBy("doc_id")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally rmrf(root)
+      }
     }
   )
 

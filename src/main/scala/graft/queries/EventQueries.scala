@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Event-time analytics over the `events` fixture (SURVEY §2.12): tumbling and
   * sliding windows, gap-based sessionization, and JSON extraction. These are
@@ -308,33 +308,28 @@ object EventQueries {
         |FROM j GROUP BY user_id
         |ORDER BY n_pairs DESC, user_id LIMIT 20""".stripMargin) { (s, d) =>
       import graft.streaming.EventStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
+      // the result reads the memory sink + batch tables, so the landing dir
+      // deletes at query exit
+      val memName = Scratch.run(s, "graft_ssjoin_q_") { root =>
+        val ev = Tables.events(s, d)
+          .where(col("event_type").isin("view", "purchase"))
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+        ev.repartition(4).write.parquet(s"$root/landing")
+        val schema = new org.apache.spark.sql.types.StructType()
+          .add("event_id", org.apache.spark.sql.types.LongType)
+          .add("ts", org.apache.spark.sql.types.TimestampType)
+          .add("user_id", org.apache.spark.sql.types.LongType)
+          .add("event_type", org.apache.spark.sql.types.StringType)
+        def src() = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
+        val joined = EventStreams.viewPurchaseJoin(src(), src(), "60 days")
+        val q = joined.writeStream.outputMode("append").format("memory")
+          .queryName(root.getName) // unique per invocation
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        root.getName
       }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ssjoin_q_").toFile
-      val ev = Tables.events(s, d)
-        .where(col("event_type").isin("view", "purchase"))
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      ev.repartition(4).write.parquet(s"$root/landing")
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("event_id", org.apache.spark.sql.types.LongType)
-        .add("ts", org.apache.spark.sql.types.TimestampType)
-        .add("user_id", org.apache.spark.sql.types.LongType)
-        .add("event_type", org.apache.spark.sql.types.StringType)
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-      val joined = EventStreams.viewPurchaseJoin(src(), src(), "60 days")
-      val memName = root.getName // unique per invocation
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(memName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // landing consumed; the result reads the memory sink + batch tables —
-      // delete now instead of deferring to a per-invocation shutdown hook
-      rmrf(root)
       def perUser(j: org.apache.spark.sql.DataFrame) =
         j.groupBy("user_id").agg(count(lit(1)).as("n_pairs"),
           sum(col("p_us") - col("v_us")).as("lat_us"))
@@ -589,35 +584,19 @@ object EventQueries {
       import graft.streaming.StatefulStreams
       val gapMs = 1800000L
       val cutMs = gapMs + 600000L
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_timer_q_").toFile
       val e = Tables.events(s, d).where(col("user_id") < 20)
         .select(col("user_id"), col("ts"))
         .persist() // wave split + the cutoff bound
       val mid = e.agg(
         expr("(min(unix_millis(ts)) + max(unix_millis(ts))) div 2"))
         .head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
       // State-partition sizing (guide §2.2): the query's own predicate
-      // bounds the key domain to 20 users, so any state partition beyond 20
-      // is provably empty yet still pays a RocksDB instance open + commit +
-      // snapshot per micro-batch (the dominant wall cost here — shuffle
-      // telemetry shows only ~38 KB moved). Cap the stream's shuffle
-      // partitions at that app bound; scale-correct because a cluster
-      // session with 600 shuffle partitions still only ever has 20 keys in
-      // this stream. Hash partitioning per key is unchanged → identical
-      // results; restored in the finally.
-      val prevShuf = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(20, prevShuf.toInt).toString)
-      try {
+      // bounds the key domain to 20 users, and empty state partitions'
+      // RocksDB open + commit + snapshot per micro-batch are the dominant
+      // wall cost here (shuffle telemetry shows only ~38 KB moved) — so
+      // the stream runs at StatefulStreams.statePartitionCap.
+      Scratch.run(s, "graft_timer_q_", StatefulStreams.RocksDb,
+          StatefulStreams.statePartitionCap(s, 20)) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType()
@@ -658,15 +637,6 @@ object EventQueries {
           // session-census sized; materialize so the tmpdir deletes now
           // instead of accumulating per bench rep via a shutdown hook
           .localCheckpoint()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -757,27 +727,13 @@ object EventQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_tws_map_q_").toFile
       val e = Tables.events(s, d).where(col("user_id") < 20)
         .select(col("user_id"), col("event_type"))
         .persist() // feeds the landing write and the batch-parity census
-      e.repartition(4).write.parquet(s"$root/landing")
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      // State-partition cap at the app-bounded key domain (20 users by the
-      // query's own predicate) — empty state partitions still pay a RocksDB
-      // open+commit+snapshot per micro-batch; q254 carries the full note.
-      val prevShuf = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(20, prevShuf.toInt).toString)
-      try {
+      // state partitions capped at the 20-user key domain (q254's note)
+      Scratch.run(s, "graft_tws_map_q_", StatefulStreams.RocksDb,
+          StatefulStreams.statePartitionCap(s, 20)) { root =>
+        e.repartition(4).write.parquet(s"$root/landing")
         val stream = s.readStream
           .schema(new StructType()
             .add("user_id", LongType).add("event_type", StringType))
@@ -804,15 +760,6 @@ object EventQueries {
           .orderBy("user_id", "event_type")
           // census-sized; materialize so the tmpdir deletes now (q383 note)
           .localCheckpoint()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -1024,27 +971,13 @@ object EventQueries {
       import org.apache.spark.sql.types.LongType
       import org.apache.spark.sql.types.StructType
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ttl_q_").toFile
       val e = Tables.events(s, d).where(col("user_id") < 20)
         .select(col("user_id"), expr("unix_micros(ts)").as("us"))
         .persist() // wave split boundary + both landing writes
       val mid = e.agg(expr("(min(us) + max(us)) div 2")).head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      // State-partition cap at the app-bounded key domain (20 users by the
-      // query's own predicate) — empty state partitions still pay a RocksDB
-      // open+commit+snapshot per micro-batch; q254 carries the full note.
-      val prevShuf = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(20, prevShuf.toInt).toString)
-      try {
+      // state partitions capped at the 20-user key domain (q254's note)
+      Scratch.run(s, "graft_ttl_q_", StatefulStreams.RocksDb,
+          StatefulStreams.statePartitionCap(s, 20)) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType()
@@ -1080,15 +1013,6 @@ object EventQueries {
           .orderBy("user_id", "keep_cnt")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -1116,47 +1040,41 @@ object EventQueries {
         |FROM w, wm WHERE w.start_ms + 86400000 <= wm.wm_ms
         |ORDER BY window_start_ms""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_late_q_").toFile
       val e = Tables.events(s, d).select(col("ts"),
           expr("unix_micros(ts)").as("us"))
         .persist() // wave split boundary + both landing writes
       val mid = e.agg(expr("(min(us) + max(us)) div 2")).head().getLong(0)
-      def drain(): Unit = {
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType))))
-          .parquet(s"$root/landing")
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 day")).count()
-          .select(col("window.start").as("start"), col("count").as("n"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      Scratch.run(s, "graft_late_q_") { root =>
+        def drain(): Unit = {
+          val q = s.readStream
+            .schema(org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("ts",
+                org.apache.spark.sql.types.TimestampType))))
+            .parquet(s"$root/landing")
+            .withWatermark("ts", "1 hour")
+            .groupBy(window(col("ts"), "1 day")).count()
+            .select(col("window.start").as("start"), col("count").as("n"))
+            .writeStream.outputMode("append").format("parquet")
+            .option("path", s"$root/out")
+            .option("checkpointLocation", s"$root/ckpt")
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        }
+        // REVERSED waves: the new half first (watermark jumps), old half late
+        e.where(col("us") > mid).select("ts").coalesce(1)
+          .write.parquet(s"$root/landing")
+        drain()
+        e.where(col("us") <= mid).select("ts").coalesce(1)
+          .write.mode("append").parquet(s"$root/landing")
+        drain()
+        // the result READS $root/out — materialize (day-census sized)
+        // before the delete
+        s.read.parquet(s"$root/out")
+          .select(expr("unix_millis(start)").as("window_start_ms"), col("n"))
+          .orderBy("window_start_ms")
+          .localCheckpoint()
       }
-      // REVERSED waves: the new half first (watermark jumps), old half late
-      e.where(col("us") > mid).select("ts").coalesce(1)
-        .write.parquet(s"$root/landing")
-      drain()
-      e.where(col("us") <= mid).select("ts").coalesce(1)
-        .write.mode("append").parquet(s"$root/landing")
-      drain()
-      // the result READS $root/out — materialize (day-census sized), then
-      // delete the tmpdir now instead of via an accumulating shutdown hook
-      val out = s.read.parquet(s"$root/out")
-        .select(expr("unix_millis(start)").as("window_start_ms"), col("n"))
-        .orderBy("window_start_ms")
-        .localCheckpoint()
-      rmrf(root)
-      out
     },
 
     // Time-based split — the ML-data split temporal problems REQUIRE
@@ -1283,29 +1201,15 @@ object EventQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_tws_q_").toFile
       val e = Tables.events(s, d).where(col("user_id") < 20)
         .select(col("user_id"),
           round(greatest(col("value"), lit(0)) * 100, 0).cast("long")
             .as("cents"))
         .persist() // feeds the landing write and the batch-parity aggregate
-      e.repartition(4).write.parquet(s"$root/landing")
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      // State-partition cap at the app-bounded key domain (20 users by the
-      // query's own predicate) — empty state partitions still pay a RocksDB
-      // open+commit+snapshot per micro-batch; q254 carries the full note.
-      val prevShuf = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(20, prevShuf.toInt).toString)
-      try {
+      // state partitions capped at the 20-user key domain (q254's note)
+      Scratch.run(s, "graft_tws_q_", StatefulStreams.RocksDb,
+          StatefulStreams.statePartitionCap(s, 20)) { root =>
+        e.repartition(4).write.parquet(s"$root/landing")
         val stream = s.readStream
           .schema(new StructType()
             .add("user_id", LongType).add("cents", LongType))
@@ -1336,15 +1240,6 @@ object EventQueries {
           .orderBy("user_id")
           // census-sized; materialize so the tmpdir deletes now (q383 note)
           .localCheckpoint()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuf)
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -1447,12 +1342,6 @@ object EventQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sewma_q_").toFile
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 86400000000").as("day"))
@@ -1461,11 +1350,7 @@ object EventQueries {
         .persist() // wave split scans it twice
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_sewma_q_", StatefulStreams.RocksDb) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType().add("event_type", StringType)
@@ -1499,14 +1384,6 @@ object EventQueries {
           .orderBy("event_type", "day")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -3567,22 +3444,12 @@ object EventQueries {
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.functions.{Hashes, KmvSketch}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_kmv_q_").toFile
       val e = Tables.events(s, d)
         .select(col("event_type"),
           Hashes.mulHash(col("user_id"), 71).as("hv"))
         .persist() // feeds the landing write and the batch-parity sketch
-      e.repartition(4).write.parquet(s"$root/landing")
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_kmv_q_", StatefulStreams.RocksDb) { root =>
+        e.repartition(4).write.parquet(s"$root/landing")
         val stream = s.readStream
           .schema(new StructType()
             .add("event_type", StringType).add("hv", LongType))
@@ -3626,14 +3493,6 @@ object EventQueries {
           // tmpdir can be deleted NOW instead of via a shutdown hook that
           // accumulates per invocation and parks the data until JVM exit
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -3679,23 +3538,13 @@ object EventQueries {
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.functions.{Hashes, QuantileSketch}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_qsk_q_").toFile
       val e = Tables.events(s, d)
         .select(col("event_type"),
           Hashes.mulHash(col("event_id"), 101).as("h"),
           round(col("value") * 100, 0).cast("long").as("x"))
         .persist() // feeds the landing write and the batch-parity sketch
-      e.repartition(4).write.parquet(s"$root/landing")
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_qsk_q_", StatefulStreams.RocksDb) { root =>
+        e.repartition(4).write.parquet(s"$root/landing")
         val stream = s.readStream
           .schema(new StructType().add("event_type", StringType)
             .add("h", LongType).add("x", LongType))
@@ -3746,14 +3595,6 @@ object EventQueries {
           // ≤ |event_type| rows — materialize so the tmpdir deletes now
           // (see q383's note)
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -3932,12 +3773,6 @@ object EventQueries {
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import org.apache.spark.sql.expressions.Window
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_scusum_q_").toFile
       val w = Window.partitionBy("event_type").orderBy("day")
       val r0 = Tables.events(s, d)
         .groupBy(col("event_type"),
@@ -3951,11 +3786,7 @@ object EventQueries {
         .persist() // wave split scans it twice
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_scusum_q_", StatefulStreams.RocksDb) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType().add("event_type", StringType)
@@ -3985,14 +3816,6 @@ object EventQueries {
           // the result READS $root/out lazily — materialize (day-census
           // sized) before the finally deletes the tmpdir
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     },
 
@@ -5426,23 +5249,13 @@ object EventQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_thr_q_").toFile
       val ud = Tables.events(s, d).where(col("user_id") < 30)
         .select(col("user_id"),
           expr("unix_micros(ts) div 86400000000").as("day"))
         .distinct()
         .persist() // wave split boundary + both landing writes
       val mid = ud.agg(expr("(min(day) + max(day)) div 2")).head().getLong(0)
-      val prev =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
+      Scratch.run(s, "graft_thr_q_", StatefulStreams.RocksDb) { root =>
         def drain(): Unit = {
           val stream = s.readStream
             .schema(new StructType()
@@ -5473,14 +5286,6 @@ object EventQueries {
           .orderBy("user_id", "day")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        rmrf(root)
       }
     }
   )

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.{BloomPrefilter, BucketCatalog, SkewJoin, Split}
 
 /** Scale-technique queries: TF-IDF over exploded tokens, bucketed
@@ -482,13 +482,7 @@ object ScaleQueries {
       import graft.operators.PrefixSum
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_dd_q_").toFile
-      try {
+      Scratch.run(s, "graft_dd_q_") { root =>
         val ev = Tables.events(s, d)
         // static domain (the ingest manifest — q483's posture): bucket
         // width and the wave boundary come from the corpus's stated
@@ -564,7 +558,7 @@ object ScaleQueries {
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
         res
-      } finally rmrf(root)
+      }
     },
 
     // Exact equi-depth (equal-frequency) histogram — q06/q90 bin by WIDTH;
@@ -842,73 +836,67 @@ object ScaleQueries {
         |       TRUE AS multi_batch
         |FROM merged ORDER BY o_orderkey""".stripMargin) { (s, d) =>
       import graft.operators.Upsert
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
+      Scratch.run(s, "graft_cdc_stream_q_") { root =>
+        val base = Tables.orders(s, d).select(
+          col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
+          round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+        def slice(m: Int) = base.where(pmod(col("k"), lit(10)) === m)
+        val ch = slice(3)
+            .select(col("k"), col("st"), (col("cents") + 500).as("cents"),
+              lit("U").as("op"), lit(1).as("v"))
+          .unionByName(slice(3)
+            .select(col("k"), col("st"), (col("cents") + 777).as("cents"),
+              lit("U").as("op"), lit(2).as("v")))
+          .unionByName(slice(7)
+            .select(col("k"), col("st"), col("cents"),
+              lit("D").as("op"), lit(1).as("v")))
+          .unionByName(slice(1)
+            .select((-col("k")).as("k"), lit("N").as("st"),
+              col("k").cast("long").as("cents"), lit("U").as("op"),
+              lit(1).as("v")))
+        ch.repartition(3).write.parquet(s"$root/landing")
+        base.withColumn("v", lit(0)).write.parquet(s"$root/snap0")
+        var curPath = s"$root/snap0"
+        var batches = 0
+        val schema = new org.apache.spark.sql.types.StructType()
+          .add("k", org.apache.spark.sql.types.LongType)
+          .add("st", org.apache.spark.sql.types.StringType)
+          .add("cents", org.apache.spark.sql.types.LongType)
+          .add("op", org.apache.spark.sql.types.StringType)
+          .add("v", org.apache.spark.sql.types.IntegerType)
+        val q = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
+          .writeStream
+          .option("checkpointLocation", s"$root/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+            val delta = Upsert.latestPerKey(batch, Seq("k"), "v")
+              .withColumnsRenamed(Map("st" -> "nst", "cents" -> "ncents", "v" -> "nv"))
+            val cur = s.read.parquet(curPath)
+            val takeChange = col("nv").isNotNull &&
+              (col("v").isNull || col("nv") > col("v"))
+            val next = cur.join(delta, Seq("k"), "full_outer")
+              .where(!(takeChange && col("op") === "D"))
+              .select(col("k"),
+                when(takeChange, col("nst")).otherwise(col("st")).as("st"),
+                when(takeChange, col("ncents")).otherwise(col("cents")).as("cents"),
+                when(takeChange, col("nv")).otherwise(col("v")).as("v"))
+            val out = s"$root/snap${id + 1}"
+            next.write.parquet(out)
+            curPath = out
+            batches += 1
+          }
+          .start()
+        q.awaitTermination()
+        s.read.parquet(curPath)
+          .select(col("k").as("o_orderkey"), col("st").as("o_orderstatus"),
+            col("cents"), lit(batches >= 2).as("multi_batch"))
+          .orderBy("o_orderkey")
+          // snapshot-sized result whose plan reads $root/snapN — materialize
+          // so the tmpdir deletes at query exit (playbook #41) instead of
+          // leaking a shutdown hook + orphaned dir per invocation
+          .localCheckpoint()
       }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_cdc_stream_q_").toFile
-      try {
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      def slice(m: Int) = base.where(pmod(col("k"), lit(10)) === m)
-      val ch = slice(3)
-          .select(col("k"), col("st"), (col("cents") + 500).as("cents"),
-            lit("U").as("op"), lit(1).as("v"))
-        .unionByName(slice(3)
-          .select(col("k"), col("st"), (col("cents") + 777).as("cents"),
-            lit("U").as("op"), lit(2).as("v")))
-        .unionByName(slice(7)
-          .select(col("k"), col("st"), col("cents"),
-            lit("D").as("op"), lit(1).as("v")))
-        .unionByName(slice(1)
-          .select((-col("k")).as("k"), lit("N").as("st"),
-            col("k").cast("long").as("cents"), lit("U").as("op"),
-            lit(1).as("v")))
-      ch.repartition(3).write.parquet(s"$root/landing")
-      base.withColumn("v", lit(0)).write.parquet(s"$root/snap0")
-      var curPath = s"$root/snap0"
-      var batches = 0
-      val schema = new org.apache.spark.sql.types.StructType()
-        .add("k", org.apache.spark.sql.types.LongType)
-        .add("st", org.apache.spark.sql.types.StringType)
-        .add("cents", org.apache.spark.sql.types.LongType)
-        .add("op", org.apache.spark.sql.types.StringType)
-        .add("v", org.apache.spark.sql.types.IntegerType)
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val delta = Upsert.latestPerKey(batch, Seq("k"), "v")
-            .withColumnsRenamed(Map("st" -> "nst", "cents" -> "ncents", "v" -> "nv"))
-          val cur = s.read.parquet(curPath)
-          val takeChange = col("nv").isNotNull &&
-            (col("v").isNull || col("nv") > col("v"))
-          val next = cur.join(delta, Seq("k"), "full_outer")
-            .where(!(takeChange && col("op") === "D"))
-            .select(col("k"),
-              when(takeChange, col("nst")).otherwise(col("st")).as("st"),
-              when(takeChange, col("ncents")).otherwise(col("cents")).as("cents"),
-              when(takeChange, col("nv")).otherwise(col("v")).as("v"))
-          val out = s"$root/snap${id + 1}"
-          next.write.parquet(out)
-          curPath = out
-          batches += 1
-        }
-        .start()
-      q.awaitTermination()
-      s.read.parquet(curPath)
-        .select(col("k").as("o_orderkey"), col("st").as("o_orderstatus"),
-          col("cents"), lit(batches >= 2).as("multi_batch"))
-        .orderBy("o_orderkey")
-        // snapshot-sized result whose plan reads $root/snapN — materialize
-        // so the tmpdir deletes at query exit (playbook #41) instead of
-        // leaking a shutdown hook + orphaned dir per invocation
-        .localCheckpoint()
-      } finally rmrf(root)
     },
 
     // ECDF / quantile-normalization transform: every TEST value maps to the

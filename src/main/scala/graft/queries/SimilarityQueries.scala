@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.operators.{NswGraph, RandomProjection, Similarity}
 
 /** Similarity search over `embeddings` (north-star similarity family):
@@ -51,10 +51,6 @@ object SimilarityQueries {
       ScalableNswSql.Rounds, NswSql.Deg))
     val root = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_nsw_base_$key")
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
     if (!new java.io.File(root, "_done").exists) {
       val emb = Tables.embeddings(s, d)
       val baseEmb = emb.where(!(col("vec_id") % 8 === 0))
@@ -69,7 +65,7 @@ object SimilarityQueries {
       baseGraph.write.mode("overwrite").parquet(s"$tmp/edges")
       baseSigs.write.mode("overwrite").parquet(s"$tmp/sigs")
       new java.io.FileOutputStream(new java.io.File(tmp, "_done")).close()
-      if (!tmp.renameTo(root)) rmrf(tmp) // lost a race: reuse the winner's
+      if (!tmp.renameTo(root)) Scratch.rmrf(tmp) // lost a race: reuse the winner's
       require(new java.io.File(root, "_done").exists,
         s"nsw base fixture staging failed at $root")
     }
@@ -383,40 +379,34 @@ object SimilarityQueries {
         |FROM embeddings""".stripMargin) { (s, d) =>
       import graft.operators.Pq
       import graft.streaming.EmbeddingStreams
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
       // unique root per invocation (a fixed shared path raced under
       // concurrent runs — one rmrf'd the other's landing/checkpoint
       // mid-stream)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_stream_pq_").toFile
-      try {
-      val landing = s"$root/landing"
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      emb.repartition(5).write.parquet(landing)
-      // codebooks train on a 2k-vector sample — the production posture
-      // (codebooks are statistics, not data); the parity contract is
-      // codebook-independent, so the sample only changes WHICH codes both
-      // paths agree on, never whether they agree
-      val cb = Pq.fit(Tables.embeddings(s, d).where(col("vec_id") < 2000),
-        "vec_id", "embedding", Dim, m = PqAnnSql.M, ksub = PqAnnSql.Ksub,
-        iters = 1)
-      EmbeddingStreams.runEncode(s, landing, cb,
-        s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(2))
-      val streamCodes = s.read.parquet(s"$root/codes")
-      val batchCodes = EmbeddingStreams.encoded(emb, cb)
-        .withColumnRenamed("code", "bcode")
-      streamCodes.join(batchCodes, Seq("vec_id"), "full_outer")
-        .agg(count(col("bcode")).as("n_vecs"),
-          count(col("code")).as("n_stream_rows"),
-          min(when(col("code") === col("bcode"), true).otherwise(false))
-            .as("all_codes_match"))
-        // 1-row result whose plan reads $root/codes — materialize so the
-        // tmpdir deletes at query exit (playbook #41)
-        .localCheckpoint()
-      } finally rmrf(root)
+      Scratch.run(s, "graft_stream_pq_") { root =>
+        val landing = s"$root/landing"
+        val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+        emb.repartition(5).write.parquet(landing)
+        // codebooks train on a 2k-vector sample — the production posture
+        // (codebooks are statistics, not data); the parity contract is
+        // codebook-independent, so the sample only changes WHICH codes both
+        // paths agree on, never whether they agree
+        val cb = Pq.fit(Tables.embeddings(s, d).where(col("vec_id") < 2000),
+          "vec_id", "embedding", Dim, m = PqAnnSql.M, ksub = PqAnnSql.Ksub,
+          iters = 1)
+        EmbeddingStreams.runEncode(s, landing, cb,
+          s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(2))
+        val streamCodes = s.read.parquet(s"$root/codes")
+        val batchCodes = EmbeddingStreams.encoded(emb, cb)
+          .withColumnRenamed("code", "bcode")
+        streamCodes.join(batchCodes, Seq("vec_id"), "full_outer")
+          .agg(count(col("bcode")).as("n_vecs"),
+            count(col("code")).as("n_stream_rows"),
+            min(when(col("code") === col("bcode"), true).otherwise(false))
+              .as("all_codes_match"))
+          // 1-row result whose plan reads $root/codes — materialize so the
+          // tmpdir deletes at query exit (playbook #41)
+          .localCheckpoint()
+      }
     },
 
     // Int8 scalar quantization (operators/ScalarQuant): per-dimension
@@ -1224,10 +1214,6 @@ object SimilarityQueries {
     QueryDef("q293_diskann_walk", ScalableNswSql.sql) { (s, d) =>
       import graft.functions.Tensors
       import graft.operators.{DiskAnn, NswGraph}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
       val emb = Tables.embeddings(s, d)
       val v = emb.select(col("vec_id"), col("embedding"),
         Tensors.norm(col("embedding")).as("nrm"))
@@ -1236,27 +1222,25 @@ object SimilarityQueries {
         SimilarityQueries.Dim, ScalableNswSql.Bands, ScalableNswSql.Rbits,
         ScalableNswSql.Seed, ScalableNswSql.Cap, ScalableNswSql.KInternal,
         ScalableNswSql.Rounds, NswSql.Deg)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_diskann_").toFile
-      try {
-      DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
-      val queries = emb.where(col("vec_id") < NswSql.Nq)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val entry = emb.agg(min("vec_id")).head().getLong(0)
-      val (found, io) = DiskAnn.search(s, root.toString, queries, entry,
-        NswSql.Hops, NswSql.Beam)
-      // IO sanity stated at query time: the whole search touched a bounded
-      // neighborhood, never the corpus (DiskAnnSpec pins the exact bounds)
-      require(io.vecRows <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
-        * (NswSql.Deg + 1),
-        s"disk walk read ${io.vecRows} vectors — neighborhood bound broken")
-      import s.implicits._
-      val fdf = found.toDF("qid", "vid")
-      // search collected its ids eagerly; the result plan reads only the
-      // source parquet, so the index dir deletes at query exit
-      nswFoundRecall(emb, v, nswQueries(v), fdf)
-      } finally rmrf(root)
+      Scratch.run(s, "graft_diskann_") { root =>
+        DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
+        val queries = emb.where(col("vec_id") < NswSql.Nq)
+          .select(col("vec_id"), col("embedding")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+        val entry = emb.agg(min("vec_id")).head().getLong(0)
+        val (found, io) = DiskAnn.search(s, root.toString, queries, entry,
+          NswSql.Hops, NswSql.Beam)
+        // IO sanity stated at query time: the whole search touched a bounded
+        // neighborhood, never the corpus (DiskAnnSpec pins the exact bounds)
+        require(io.vecRows <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
+          * (NswSql.Deg + 1),
+          s"disk walk read ${io.vecRows} vectors — neighborhood bound broken")
+        import s.implicits._
+        val fdf = found.toDF("qid", "vid")
+        // search collected its ids eagerly; the result plan reads only the
+        // source parquet, so the index dir deletes at query exit
+        nswFoundRecall(emb, v, nswQueries(v), fdf)
+      }
     },
 
     // HNSW LAYERED upsert — q290 maintains a single-layer graph; the
@@ -1648,10 +1632,6 @@ object SimilarityQueries {
     QueryDef("q301_diskann_serve", ScalableNswSql.sql) { (s, d) =>
       import graft.functions.Tensors
       import graft.operators.{DiskAnn, NswGraph}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
       val emb = Tables.embeddings(s, d)
       val v = emb.select(col("vec_id"), col("embedding"),
         Tensors.norm(col("embedding")).as("nrm"))
@@ -1660,20 +1640,18 @@ object SimilarityQueries {
         SimilarityQueries.Dim, ScalableNswSql.Bands, ScalableNswSql.Rbits,
         ScalableNswSql.Seed, ScalableNswSql.Cap, ScalableNswSql.KInternal,
         ScalableNswSql.Rounds, NswSql.Deg)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_diskserve_").toFile
-      try {
-      DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
-      val entry = emb.agg(min("vec_id")).head().getLong(0)
-      val (frontier, io) = DiskAnn.searchDistributed(s, root.toString,
-        nswQueries(v), entry, NswSql.Hops, NswSql.Beam)
-      require(io.vecRows <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
-        * (NswSql.Deg + 1),
-        s"distributed walk read ${io.vecRows} vectors — bound broken")
-      // the returned frontier is localCheckpoint'd per hop, so the result
-      // plan reads only source parquet — the index dir deletes at exit
-      nswFoundRecall(emb, v, nswQueries(v), frontier)
-      } finally rmrf(root)
+      Scratch.run(s, "graft_diskserve_") { root =>
+        DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
+        val entry = emb.agg(min("vec_id")).head().getLong(0)
+        val (frontier, io) = DiskAnn.searchDistributed(s, root.toString,
+          nswQueries(v), entry, NswSql.Hops, NswSql.Beam)
+        require(io.vecRows <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
+          * (NswSql.Deg + 1),
+          s"distributed walk read ${io.vecRows} vectors — bound broken")
+        // the returned frontier is localCheckpoint'd per hop, so the result
+        // plan reads only source parquet — the index dir deletes at exit
+        nswFoundRecall(emb, v, nswQueries(v), frontier)
+      }
     },
 
     // The serving-FLEET disk walk (r8 verdict missing #4, HANDOFF's own
@@ -1693,10 +1671,6 @@ object SimilarityQueries {
     QueryDef("q402_diskann_fleet", ScalableNswSql.sql) { (s, d) =>
       import graft.functions.Tensors
       import graft.operators.{DiskAnn, NswGraph}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
       val emb = Tables.embeddings(s, d)
       val v = emb.select(col("vec_id"), col("embedding"),
         Tensors.norm(col("embedding")).as("nrm"))
@@ -1705,22 +1679,20 @@ object SimilarityQueries {
         SimilarityQueries.Dim, ScalableNswSql.Bands, ScalableNswSql.Rbits,
         ScalableNswSql.Seed, ScalableNswSql.Cap, ScalableNswSql.KInternal,
         ScalableNswSql.Rounds, NswSql.Deg)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_diskfleet_").toFile
-      try {
-      DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
-      val entry = emb.agg(min("vec_id")).head().getLong(0)
-      val edgeAcc = s.sparkContext.longAccumulator("fleet_edge_rows")
-      val vecAcc = s.sparkContext.longAccumulator("fleet_vec_rows")
-      val frontier = DiskAnn.searchFleet(s, root.toString, nswQueries(v),
-        entry, NswSql.Hops, NswSql.Beam, slices = 8, edgeAcc, vecAcc)
-        .localCheckpoint() // materialize so the IO bound below is final
-      require(vecAcc.value <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
-        * (NswSql.Deg + 1),
-        s"fleet walk read ${vecAcc.value} vectors — neighborhood bound broken")
-      // frontier is checkpointed above — the index dir deletes at exit
-      nswFoundRecall(emb, v, nswQueries(v), frontier)
-      } finally rmrf(root)
+      Scratch.run(s, "graft_diskfleet_") { root =>
+        DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
+        val entry = emb.agg(min("vec_id")).head().getLong(0)
+        val edgeAcc = s.sparkContext.longAccumulator("fleet_edge_rows")
+        val vecAcc = s.sparkContext.longAccumulator("fleet_vec_rows")
+        val frontier = DiskAnn.searchFleet(s, root.toString, nswQueries(v),
+          entry, NswSql.Hops, NswSql.Beam, slices = 8, edgeAcc, vecAcc)
+          .localCheckpoint() // materialize so the IO bound below is final
+        require(vecAcc.value <= NswSql.Nq.toLong * NswSql.Beam * NswSql.Hops
+          * (NswSql.Deg + 1),
+          s"fleet walk read ${vecAcc.value} vectors — neighborhood bound broken")
+        // frontier is checkpointed above — the index dir deletes at exit
+        nswFoundRecall(emb, v, nswQueries(v), frontier)
+      }
     },
 
     // Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) —
@@ -2411,65 +2383,59 @@ object SimilarityQueries {
       val codes = Pq.encode(emb, "vec_id", "embedding", cb)
       // unique root per invocation (a fixed dataset-keyed path raced under
       // concurrent runs — one overwrite against another's reload)
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
+      Scratch.run(s, "graft_pq_index_") { root =>
+        val dir = root.getAbsolutePath
+        val cbRows = for {
+          s0 <- 0 until cb.m; w <- 0 until cb.ksub
+        } yield (s0, w, cb.words(s0)(w))
+        cbRows.toDF("s", "w", "vals")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
+        codes.write.mode("overwrite").parquet(s"$dir/codes")
+        val loaded = s.read.parquet(s"$dir/codebook").collect()
+          .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toIndexedSeq))
+          .toMap
+        val cb2 = Pq.Codebooks(Dim, PqAnnSql.M, PqAnnSql.Ksub,
+          IndexedSeq.tabulate(PqAnnSql.M)(s0 =>
+            IndexedSeq.tabulate(PqAnnSql.Ksub)(w => loaded((s0, w)))))
+        val codes2 = s.read.parquet(s"$dir/codes")
+        val queries = emb.where(col("vec_id") < PqAnnSql.Nq)
+          .select(col("vec_id"), col("embedding").cast("array<double>"))
+          .orderBy("vec_id").collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+        val qdf = queries.toDF("qid", "qv")
+        def top10(cbX: Pq.Codebooks, codesX: org.apache.spark.sql.DataFrame) =
+          Pq.rerank(
+            Pq.adcTopK(codesX, Pq.adcTables(s, queries, cbX),
+              k = PqAnnSql.Shortlist, excludeSelf = true),
+            emb, "vec_id", "embedding", qdf, 10)
+            .select(col("query_id"), col("neighbor_id"))
+        val r1 = top10(cb, codes)
+        val r2 = top10(cb2, codes2).withColumnsRenamed(
+          Map("query_id" -> "q2", "neighbor_id" -> "n2"))
+        val mismatches = r1.join(r2,
+            col("query_id") === col("q2") && col("neighbor_id") === col("n2"),
+            "full_outer")
+          .where(col("query_id").isNull || col("q2").isNull)
+          .agg(count(lit(1)).as("bad"))
+        val exact = exactDistTopK(emb, qdf, 10)
+          .persist() // anchor + recall join
+        val d10 = exact.where(col("rank") === 10)
+          .select(col("qid").as("query_id"), col("d2").as("exact_d10"))
+        val hits = r2.join(
+            exact.select(col("qid").as("q2"), col("vec_id").as("n2")),
+            Seq("q2", "n2"))
+          .groupBy(col("q2").as("query_id")).agg(count(lit(1)).as("n_hit"))
+        d10.join(hits, Seq("query_id"), "left")
+          .crossJoin(broadcast(mismatches))
+          .select(col("query_id"), col("exact_d10"),
+            (coalesce(col("n_hit"), lit(0L)) >= PqAnnSql.MinRecall10)
+              .as("recall_ok"),
+            (col("bad") === 0).as("reload_eq"))
+          .orderBy("query_id")
+          // Nq-row result whose plan reads $dir/codes — materialize so the
+          // index dir deletes at query exit (playbook #41)
+          .localCheckpoint()
       }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_pq_index_").toFile
-      try {
-      val dir = root.getAbsolutePath
-      val cbRows = for {
-        s0 <- 0 until cb.m; w <- 0 until cb.ksub
-      } yield (s0, w, cb.words(s0)(w))
-      cbRows.toDF("s", "w", "vals")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-      codes.write.mode("overwrite").parquet(s"$dir/codes")
-      val loaded = s.read.parquet(s"$dir/codebook").collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toIndexedSeq))
-        .toMap
-      val cb2 = Pq.Codebooks(Dim, PqAnnSql.M, PqAnnSql.Ksub,
-        IndexedSeq.tabulate(PqAnnSql.M)(s0 =>
-          IndexedSeq.tabulate(PqAnnSql.Ksub)(w => loaded((s0, w)))))
-      val codes2 = s.read.parquet(s"$dir/codes")
-      val queries = emb.where(col("vec_id") < PqAnnSql.Nq)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      val qdf = queries.toDF("qid", "qv")
-      def top10(cbX: Pq.Codebooks, codesX: org.apache.spark.sql.DataFrame) =
-        Pq.rerank(
-          Pq.adcTopK(codesX, Pq.adcTables(s, queries, cbX),
-            k = PqAnnSql.Shortlist, excludeSelf = true),
-          emb, "vec_id", "embedding", qdf, 10)
-          .select(col("query_id"), col("neighbor_id"))
-      val r1 = top10(cb, codes)
-      val r2 = top10(cb2, codes2).withColumnsRenamed(
-        Map("query_id" -> "q2", "neighbor_id" -> "n2"))
-      val mismatches = r1.join(r2,
-          col("query_id") === col("q2") && col("neighbor_id") === col("n2"),
-          "full_outer")
-        .where(col("query_id").isNull || col("q2").isNull)
-        .agg(count(lit(1)).as("bad"))
-      val exact = exactDistTopK(emb, qdf, 10)
-        .persist() // anchor + recall join
-      val d10 = exact.where(col("rank") === 10)
-        .select(col("qid").as("query_id"), col("d2").as("exact_d10"))
-      val hits = r2.join(
-          exact.select(col("qid").as("q2"), col("vec_id").as("n2")),
-          Seq("q2", "n2"))
-        .groupBy(col("q2").as("query_id")).agg(count(lit(1)).as("n_hit"))
-      d10.join(hits, Seq("query_id"), "left")
-        .crossJoin(broadcast(mismatches))
-        .select(col("query_id"), col("exact_d10"),
-          (coalesce(col("n_hit"), lit(0L)) >= PqAnnSql.MinRecall10)
-            .as("recall_ok"),
-          (col("bad") === 0).as("reload_eq"))
-        .orderBy("query_id")
-        // Nq-row result whose plan reads $dir/codes — materialize so the
-        // index dir deletes at query exit (playbook #41)
-        .localCheckpoint()
-      } finally rmrf(root)
     },
 
     // FILTERED vector search — the production ANN query is almost never
@@ -3250,13 +3216,7 @@ object SimilarityQueries {
       import graft.operators.{DupSpans, Similarity}
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ground_q_").toFile
-      try {
+      Scratch.run(s, "graft_ground_q_") { root =>
         val emb = Tables.embeddings(s, d)
         val t = Tables.documents(s, d)
           .select(col("doc_id"), split(col("text"), " ", -1).as("toks"))
@@ -3321,7 +3281,7 @@ object SimilarityQueries {
           .orderBy("query_id")
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
-      } finally rmrf(root)
+      }
     },
 
     // STREAMING twin of q461 — MMR diversification on the serving path:
@@ -3335,13 +3295,7 @@ object SimilarityQueries {
     QueryDef("q472_stream_mmr", MmrSql.sql) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mmr_q_").toFile
-      try {
+      Scratch.run(s, "graft_mmr_q_") { root =>
         val emb = Tables.embeddings(s, d).persist() // static corpus side
         def drain(): Unit = {
           val q = s.readStream
@@ -3375,7 +3329,7 @@ object SimilarityQueries {
           .localCheckpoint()
         emb.unpersist()
         res
-      } finally rmrf(root)
+      }
     }
   )
 }

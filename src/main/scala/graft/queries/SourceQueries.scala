@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{Scratch, Tables}
 
 /** Text-format source/sink coverage (SURVEY §2.1's scan/sink family beyond
   * parquet): CSV and JSON-lines round trips through explicit schemas. The
@@ -537,57 +537,51 @@ object SourceQueries {
         |       TRUE AS content_match
         |FROM documents""".stripMargin) { (s, d) =>
       import graft.sources.TfRecordIngest
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
+      Scratch.run(s, "graft_tfrec_stream_") { root =>
+        val (landing, out, ckpt) = (s"$root/landing", s"$root/out", s"$root/ckpt")
+        def asExamples(df: org.apache.spark.sql.DataFrame) =
+          df.select(col("doc_id").as("id"),
+            array(size(split(col("text"), " ", -1)).cast("long"),
+              length(col("text")).cast("long")).as("xs"),
+            col("text").as("txt"))
+        val base = asExamples(Tables.documents(s, d))
+        val inc = asExamples(Tables.documents(s, d).where(col("doc_id") < 10)
+          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
+        TfRecordIngest.writeExamples(base.repartition(3), landing)
+        TfRecordIngest.streamToParquet(s, landing, out, ckpt,
+          maxFilesPerTrigger = Some(1))
+        val n1 = s.read.parquet(out).count()
+        TfRecordIngest.streamToParquet(s, landing, out, ckpt) // nothing new
+        val n2 = s.read.parquet(out).count()
+        // late batch: encode to a scratch dir, then land the shards under new
+        // names (writeExamples clears ITS target — never the live landing)
+        TfRecordIngest.writeExamples(inc.repartition(1), s"$root/inc")
+        val fs = new org.apache.hadoop.fs.Path(landing)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/inc"))
+          .filter(_.getPath.getName.endsWith(".tfrecord"))
+          .foreach(f => fs.rename(f.getPath,
+            new org.apache.hadoop.fs.Path(landing, s"inc-${f.getPath.getName}")): Unit)
+        TfRecordIngest.streamToParquet(s, landing, out, ckpt)
+        val finalRows = s.read.parquet(out)
+          .select(col("id"), element_at(col("xs"), 1).as("x0"), col("txt"))
+        val expected = base.unionAll(inc)
+          .select(col("id"), element_at(col("xs"), 1).as("bx0"),
+            col("txt").as("btxt"))
+        val parity = finalRows.join(expected, Seq("id"), "full_outer")
+          .agg(count(lit(1)).as("n_incremental"),
+            min(when(col("x0") === col("bx0") && col("txt") === col("btxt"),
+              true).otherwise(false)).as("content_match"))
+        import s.implicits._
+        Seq((n1, n1 == n2)).toDF("n_first", "redrain_noop")
+          .crossJoin(broadcast(parity))
+          .select(col("n_first"), col("redrain_noop"),
+            col("n_incremental"), col("content_match"))
+          // 1-row result whose plan reads $root/out — materialize so the
+          // tmpdir deletes at query exit (playbook #41) instead of leaking a
+          // shutdown hook + orphaned dir per invocation
+          .localCheckpoint()
       }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_tfrec_stream_").toFile
-      try {
-      val (landing, out, ckpt) = (s"$root/landing", s"$root/out", s"$root/ckpt")
-      def asExamples(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id").as("id"),
-          array(size(split(col("text"), " ", -1)).cast("long"),
-            length(col("text")).cast("long")).as("xs"),
-          col("text").as("txt"))
-      val base = asExamples(Tables.documents(s, d))
-      val inc = asExamples(Tables.documents(s, d).where(col("doc_id") < 10)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      TfRecordIngest.writeExamples(base.repartition(3), landing)
-      TfRecordIngest.streamToParquet(s, landing, out, ckpt,
-        maxFilesPerTrigger = Some(1))
-      val n1 = s.read.parquet(out).count()
-      TfRecordIngest.streamToParquet(s, landing, out, ckpt) // nothing new
-      val n2 = s.read.parquet(out).count()
-      // late batch: encode to a scratch dir, then land the shards under new
-      // names (writeExamples clears ITS target — never the live landing)
-      TfRecordIngest.writeExamples(inc.repartition(1), s"$root/inc")
-      val fs = new org.apache.hadoop.fs.Path(landing)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/inc"))
-        .filter(_.getPath.getName.endsWith(".tfrecord"))
-        .foreach(f => fs.rename(f.getPath,
-          new org.apache.hadoop.fs.Path(landing, s"inc-${f.getPath.getName}")): Unit)
-      TfRecordIngest.streamToParquet(s, landing, out, ckpt)
-      val finalRows = s.read.parquet(out)
-        .select(col("id"), element_at(col("xs"), 1).as("x0"), col("txt"))
-      val expected = base.unionAll(inc)
-        .select(col("id"), element_at(col("xs"), 1).as("bx0"),
-          col("txt").as("btxt"))
-      val parity = finalRows.join(expected, Seq("id"), "full_outer")
-        .agg(count(lit(1)).as("n_incremental"),
-          min(when(col("x0") === col("bx0") && col("txt") === col("btxt"),
-            true).otherwise(false)).as("content_match"))
-      import s.implicits._
-      Seq((n1, n1 == n2)).toDF("n_first", "redrain_noop")
-        .crossJoin(broadcast(parity))
-        .select(col("n_first"), col("redrain_noop"),
-          col("n_incremental"), col("content_match"))
-        // 1-row result whose plan reads $root/out — materialize so the
-        // tmpdir deletes at query exit (playbook #41) instead of leaking a
-        // shutdown hook + orphaned dir per invocation
-        .localCheckpoint()
-      } finally rmrf(root)
     }
   )
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.Hashes
 import graft.operators.{MinHash, Split}
 
@@ -3047,13 +3047,7 @@ object TextQueries {
     QueryDef("q483_stream_quota", QuotaSampleSql.sql) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{StringType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_quota_q_").toFile
-      try {
+      Scratch.run(s, "graft_quota_q_") { root =>
         val report = quotaSampleReport(Tables.documents(s, d))
           .persist() // static corpus statistic: probed by every batch
         report.count(): Unit
@@ -3088,7 +3082,7 @@ object TextQueries {
           .localCheckpoint()
         report.unpersist()
         res
-      } finally rmrf(root)
+      }
     },
 
     // Tokenizer DECODE / round-trip fidelity census (round 15) — the
@@ -3338,13 +3332,7 @@ object TextQueries {
     QueryDef("q486_stream_vocab_growth", VocabGrowthSql.sql) { (s, d) =>
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rmrf)
-        f.delete(): Unit
-      }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_vgrow_q_").toFile
-      try {
+      Scratch.run(s, "graft_vgrow_q_") { root =>
         val docs = Tables.documents(s, d).select("doc_id", "text")
         val mid = docs.agg(max("doc_id")).head().getLong(0)
         val wd = math.max(1L, (mid + 1L) / 256L)
@@ -3426,7 +3414,7 @@ object TextQueries {
           // the result READS $root/out — materialize before the delete
           .localCheckpoint()
         res
-      } finally rmrf(root)
+      }
     }
   )
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Scratch.rmrf
 
 /** Continuous corpus ingestion with deduplication — the streaming twin of the
   * batch incremental-dedup operator (q114). New document batches land as
@@ -268,19 +269,14 @@ object DocStreams {
       val okAside = prevCompacted.renameTo(old)
       require(okAside, s"compaction rename failed: $prevCompacted -> $old")
     }
-    dirs.foreach(rmrfFile)
+    dirs.foreach(rmrf)
     val ok = tmp.renameTo(prevCompacted)
     require(ok, s"compaction rename failed: $tmp -> $prevCompacted")
-    rmrfFile(old)
+    rmrf(old)
     dirs.size
   }
 
   private val FoldedManifest = "_folded"
-
-  private def rmrfFile(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmrfFile)
-    f.delete(): Unit
-  }
 
   /** Finish or undo a compaction interrupted by a crash (see the swap
     * protocol in [[compactGateOutput]]). Idempotent; called at compaction
@@ -304,7 +300,7 @@ object DocStreams {
     val manifest = new java.io.File(tmp, FoldedManifest)
     if (tmp.isDirectory) {
       if (!manifest.isFile) {
-        rmrfFile(tmp) // incomplete write; originals intact
+        rmrf(tmp) // incomplete write; originals intact
       } else {
         val folded = new String(
           java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8")
@@ -315,12 +311,12 @@ object DocStreams {
           val okAside = compacted.renameTo(old)
           require(okAside, s"recovery rename failed: $compacted -> $old")
         }
-        folded.foreach(n => rmrfFile(new java.io.File(s"$outDir/$n")))
+        folded.foreach(n => rmrf(new java.io.File(s"$outDir/$n")))
         val ok = tmp.renameTo(compacted)
         require(ok, s"recovery rename failed: $tmp -> $compacted")
       }
     }
-    if (old.isDirectory) rmrfFile(old)
+    if (old.isDirectory) rmrf(old)
   }
 
   /** Land → dedup → parquet append, exactly-once, drain-all-and-stop

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Scratch.rmrf
 
 import graft.operators.Pq
 
@@ -90,10 +91,6 @@ object EmbeddingStreams {
                           cap: Int, kInternal: Int, deg: Int): Unit = {
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.NswGraph
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
     val q = readLanding(spark, landingDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch0: DataFrame, _: Long) =>

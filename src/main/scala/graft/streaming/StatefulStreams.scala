@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.streaming._
 
 /** The arbitrary-stateful surface Spark 4 added AFTER mapGroupsWithState:
@@ -19,6 +19,25 @@ object StatefulStreams {
     */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The session-conf override a transformWithState drain runs under
+    * (pass it to [[graft.Scratch.run]]).
+    */
+  val RocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider
+
+  /** Shuffle (= state) partitions capped at a stream's key domain. When
+    * the query's own predicate bounds the keys (say to 20 users), every
+    * state partition beyond that is provably empty yet still pays a
+    * RocksDB instance open + commit + snapshot per micro-batch. Hash
+    * partitioning per key is unchanged, so results are identical, and the
+    * cap is scale-correct: a cluster session with 600 shuffle partitions
+    * still only ever has `keys` keys in the stream.
+    */
+  def statePartitionCap(spark: SparkSession, keys: Int): (String, String) = {
+    val k = "spark.sql.shuffle.partitions"
+    k -> math.min(keys, spark.conf.get(k).toInt).toString
+  }
 
   /** Per-key running (event count, max value) as a single ValueState —
     * count is commutative and max is order-insensitive, so the final state

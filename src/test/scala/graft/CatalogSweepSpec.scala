@@ -19,17 +19,50 @@ import org.scalatest.funsuite.AnyFunSuite
 class CatalogSweepSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
 
-  /** One construction pass over the whole catalog, shared by the two
-    * catalog-wide plan guards below: per query, (CartesianProductExec
-    * present?, partition-less WindowExec nodes). sparkPlan is the pre-AQE
+  /** Session-conf settings (key, value) a query may leave behind, with the
+    * reason.
+    */
+  private val confExemptions: Map[(String, String), String] = Map(
+    ("spark.sql.legacy.parquet.nanosAsLong", "true") ->
+      ("Tables.events / EventStreams set it on every read, " +
+        "idempotently, so older events.parquet generations decode"))
+
+  /** `graft_*` entries of java.io.tmpdir a query may leave behind, by name
+    * prefix, with the reason.
+    */
+  private val tmpExemptions: Map[String, String] = Map(
+    "graft_nsw_base_" ->
+      ("SimilarityQueries.nswBaseFixture's NSW base-index cache, keyed by " +
+        "data and build parameters and reused across invocations on purpose"),
+    // the remaining prefixes are one fixed path per fixture dir that the
+    // query's lazy result reads back, overwritten in place by every run
+    "graft_src_" -> "SourceQueries' per-format sink, read back by the result",
+    "graft_roundtrip_" -> "q49's split-partitioned round-trip sink",
+    "graft_compact_" -> "q130's compaction input/output dirs",
+    "graft_npz_parquet_" -> "NpzQueries' idempotent conversion sink",
+    "graft_buckets" -> "BucketCatalog's bucketed catalog tables")
+
+  private def graftTmpEntries(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list)
+      .fold(Set.empty[String])(_.filter(_.startsWith("graft_")).toSet)
+
+  /** One construction pass over the whole catalog, shared by the
+    * catalog-wide guards below: per query, (CartesianProductExec present?,
+    * partition-less WindowExec nodes, leftovers). sparkPlan is the pre-AQE
     * physical plan — no query executes for the check itself (queries whose
     * CONSTRUCTION runs driver iteration still pay only their construction
-    * cost, same as Verify). Built lazily ONCE; each query's plan tree is
-    * reduced to its two flags immediately so the full 489-plan forest is
-    * never held live at the same time.
+    * cost, same as Verify). Leftovers are the session-conf keys and the
+    * `graft_*` tmpdir entries that differ before and after the query, minus
+    * the exemptions above — the stream and disk-index queries run their
+    * jobs during construction, so a scratch scope that fails to undo
+    * itself shows here. Built lazily ONCE; each query's plan tree is
+    * reduced to its flags immediately so the full 489-plan forest is never
+    * held live at the same time.
     */
-  private lazy val catalogSweep: Seq[(String, Boolean, Seq[String])] =
+  private lazy val catalogSweep: Seq[(String, Boolean, Seq[String], Seq[String])] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, run) =>
+      val conf0 = spark.conf.getAll
+      val tmp0 = graftTmpEntries()
       try {
         val p = run(spark, TestSpark.sfDir).queryExecution.sparkPlan
         val carts = p.collectWithSubqueries {
@@ -49,7 +82,15 @@ class CatalogSweepSpec extends AnyFunSuite {
                 } =>
             w.windowExpression.map(_.sql).mkString("; ").take(120)
         }
-        (name, carts.nonEmpty, looseWindows)
+        val conf1 = spark.conf.getAll
+        val confLeft = (conf0.keySet ++ conf1.keySet).toSeq.sorted
+          .filter(k => conf0.get(k) != conf1.get(k) &&
+            !conf1.get(k).exists(v => confExemptions.contains(k -> v)))
+          .map(k => s"conf $k: ${conf0.get(k)} -> ${conf1.get(k)}")
+        val tmpLeft = (graftTmpEntries() -- tmp0).toSeq.sorted
+          .filterNot(e => tmpExemptions.keys.exists(e.startsWith))
+          .map(e => s"tmpdir $e")
+        (name, carts.nonEmpty, looseWindows, confLeft ++ tmpLeft)
       } finally spark.catalog.clearCache()
     }
 
@@ -58,7 +99,7 @@ class CatalogSweepSpec extends AnyFunSuite {
     // crossJoin that loses its broadcast() (or an AQE-off run of an
     // unhinted one) plans as CartesianProductExec and shuffles the corpus
     // against itself.
-    val bad = catalogSweep.collect { case (name, true, _) => name }
+    val bad = catalogSweep.collect { case (name, true, _, _) => name }
     assert(bad.isEmpty, s"cartesian product in plans of: ${bad.mkString(", ")}")
   }
 
@@ -107,7 +148,7 @@ class CatalogSweepSpec extends AnyFunSuite {
     // the whitelist above, or CI fails — a future unpartitioned window over
     // row-scale data can't land silently.
     val flagged = catalogSweep.collect {
-      case (name, _, ws) if ws.nonEmpty => name -> ws
+      case (name, _, ws, _) if ws.nonEmpty => name -> ws
     }.toMap
     val unexplained = flagged.keySet -- partitionlessWindowWhitelist.keySet
     assert(unexplained.isEmpty,
@@ -119,5 +160,15 @@ class CatalogSweepSpec extends AnyFunSuite {
     val stale = partitionlessWindowWhitelist.keySet -- flagged.keySet
     assert(stale.isEmpty,
       s"whitelist entries with no partition-less window anymore: ${stale.mkString(", ")}")
+  }
+
+  test("catalog sweep: no query leaves a session-conf change or a scratch dir behind") {
+    // a stream or index query that drops its temp dir outside a finally, or
+    // restores a conf key by hand and misses one path, leaks per invocation
+    // — Scratch.run is the one scope that undoes both
+    val leaks = catalogSweep.collect {
+      case (name, _, _, left) if left.nonEmpty => s"$name: ${left.mkString("; ")}"
+    }
+    assert(leaks.isEmpty, s"queries left state behind:\n${leaks.mkString("\n")}")
   }
 }

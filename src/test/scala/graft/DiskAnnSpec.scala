@@ -15,21 +15,15 @@ class DiskAnnSpec extends AnyFunSuite {
 
   private val Dim = 64
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmrf)
-    f.delete(): Unit
-  }
-
   private def withIndex[T](body: String => T): T = {
-    val root = java.nio.file.Files.createTempDirectory("graft_diskann_t_").toFile
-    try {
+    Scratch.run(spark, "graft_diskann_t_") { root =>
       val emb = Tables.embeddings(spark, TestSpark.sfDir)
       val graph = NswGraph.buildRefined(emb, "vec_id", "embedding", Dim,
         bands = 16, rbits = 4, seed = 11L, cap = 64,
         kInternal = 16, rounds = 2, deg = 8)
       DiskAnn.writeIndex(graph, emb, "vec_id", "embedding", root.toString)
       body(root.toString)
-    } finally rmrf(root)
+    }
   }
 
   test("frontier probes reach the edge scan as pushed In filters") {

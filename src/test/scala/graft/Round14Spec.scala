@@ -332,10 +332,6 @@ class Round14Spec extends AnyFunSuite {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
     def writeBatch(out: String, id: String, ids: Seq[Long]): Unit =
       ids.map(i => (i, new java.sql.Timestamp(1700000000000L + i), s"doc $i"))
         .toDF("doc_id", "ingest_ts", "text")
@@ -343,8 +339,7 @@ class Round14Spec extends AnyFunSuite {
     def landed(out: String): Set[Long] =
       spark.read.parquet(s"$out/*").select("doc_id")
         .collect().map(_.getLong(0)).toSet
-    val root = java.nio.file.Files.createTempDirectory("graft_crash_").toFile
-    try {
+    Scratch.run(spark, "graft_crash_") { root =>
       // --- window A: crash DURING the tmp write (no manifest) ---
       val a = s"$root/a"
       writeBatch(a, "0", Seq(1L, 2L))
@@ -372,7 +367,7 @@ class Round14Spec extends AnyFunSuite {
         "batch=5\nbatch=6".getBytes("UTF-8"))
       new java.io.File(s"$b/batch=compacted")
         .renameTo(new java.io.File(s"$b/.compact_old"))
-      rmrf(new java.io.File(s"$b/batch=5")) // partially-finished deletion
+      Scratch.rmrf(new java.io.File(s"$b/batch=5")) // partially-finished deletion
       // next compaction entry must finish the swap: no loss, no dup
       DocStreams.compactGateOutput(spark, b)
       assert(landed(b) == Set(1L, 2L, 3L, 4L), "window B lost or duplicated")
@@ -390,6 +385,6 @@ class Round14Spec extends AnyFunSuite {
       DocStreams.compactGateOutput(spark, c)
       assert(landed(c) == Set(1L, 2L, 3L), "window C lost or duplicated")
       assert(!new java.io.File(s"$c/.compact_old").exists)
-    } finally rmrf(root)
+    }
   }
 }

@@ -61,52 +61,37 @@ class Round8Spec extends AnyFunSuite {
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
     import graft.streaming.StatefulStreams
     import spark.implicits._
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_ewma_neg_").toFile
-    try {
-      val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
-        // two waves; the carried state goes NEGATIVE after wave A — the
-        // old -1L sentinel would have silently restarted the recurrence
-        Seq(("k", 1L, -100L), ("k", 2L, -50L)).toDF("g", "day", "y")
-          .coalesce(1).write.parquet(s"$root/landing")
-        def drain(): Unit = {
-          val st = spark.readStream
-            .schema(new StructType().add("g", StringType)
-              .add("day", LongType).add("y", LongType))
-            .parquet(s"$root/landing")
-            .as[(String, Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new StatefulStreams.OrderedEwma,
-              TimeMode.None(), OutputMode.Update())
-          val q = st.toDF("g", "day", "y", "s")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        drain()
-        Seq(("k", 3L, -10L)).toDF("g", "day", "y")
-          .coalesce(1).write.mode("append").parquet(s"$root/landing")
-        drain()
-        val out = spark.read.parquet(s"$root/out")
-          .collect().map(r => (r.getLong(1), r.getLong(3))).sortBy(_._1)
-        // recurrence: s1=-100, s2=(-50-100)/2=-75, s3=(-10-75)/2=-42
-        // (a sentinel bug would give s3 = -10, restarting at wave B)
-        assert(out.toSeq == Seq((1L, -100L), (2L, -75L), (3L, -42L)))
-      } finally prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    Scratch.run(spark, "graft_ewma_neg_", StatefulStreams.RocksDb) { root =>
+      // two waves; the carried state goes NEGATIVE after wave A — the
+      // old -1L sentinel would have silently restarted the recurrence
+      Seq(("k", 1L, -100L), ("k", 2L, -50L)).toDF("g", "day", "y")
+        .coalesce(1).write.parquet(s"$root/landing")
+      def drain(): Unit = {
+        val st = spark.readStream
+          .schema(new StructType().add("g", StringType)
+            .add("day", LongType).add("y", LongType))
+          .parquet(s"$root/landing")
+          .as[(String, Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new StatefulStreams.OrderedEwma,
+            TimeMode.None(), OutputMode.Update())
+        val q = st.toDF("g", "day", "y", "s")
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$root/out")
+          .option("checkpointLocation", s"$root/ckpt")
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
       }
-    } finally rmrf(root)
+      drain()
+      Seq(("k", 3L, -10L)).toDF("g", "day", "y")
+        .coalesce(1).write.mode("append").parquet(s"$root/landing")
+      drain()
+      val out = spark.read.parquet(s"$root/out")
+        .collect().map(r => (r.getLong(1), r.getLong(3))).sortBy(_._1)
+      // recurrence: s1=-100, s2=(-50-100)/2=-75, s3=(-10-75)/2=-42
+      // (a sentinel bug would give s3 = -10, restarting at wave B)
+      assert(out.toSeq == Seq((1L, -100L), (2L, -75L), (3L, -42L)))
+    }
   }
 
   test("q261 zero-variance guard yields null instead of the ANSI 0/0 throw") {

@@ -8,11 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round9Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmrf)
-    f.delete(): Unit
-  }
-
   test("q281 attribution discovers channels from the data (no static list)") {
     import spark.implicits._
     // the oracle SQL must carry no hardcoded channel literals
@@ -21,8 +16,7 @@ class Round9Spec extends AnyFunSuite {
       !sql.contains("'signup'"))
     // a fixture with a channel ("promo") the old static list never knew:
     //   u1: view → click → purchase   u2: promo → (lost)   u3: purchase only
-    val root = java.nio.file.Files.createTempDirectory("graft_attr_").toFile
-    try {
+    Scratch.run(spark, "graft_attr_") { root =>
       val us = 1000000L
       Seq(
         (1L, 1L * us, 1L, "view", 0.0, "{}"),
@@ -50,7 +44,7 @@ class Round9Spec extends AnyFunSuite {
       assert(out.forall(_._2 == 666666000L))
       assert(out.map(t => t._1 -> t._3).toMap ==
         Map("click" -> 500000L, "promo" -> 0L, "view" -> 500000L))
-    } finally rmrf(root)
+    }
   }
 
   test("q295's pinned DCG discounts re-derive from 1/log2(i+1)") {

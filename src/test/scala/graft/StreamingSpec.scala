@@ -232,53 +232,38 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{LongType, StructType}
     import graft.streaming.StatefulStreams
     import spark.implicits._
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_ttl_spec_").toFile
-    try {
-      val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        StatefulStreams.RocksDbProvider)
-      try {
-        def drain(): Unit = {
-          val st = spark.readStream
-            .schema(new StructType().add("k", LongType).add("x", LongType))
-            .parquet(s"$root/landing")
-            .as[(Long, Long)]
-            .groupByKey(_._1)
-            .transformWithState(new StatefulStreams.TtlCounter,
-              TimeMode.ProcessingTime(), OutputMode.Update())
-          // Trigger.Once, not AvailableNow: ProcessingTime mode keeps
-          // shouldRunAnotherBatch true forever (see q268)
-          val q = st.toDF("k", "ttl_cnt", "keep_cnt")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.Once()).start()
-          q.awaitTermination()
-        }
-        // wave A: key 1 ×3, key 2 ×1; wave B: key 1 ×2, key 3 ×1
-        Seq((1L, 0L), (1L, 0L), (1L, 0L), (2L, 0L)).toDF("k", "x")
-          .coalesce(1).write.parquet(s"$root/landing")
-        drain()
-        Seq((1L, 0L), (1L, 0L), (3L, 0L)).toDF("k", "x")
-          .coalesce(1).write.mode("append").parquet(s"$root/landing")
-        drain()
-        val out = spark.read.parquet(s"$root/out")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        assert(out == Set(
-          (1L, 3L, 3L), (2L, 1L, 1L), // wave A
-          (1L, 2L, 5L),               // wave B: ttl RE-INITIALIZED, keep carried
-          (3L, 1L, 1L)))
-      } finally prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    Scratch.run(spark, "graft_ttl_spec_", StatefulStreams.RocksDb) { root =>
+      def drain(): Unit = {
+        val st = spark.readStream
+          .schema(new StructType().add("k", LongType).add("x", LongType))
+          .parquet(s"$root/landing")
+          .as[(Long, Long)]
+          .groupByKey(_._1)
+          .transformWithState(new StatefulStreams.TtlCounter,
+            TimeMode.ProcessingTime(), OutputMode.Update())
+        // Trigger.Once, not AvailableNow: ProcessingTime mode keeps
+        // shouldRunAnotherBatch true forever (see q268)
+        val q = st.toDF("k", "ttl_cnt", "keep_cnt")
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$root/out")
+          .option("checkpointLocation", s"$root/ckpt")
+          .trigger(Trigger.Once()).start()
+        q.awaitTermination()
       }
-    } finally rmrf(root)
+      // wave A: key 1 ×3, key 2 ×1; wave B: key 1 ×2, key 3 ×1
+      Seq((1L, 0L), (1L, 0L), (1L, 0L), (2L, 0L)).toDF("k", "x")
+        .coalesce(1).write.parquet(s"$root/landing")
+      drain()
+      Seq((1L, 0L), (1L, 0L), (3L, 0L)).toDF("k", "x")
+        .coalesce(1).write.mode("append").parquet(s"$root/landing")
+      drain()
+      val out = spark.read.parquet(s"$root/out")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(out == Set(
+        (1L, 3L, 3L), (2L, 1L, 1L), // wave A
+        (1L, 2L, 5L),               // wave B: ttl RE-INITIALIZED, keep carried
+        (3L, 1L, 1L)))
+    }
   }
 
   test("session windows produce sane sessions under watermark") {
@@ -298,12 +283,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_ndgate_").toFile
-    try {
+    Scratch.run(spark, "graft_ndgate_") { root =>
       val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
       val corpus = Seq((100L, "alpha beta gamma delta epsilon"))
         .toDF("doc_id", "text")
@@ -378,19 +358,14 @@ class StreamingSpec extends AnyFunSuite {
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(landedFinal == Set(2L, 4L, 6L, 8L),
         s"expected survivors {2, 4, 6, 8}, got $landedFinal")
-    } finally rmrf(root)
+    }
   }
 
   test("near-dup gate auto-compaction bounds batch dirs on a long flow") {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_ndauto_").toFile
-    try {
+    Scratch.run(spark, "graft_ndauto_") { root =>
       val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
       val corpus = Seq((100L, "alpha beta gamma delta epsilon"))
         .toDF("doc_id", "text")
@@ -418,19 +393,14 @@ class StreamingSpec extends AnyFunSuite {
       val nDirs = new java.io.File(s"$root/out").listFiles
         .count(_.getName.startsWith("batch="))
       assert(nDirs <= 4, s"auto-compaction left $nDirs batch dirs")
-    } finally rmrf(root)
+    }
   }
 
   test("graph maintenance stream: two drains == build then upsert, edge for edge") {
     import org.apache.spark.sql.functions._
     import graft.operators.NswGraph
     import graft.streaming.EmbeddingStreams
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete(): Unit
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft_gmaint_").toFile
-    try {
+    Scratch.run(spark, "graft_gmaint_") { root =>
       val emb = Tables.embeddings(spark, TestSpark.sfDir)
         .select("vec_id", "embedding")
       val isNew = col("vec_id") % 8 === 0
@@ -468,6 +438,6 @@ class StreamingSpec extends AnyFunSuite {
       val recovered = spark.read.parquet(s"$root/index/current/vectors")
       assert(recovered.count() == emb.count() + waveC.count(),
         "post-crash drain lost the corpus index")
-    } finally rmrf(root)
+    }
   }
 }
