@@ -166,6 +166,49 @@ object DupSpans {
         (max("pos") + (width - 1)).cast("long").as("end_pos"))
   }
 
+  /** DuckDB twin of [[sweep]]: from `d0(doc_id, sh)` (each doc's shingle
+    * array) the CTEs `s0` (doc_id, pos, shingle) → `dup` (the ≥ 2-doc
+    * census) → `hit` (doc_id, pos), then [[islandIdsSql]].
+    */
+  def sweepSql(width: Int): String =
+    s"""s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
+       |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
+       |dup AS (SELECT shingle FROM (
+       |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
+       |  WHERE nd >= 2),
+       |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
+       |${islandIdsSql(width)}""".stripMargin
+
+  /** The interval-union half of [[sweepSql]]: hit positions
+    * `hit(doc_id, pos)` → `m` (running max of the previous hits' ends) →
+    * `i` (doc_id, pos, island).
+    */
+  def islandIdsSql(width: Int): String =
+    s"""m AS (SELECT doc_id, pos,
+       |        max(pos + ${width - 1}) OVER (PARTITION BY doc_id ORDER BY pos
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |      FROM hit),
+       |i AS (SELECT doc_id, pos,
+       |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
+       |            THEN 1 ELSE 0 END)
+       |          OVER (PARTITION BY doc_id ORDER BY pos
+       |            ROWS UNBOUNDED PRECEDING) AS island
+       |      FROM m)""".stripMargin
+
+  /** DuckDB twin of [[coverage]] / [[coverageChars]] after [[sweepSql]]:
+    * islands `i` → (doc_id, `n`, covered, dup_frac), `n` being the length
+    * column `d0` carries.
+    */
+  def coverageSql(width: Int, n: String): String =
+    s"""isl AS (SELECT doc_id, island, max(pos) + ${width - 1} - min(pos) + 1 AS cov
+       |        FROM i GROUP BY doc_id, island),
+       |cv AS (SELECT doc_id, CAST(sum(cov) AS BIGINT) AS covered
+       |       FROM isl GROUP BY doc_id)
+       |SELECT d0.doc_id, d0.$n, coalesce(cv.covered, 0) AS covered,
+       |       round(CAST(coalesce(cv.covered, 0) AS DOUBLE) / $n, 6)
+       |         AS dup_frac
+       |FROM d0 LEFT JOIN cv USING (doc_id) ORDER BY d0.doc_id""".stripMargin
+
   /** Merged duplicated intervals per doc: (doc_id, island, start_pos,
     * end_pos) with end = last covered token index. Islands are disjoint and
     * non-touching by construction — a new island only opens when
@@ -323,6 +366,25 @@ object DupSpans {
     removeSpans(docs, tokens,
       ranked.where(col("rn") > 1).select("doc_id", "start_pos", "end_pos"))
   }
+
+  /** DuckDB twin of [[removeSpans]]: drop from `t(doc_id, toks)` every
+    * token inside a `cut(doc_id, st, en)` span, then (doc_id, n_tokens,
+    * n_kept, clean_text) against `d0(doc_id, n_tokens)`.
+    */
+  def removeSpansSql(cut: String): String =
+    s"""tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (
+       |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t)),
+       |kept AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tp
+       |         WHERE NOT EXISTS (SELECT 1 FROM $cut
+       |           WHERE $cut.doc_id = tp.doc_id
+       |             AND tp.pos >= $cut.st AND tp.pos <= $cut.en)),
+       |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+       |               string_agg(tok, ' ' ORDER BY pos) AS clean_text
+       |        FROM kept GROUP BY doc_id)
+       |SELECT d0.doc_id, d0.n_tokens,
+       |       coalesce(agg.n_kept, 0) AS n_kept,
+       |       coalesce(agg.clean_text, '') AS clean_text
+       |FROM d0 LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin
 
   /** Deterministic long-doc fixture, constructed from arithmetic on both
     * engines (no data files): `nDocs` docs of `nTokens` tokens with

@@ -148,6 +148,21 @@ object MediaCodecs {
     Video(w, h, frames.toArray)
   }
 
+  /** Per-channel (R, G, B) sums over interleaved 8-bit RGB pixels — the
+    * integer image features the PPM decode contracts compare.
+    */
+  def channelSums(pixels: Array[Byte]): (Long, Long, Long) = {
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var i = 0
+    while (i < pixels.length) {
+      sr += pixels(i) & 0xff
+      sg += pixels(i + 1) & 0xff
+      sb += pixels(i + 2) & 0xff
+      i += 3
+    }
+    (sr, sg, sb)
+  }
+
   /** Decode a binary (P6) PPM: `P6 <w> <h> <maxval>` header tokens separated
     * by whitespace with `#`-to-end-of-line comments, a single whitespace
     * byte, then w·h·3 RGB bytes. Only maxval 255 (1 byte/sample) supported.

@@ -38,14 +38,7 @@ object Multimodal {
     override def decodeBatch(batch: Array[(Long, Array[Byte])]): Array[ImageFeatures] =
       batch.map { case (id, bytes) =>
         val img = MediaCodecs.decodePpm(bytes)
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        var i = 0
-        while (i < img.pixels.length) {
-          sr += img.pixels(i) & 0xff
-          sg += img.pixels(i + 1) & 0xff
-          sb += img.pixels(i + 2) & 0xff
-          i += 3
-        }
+        val (sr, sg, sb) = MediaCodecs.channelSums(img.pixels)
         ImageFeatures(id, img.width, img.height,
           img.width.toLong * img.height, sr, sg, sb)
       }

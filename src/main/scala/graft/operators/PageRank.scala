@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank as pure relational dataflow — the second iterative graph
@@ -50,8 +50,23 @@ object PageRank {
       .select(col("id"), col("dang0").isNull.as("dang"))
       .localCheckpoint()
 
-    var ranks = vTag.crossJoin(nDF)
-      .select(col("id"), col("dang"), (lit(1.0) / col("n")).as("r"))
+    rounds(e, deg, vTag.crossJoin(nDF), Nil, lit(1.0) / col("n"), iters) {
+      (m, dm) => lit(1.0 - damping) / col("n") +
+        lit(damping) * (m / lit(1e12) + (dm / lit(1e12)) / col("n"))
+    }
+  }
+
+  /** The round loop [[pagerank]] and [[personalized]] share. `base` is the
+    * tagged vertex relation (id, dang, the `tags` to carry, and the
+    * teleport denominator), `init` the round-0 rank; `next(m, dm)` is a
+    * variant's rank update from the incoming message sum `m` and the
+    * previous round's dangling mass `dm`, both in integer 1e-12 units.
+    */
+  private def rounds(e: DataFrame, deg: DataFrame, base: DataFrame,
+                     tags: Seq[String], init: Column, iters: Int)
+                    (next: (Column, Column) => Column): DataFrame = {
+    val carried = (Seq("id", "dang") ++ tags).map(col)
+    var ranks = base.select(carried :+ init.as("r"): _*)
     // round 0's dangling mass, in the same 1e-12 integer units every later
     // round's observe() emits — one O(V) job before the loop, never per round
     var dm = ranks.where(col("dang"))
@@ -60,21 +75,19 @@ object PageRank {
     for (_ <- 0 until iters) {
       // one fused job per round: per-edge messages quantized to integer
       // 1e-12 units (float addition order cannot perturb the sum), dangling
-      // mass redistributed uniformly as the LITERAL observed on the previous
-      // round's checkpoint; the new round's dangling mass is observed during
-      // THIS checkpoint's materialization — no extra scan, no broadcast.
+      // mass redistributed as the LITERAL observed on the previous round's
+      // checkpoint; the new round's dangling mass is observed during THIS
+      // checkpoint's materialization — no extra scan, no broadcast.
       val msgs = e
         .join(ranks.select(col("id").as("src"), col("r")), "src")
         .join(deg, "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(round(col("r") / col("outdeg") * 1e12, 0).cast("long")).as("m"))
       val obs = org.apache.spark.sql.Observation()
-      ranks = vTag.crossJoin(nDF)
+      ranks = base
         .join(msgs, Seq("id"), "left")
-        .select(col("id"), col("dang"),
-          round(lit(1.0 - damping) / col("n")
-            + lit(damping) * (coalesce(col("m"), lit(0L)) / lit(1e12)
-              + (lit(dm) / lit(1e12)) / col("n")), 9).as("r"))
+        .select(carried :+
+          round(next(coalesce(col("m"), lit(0L)), lit(dm)), 9).as("r"): _*)
         .observe(obs, coalesce(sum(when(col("dang"),
           round(col("r") * 1e12, 0).cast("long"))), lit(0L)).as("dm"))
         .localCheckpoint()
@@ -82,6 +95,34 @@ object PageRank {
     }
     ranks.select("id", "r")
   }
+
+  /** DuckDB twin of [[rounds]], unrolled `iters` times from ranks
+    * `r0(id, r)`: per round k the dangling census `d$k` (dm), the messages
+    * `m$k` (id, m) over `e(src, dst)` and `deg(src, outdeg)`, then the
+    * variant's rank CTE `rank(k)`, named `r$k`.
+    */
+  def unrolledSql(iters: Int)(rank: Int => String): String =
+    (1 to iters).map { k =>
+      val prev = s"r${k - 1}"
+      s"""d$k AS (
+         |  SELECT coalesce(sum(CAST(round(p.r * 1e12, 0) AS BIGINT)), 0) AS dm
+         |  FROM $prev p WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.src = p.id)),
+         |m$k AS (
+         |  SELECT e.dst AS id,
+         |         sum(CAST(round(p.r / deg.outdeg * 1e12, 0) AS BIGINT)) AS m
+         |  FROM e JOIN $prev p ON e.src = p.id JOIN deg ON deg.src = e.src
+         |  GROUP BY e.dst),
+         |${rank(k)}""".stripMargin
+    }.mkString(",\n")
+
+  /** DuckDB twin of [[pagerank]]'s rank update (damping 0.85) as `r$k`,
+    * over `v(id)` and the vertex count `nn(n)`.
+    */
+  def uniformRankSql(k: Int): String =
+    s"""r$k AS (
+       |  SELECT v.id, round((CAST(1.0 AS DOUBLE) - 0.85) / nn.n
+       |    + 0.85 * (coalesce(m$k.m, 0) / 1e12 + (d$k.dm / 1e12) / nn.n), 9) AS r
+       |  FROM v CROSS JOIN nn CROSS JOIN d$k LEFT JOIN m$k ON m$k.id = v.id)""".stripMargin
 
   /** [[pagerank]] specialized to the SYMMETRIZED-PAIR graph family
     * (q81's customer↔supplier shape): the edge set is
@@ -211,31 +252,10 @@ object PageRank {
         coalesce(col("seed0"), lit(false)).as("seed"))
       .localCheckpoint()
 
-    var ranks = vTag.crossJoin(nsDF)
-      .select(col("id"), col("dang"), col("seed"),
-        when(col("seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("r"))
-    var dm = ranks.where(col("dang"))
-      .agg(coalesce(sum(round(col("r") * 1e12, 0).cast("long")), lit(0L)))
-      .head().getLong(0)
-    for (_ <- 0 until iters) {
-      val msgs = e
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
-        .join(deg, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(round(col("r") / col("outdeg") * 1e12, 0).cast("long")).as("m"))
-      val obs = org.apache.spark.sql.Observation()
-      val sv = when(col("seed"), lit(1.0) / col("ns")).otherwise(lit(0.0))
-      ranks = vTag.crossJoin(nsDF)
-        .join(msgs, Seq("id"), "left")
-        .select(col("id"), col("dang"), col("seed"),
-          round(lit(1.0 - damping) * sv
-            + lit(damping) * (coalesce(col("m"), lit(0L)) / lit(1e12)
-              + lit(dm) / lit(1e12) * sv), 9).as("r"))
-        .observe(obs, coalesce(sum(when(col("dang"),
-          round(col("r") * 1e12, 0).cast("long"))), lit(0L)).as("dm"))
-        .localCheckpoint()
-      dm = obs.get("dm").asInstanceOf[Long]
+    val sv = when(col("seed"), lit(1.0) / col("ns")).otherwise(lit(0.0))
+    rounds(e, deg, vTag.crossJoin(nsDF), Seq("seed"), sv, iters) {
+      (m, dm) => lit(1.0 - damping) * sv +
+        lit(damping) * (m / lit(1e12) + dm / lit(1e12) * sv)
     }
-    ranks.select("id", "r")
   }
 }

@@ -134,9 +134,15 @@ object Pq {
               excludeSelf: Boolean = false): DataFrame = {
     val exploded = codes.select(col("vec_id"),
       posexplode(col("code")).as(Seq("s", "w")))
-    val all = exploded.join(broadcast(tables), Seq("s", "w"))
+    rankAdc(exploded.join(broadcast(tables), Seq("s", "w"))
       .groupBy("qid", "vec_id")
-      .agg(sum("d_e6").as("adc_e6"))
+      .agg(sum("d_e6").as("adc_e6")), k, excludeSelf)
+  }
+
+  /** The ranking tail [[adcTopK]] and [[ivfAdcTopK]] share over the
+    * per-(qid, vec_id) `adc_e6` sums.
+    */
+  private def rankAdc(all: DataFrame, k: Int, excludeSelf: Boolean): DataFrame = {
     // when queries are corpus members, drop the trivial self-match BEFORE
     // ranking so rank 1 is the nearest OTHER vector
     val scored = if (excludeSelf) all.where(col("vec_id") =!= col("qid")) else all
@@ -178,18 +184,10 @@ object Pq {
                  k: Int, excludeSelf: Boolean = false): DataFrame = {
     val exploded = codes.select(col("vec_id"), col("cluster"),
       posexplode(col("code")).as(Seq("s", "w")))
-    val all = exploded.join(broadcast(tables), Seq("s", "w"))
+    rankAdc(exploded.join(broadcast(tables), Seq("s", "w"))
       .join(broadcast(probes), Seq("cluster", "qid"))
       .groupBy("qid", "vec_id")
-      .agg(sum("d_e6").as("adc_e6"))
-    val scored = if (excludeSelf) all.where(col("vec_id") =!= col("qid")) else all
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc_e6"), col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"),
-        round(col("adc_e6").cast("double") / 1e6, 6).as("adc_d2"))
+      .agg(sum("d_e6").as("adc_e6")), k, excludeSelf)
   }
 
   /** Exact re-rank of an ADC shortlist — the standard PQ search shape

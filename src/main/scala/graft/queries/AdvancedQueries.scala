@@ -511,34 +511,14 @@ object AdvancedQueries {
     // 1e-12 units so both engines sum exactly. Oracle unrolls the rounds as
     // CTEs; output = top-20 vertices by rank.
     QueryDef("q81_pagerank", {
-      def m(k: Int, prev: String) =
-        s"""d$k AS (
-           |  SELECT coalesce(sum(CAST(round(p.r * 1e12, 0) AS BIGINT)), 0) AS dm
-           |  FROM $prev p WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.src = p.id)),
-           |m$k AS (
-           |  SELECT e.dst AS id,
-           |         sum(CAST(round(p.r / deg.outdeg * 1e12, 0) AS BIGINT)) AS m
-           |  FROM e JOIN $prev p ON e.src = p.id JOIN deg ON deg.src = e.src
-           |  GROUP BY e.dst)""".stripMargin
-      def r(k: Int) =
-        s"""r$k AS (
-           |  SELECT v.id, round((CAST(1.0 AS DOUBLE) - 0.85) / nn.n
-           |    + 0.85 * (coalesce(m$k.m, 0) / 1e12 + (d$k.dm / 1e12) / nn.n), 9) AS r
-           |  FROM v CROSS JOIN nn CROSS JOIN d$k LEFT JOIN m$k ON m$k.id = v.id)""".stripMargin
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e AS (SELECT c AS src, s + 1000000 AS dst FROM pairs
-         |      UNION ALL SELECT s + 1000000, c FROM pairs),
+      s"""WITH ${TradeGraph.pairsSql()},
+         |${TradeGraph.edgesSql()},
          |v AS (SELECT DISTINCT id FROM
          |        (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
          |nn AS (SELECT count(*) AS n FROM v),
          |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
          |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) / nn.n AS r FROM v CROSS JOIN nn),
-         |${m(1, "r0")},
-         |${r(1)},
-         |${m(2, "r1")},
-         |${r(2)}
+         |${PageRank.unrolledSql(2)(PageRank.uniformRankSql)}
          |SELECT id, round(r, 6) AS pagerank FROM r2
          |ORDER BY pagerank DESC, id LIMIT 20""".stripMargin
     }) { (s, d) =>
@@ -740,9 +720,7 @@ object AdvancedQueries {
     // edge-keyed exchange + a k-row total broadcast back, exactly the
     // PageRank message shape.
     QueryDef("q230_hits",
-      """WITH pairs AS MATERIALIZED (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      s"""WITH ${TradeGraph.pairsSql(materialized = true)},
         |a1r AS (SELECT s, CAST(count(*) AS BIGINT) * 1000000 AS raw
         |        FROM pairs GROUP BY s),
         |t1 AS (SELECT CAST(sum(raw) AS BIGINT) AS t FROM a1r),
@@ -1478,11 +1456,8 @@ object AdvancedQueries {
     // dist) pairs under UNION dedup — bounded by |V|·hops, not path count —
     // and takes min(dist) per id.
     QueryDef("q302_bfs_layers",
-      """WITH RECURSIVE pairs AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS MATERIALIZED (SELECT c AS src, s + 1000000 AS dst FROM pairs
-        |      UNION ALL SELECT s + 1000000, c FROM pairs),
+      s"""WITH RECURSIVE ${TradeGraph.pairsSql()},
+        |${TradeGraph.edgesSql(materialized = true)},
         |seed AS MATERIALIZED (SELECT min(src) AS id FROM e),
         |bfs(id, dist) AS (
         |  SELECT id, 0 FROM seed
@@ -1491,27 +1466,9 @@ object AdvancedQueries {
         |  FROM bfs JOIN e ON e.src = bfs.id WHERE bfs.dist < 4)
         |SELECT id, CAST(min(dist) AS BIGINT) AS dist
         |FROM bfs GROUP BY id ORDER BY id""".stripMargin) { (s, d) =>
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-      val e = pairs.select(col("c").as("src"), (col("s") + 1000000L).as("dst"))
-        .unionAll(pairs.select((col("s") + 1000000L).as("src"),
-          col("c").as("dst")))
+      val e = TradeGraph.edges(TradeGraph.pairs(s, d))
         .persist() // probed once per round
-      val seed = e.agg(min("src").as("id"))
-      var known = seed.withColumn("dist", lit(0L)).localCheckpoint()
-      var frontier = known.select("id")
-      for (h <- 1 to 4) {
-        val next = frontier.join(e, col("id") === col("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(known, Seq("id"), "left_anti")
-          .withColumn("dist", lit(h.toLong))
-          .localCheckpoint() // round plans must not nest
-        known = known.unionByName(next).localCheckpoint()
-        frontier = next.select("id")
-      }
-      known.orderBy("id")
+      TradeGraph.bfs(e, e.agg(min("src").as("id")), hops = 4).orderBy("id")
     },
 
     // Skyline (Pareto frontier) — the multi-criteria shortlist operator:
@@ -2525,11 +2482,8 @@ object AdvancedQueries {
     // sums int64 (degrees ≤ node count); the e6 ratio divides last
     // through DECIMAL(38) headroom.
     QueryDef("q422_assortativity",
-      """WITH e0 AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS (SELECT c AS a, s + 1000000 AS b FROM e0
-        |      UNION ALL SELECT s + 1000000, c FROM e0),
+      s"""WITH ${TradeGraph.pairsSql("e0")},
+        |${TradeGraph.edgesSql(src = "a", dst = "b", pairs = "e0")},
         |dg AS (SELECT a AS v, CAST(count(*) AS BIGINT) AS deg FROM e
         |       GROUP BY a),
         |ed AS (SELECT da.deg AS x, db.deg AS y
@@ -2548,13 +2502,7 @@ object AdvancedQueries {
         |         AS BIGINT) AS assortativity_e6
         |FROM m""".stripMargin) { (s, d) =>
       val dec = "decimal(38,0)"
-      val e0 = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-      val e = e0.select(col("c").as("a"), (col("s") + 1000000L).as("b"))
-        .unionByName(e0.select((col("s") + 1000000L).as("a"),
-          col("c").as("b")))
+      val e = TradeGraph.edges(TradeGraph.pairs(s, d), "a", "b")
         .persist() // degree census probes it twice
       val dg = e.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
       val ed = e
@@ -2583,11 +2531,8 @@ object AdvancedQueries {
     // 6-hop horizon (stated by both engines; vertices beyond it don't
     // bound this estimate). Over q81's bipartite customer↔supplier graph.
     QueryDef("q337_diameter_sweep",
-      """WITH RECURSIVE pairs AS MATERIALIZED (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS MATERIALIZED (SELECT c AS src, s + 1000000 AS dst FROM pairs
-        |      UNION ALL SELECT s + 1000000, c FROM pairs),
+      s"""WITH RECURSIVE ${TradeGraph.pairsSql(materialized = true)},
+        |${TradeGraph.edgesSql(materialized = true)},
         |seed1 AS MATERIALIZED (SELECT min(src) AS id FROM e),
         |b1(id, dist) AS (
         |  SELECT id, 0 FROM seed1
@@ -2609,33 +2554,13 @@ object AdvancedQueries {
         |       (SELECT max(dist) FROM d2) AS diameter_lb,
         |       (SELECT CAST(count(*) AS BIGINT) FROM d2) AS n_reached
         |FROM far""".stripMargin) { (s, d) =>
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-      val e = pairs.select(col("c").as("src"), (col("s") + 1000000L).as("dst"))
-        .unionAll(pairs.select((col("s") + 1000000L).as("src"),
-          col("c").as("dst")))
+      val e = TradeGraph.edges(TradeGraph.pairs(s, d))
         .persist() // probed once per round per sweep
-      def bfs(seed: org.apache.spark.sql.DataFrame) = {
-        var known = seed.withColumn("dist", lit(0L)).localCheckpoint()
-        var frontier = known.select("id")
-        for (h <- 1 to 6) {
-          val next = frontier.join(e, col("id") === col("src"))
-            .select(col("dst").as("id")).distinct()
-            .join(known, Seq("id"), "left_anti")
-            .withColumn("dist", lit(h.toLong))
-            .localCheckpoint() // round plans must not nest
-          known = known.unionByName(next).localCheckpoint()
-          frontier = next.select("id")
-        }
-        known
-      }
       val seed1 = e.agg(min("src").as("id"))
-      val d1 = bfs(seed1)
+      val d1 = TradeGraph.bfs(e, seed1, hops = 6)
       val far = d1.orderBy(col("dist").desc, col("id")).limit(1)
         .localCheckpoint() // 1-row census seeds sweep 2
-      val d2 = bfs(far.select("id"))
+      val d2 = TradeGraph.bfs(e, far.select("id"), hops = 6)
       val agg2 = broadcast(d2.agg(max("dist").as("diameter_lb"),
         count(lit(1)).as("n_reached")))
       broadcast(seed1.select(col("id").as("start_id")))
@@ -2655,15 +2580,6 @@ object AdvancedQueries {
     // edge-keyed exchange per round. The oracle unrolls both rounds with
     // the seeded s(v) in place of 1/n.
     QueryDef("q345_personalized_pr", {
-      def m(k: Int, prev: String) =
-        s"""d$k AS (
-           |  SELECT coalesce(sum(CAST(round(p.r * 1e12, 0) AS BIGINT)), 0) AS dm
-           |  FROM $prev p WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.src = p.id)),
-           |m$k AS (
-           |  SELECT e.dst AS id,
-           |         sum(CAST(round(p.r / deg.outdeg * 1e12, 0) AS BIGINT)) AS m
-           |  FROM e JOIN $prev p ON e.src = p.id JOIN deg ON deg.src = e.src
-           |  GROUP BY e.dst)""".stripMargin
       def r(k: Int) =
         s"""r$k AS (
            |  SELECT v.id, round((CAST(1.0 AS DOUBLE) - 0.85)
@@ -2675,11 +2591,8 @@ object AdvancedQueries {
            |  FROM v LEFT JOIN seeds sd ON sd.id = v.id
            |  CROSS JOIN ns CROSS JOIN d$k
            |  LEFT JOIN m$k ON m$k.id = v.id)""".stripMargin
-      s"""WITH pairs AS (
-         |  SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e AS (SELECT c AS src, s + 1000000 AS dst FROM pairs
-         |      UNION ALL SELECT s + 1000000, c FROM pairs),
+      s"""WITH ${TradeGraph.pairsSql()},
+         |${TradeGraph.edgesSql()},
          |v AS (SELECT DISTINCT id FROM
          |        (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
          |seeds AS (SELECT id FROM v ORDER BY id LIMIT 5),
@@ -2689,20 +2602,11 @@ object AdvancedQueries {
          |         CASE WHEN sd.id IS NOT NULL THEN CAST(1.0 AS DOUBLE) / ns.ns
          |              ELSE CAST(0 AS DOUBLE) END AS r
          |       FROM v LEFT JOIN seeds sd ON sd.id = v.id CROSS JOIN ns),
-         |${m(1, "r0")},
-         |${r(1)},
-         |${m(2, "r1")},
-         |${r(2)}
+         |${PageRank.unrolledSql(2)(r)}
          |SELECT id, round(r, 6) AS ppr FROM r2
          |WHERE round(r, 6) > 0 ORDER BY ppr DESC, id LIMIT 20""".stripMargin
     }) { (s, d) =>
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-      val e = pairs.select(col("c").as("src"), (col("s") + 1000000L).as("dst"))
-        .unionAll(pairs.select((col("s") + 1000000L).as("src"),
-          col("c").as("dst")))
+      val e = TradeGraph.edges(TradeGraph.pairs(s, d))
       val seeds = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
         .orderBy("id").limit(5)
@@ -3329,10 +3233,8 @@ object AdvancedQueries {
           s" UNION ALL SELECT id, del FROM d${t}2" +
           s" UNION ALL SELECT id, del FROM d${t}3)"
       }
-      "WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sk" +
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey),\n" +
-        "es AS MATERIALIZED (SELECT c AS a, sk + 1000000 AS b FROM pairs" +
-        " UNION ALL SELECT sk + 1000000, c FROM pairs),\n" +
+      s"WITH ${TradeGraph.pairsSql(supp = "sk")},\n" +
+        s"${TradeGraph.edgesSql("es", "a", "b", supp = "sk", materialized = true)},\n" +
         "deg AS (SELECT a AS id, CAST(count(*) AS BIGINT) AS dg" +
         " FROM es GROUP BY a),\n" +
         "s1 AS (SELECT id AS sid FROM deg ORDER BY dg DESC, id LIMIT 1),\n" +
@@ -3345,14 +3247,7 @@ object AdvancedQueries {
         " GROUP BY id ORDER BY bc_e6 DESC, id LIMIT 15"
     }) { (s, d) =>
       import org.apache.spark.sql.DataFrame
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000L).as("sk"))
-        .distinct()
-      val es = pairs.select(col("c").as("a"), col("sk").as("b"))
-        .unionAll(pairs.select(col("sk"), col("c")))
+      val es = TradeGraph.edges(TradeGraph.pairs(s, d), "a", "b")
         .persist() // every layer of both seeds scans it
       val deg = es.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("dg")).persist() // both pivot picks
@@ -4126,6 +4021,65 @@ object AdvancedQueries {
         .limit(20)
     }
   )
+}
+
+/** q81's customer↔supplier trade graph, shared by the graph queries over
+  * it: the distinct (customer, supplier) pairs of lineitem ⋈ orders, and
+  * the bipartite edge relation in both directions with suppliers offset
+  * into their own id space (+1e6).
+  */
+private object TradeGraph {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** Distinct trade pairs (c, s). */
+  def pairs(spark: SparkSession, d: String): DataFrame =
+    Tables.lineitem(spark, d)
+      .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
+      .distinct()
+
+  /** Both directions of every [[pairs]] row as (`src`, `dst`). */
+  def edges(pairs: DataFrame, src: String = "src",
+            dst: String = "dst"): DataFrame =
+    pairs.select(col("c").as(src), (col("s") + 1000000L).as(dst))
+      .unionAll(pairs.select((col("s") + 1000000L).as(src), col("c").as(dst)))
+
+  private def mat(materialized: Boolean) =
+    if (materialized) "MATERIALIZED " else ""
+
+  /** DuckDB twin of [[pairs]] as CTE `name`, the supplier column `supp`. */
+  def pairsSql(name: String = "pairs", materialized: Boolean = false,
+               supp: String = "s"): String =
+    s"""$name AS ${mat(materialized)}(
+       |  SELECT DISTINCT o_custkey AS c, l_suppkey AS $supp
+       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""".stripMargin
+
+  /** DuckDB twin of [[edges]] over the [[pairsSql]] CTE `pairs`. */
+  def edgesSql(name: String = "e", src: String = "src", dst: String = "dst",
+               pairs: String = "pairs", supp: String = "s",
+               materialized: Boolean = false): String =
+    s"""$name AS ${mat(materialized)}(SELECT c AS $src, $supp + 1000000 AS $dst
+       |  FROM $pairs UNION ALL SELECT $supp + 1000000, c FROM $pairs)""".stripMargin
+
+  /** Hop-bounded BFS over `e(src, dst)` from `seed(id)`: (id, dist) with
+    * first-touch distances ≤ `hops`. Each round is one edge-keyed
+    * equi-join plus an anti-join against everything already reached, so
+    * first touch IS the minimum hop count.
+    */
+  def bfs(e: DataFrame, seed: DataFrame, hops: Int): DataFrame = {
+    var known = seed.withColumn("dist", lit(0L)).localCheckpoint()
+    var frontier = known.select("id")
+    for (h <- 1 to hops) {
+      val next = frontier.join(e, col("id") === col("src"))
+        .select(col("dst").as("id")).distinct()
+        .join(known, Seq("id"), "left_anti")
+        .withColumn("dist", lit(h.toLong))
+        .localCheckpoint() // round plans must not nest
+      known = known.unionByName(next).localCheckpoint()
+      frontier = next.select("id")
+    }
+    known
+  }
 }
 
 /** The deterministic spatial graph shared by the q178/q184/q187 family:

@@ -461,30 +461,8 @@ object CurationQueries {
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          |d0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          |              ${MinHash.shingleHashesSql("toks")} AS sh FROM t),
-         |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-         |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-         |dup AS (SELECT shingle FROM (
-         |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-         |  WHERE nd >= 2),
-         |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-         |m AS (SELECT doc_id, pos,
-         |        max(pos + 2) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |      FROM hit),
-         |i AS (SELECT doc_id, pos,
-         |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-         |            THEN 1 ELSE 0 END)
-         |          OVER (PARTITION BY doc_id ORDER BY pos
-         |            ROWS UNBOUNDED PRECEDING) AS island
-         |      FROM m),
-         |isl AS (SELECT doc_id, island, max(pos) + 2 - min(pos) + 1 AS cov
-         |        FROM i GROUP BY doc_id, island),
-         |cv AS (SELECT doc_id, CAST(sum(cov) AS BIGINT) AS covered
-         |       FROM isl GROUP BY doc_id)
-         |SELECT d0.doc_id, d0.n_tokens, coalesce(cv.covered, 0) AS covered,
-         |       round(CAST(coalesce(cv.covered, 0) AS DOUBLE) / n_tokens, 6)
-         |         AS dup_frac
-         |FROM d0 LEFT JOIN cv USING (doc_id) ORDER BY d0.doc_id""".stripMargin) {
+         |${DupSpans.sweepSql(3)},
+         |${DupSpans.coverageSql(3, "n_tokens")}""".stripMargin) {
       (s, d) =>
       val toks = split(col("text"), " ", -1)
       val d0 = Tables.documents(s, d).select(col("doc_id"),
@@ -1028,30 +1006,8 @@ object CurationQueries {
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          |d0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          |              ${DupSpans.windowKeysSql("toks", 3)} AS sh FROM t),
-         |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-         |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-         |dup AS (SELECT shingle FROM (
-         |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-         |  WHERE nd >= 2),
-         |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-         |m AS (SELECT doc_id, pos,
-         |        max(pos + 2) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |      FROM hit),
-         |i AS (SELECT doc_id, pos,
-         |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-         |            THEN 1 ELSE 0 END)
-         |          OVER (PARTITION BY doc_id ORDER BY pos
-         |            ROWS UNBOUNDED PRECEDING) AS island
-         |      FROM m),
-         |isl AS (SELECT doc_id, island, max(pos) + 2 - min(pos) + 1 AS cov
-         |        FROM i GROUP BY doc_id, island),
-         |cv AS (SELECT doc_id, CAST(sum(cov) AS BIGINT) AS covered
-         |       FROM isl GROUP BY doc_id)
-         |SELECT d0.doc_id, d0.n_tokens, coalesce(cv.covered, 0) AS covered,
-         |       round(CAST(coalesce(cv.covered, 0) AS DOUBLE) / n_tokens, 6)
-         |         AS dup_frac
-         |FROM d0 LEFT JOIN cv USING (doc_id) ORDER BY d0.doc_id""".stripMargin) {
+         |${DupSpans.sweepSql(3)},
+         |${DupSpans.coverageSql(3, "n_tokens")}""".stripMargin) {
       (s, d) =>
       DupSpans.coverageExact(Tables.documents(s, d),
         split(col("text"), " ", -1), width = 3)
@@ -1074,30 +1030,8 @@ object CurationQueries {
       s"""WITH d0 AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
          |              ${DupSpans.charWindowKeysSql("text", 30)} AS sh
          |            FROM documents),
-         |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-         |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-         |dup AS (SELECT shingle FROM (
-         |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-         |  WHERE nd >= 2),
-         |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-         |m AS (SELECT doc_id, pos,
-         |        max(pos + 29) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |      FROM hit),
-         |i AS (SELECT doc_id, pos,
-         |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-         |            THEN 1 ELSE 0 END)
-         |          OVER (PARTITION BY doc_id ORDER BY pos
-         |            ROWS UNBOUNDED PRECEDING) AS island
-         |      FROM m),
-         |isl AS (SELECT doc_id, island, max(pos) + 29 - min(pos) + 1 AS cov
-         |        FROM i GROUP BY doc_id, island),
-         |cv AS (SELECT doc_id, CAST(sum(cov) AS BIGINT) AS covered
-         |       FROM isl GROUP BY doc_id)
-         |SELECT d0.doc_id, d0.n_chars, coalesce(cv.covered, 0) AS covered,
-         |       round(CAST(coalesce(cv.covered, 0) AS DOUBLE) / n_chars, 6)
-         |         AS dup_frac
-         |FROM d0 LEFT JOIN cv USING (doc_id) ORDER BY d0.doc_id""".stripMargin) {
+         |${DupSpans.sweepSql(30)},
+         |${DupSpans.coverageSql(30, "n_chars")}""".stripMargin) {
       (s, d) =>
       DupSpans.coverageChars(Tables.documents(s, d), col("text"), width = 30)
         .orderBy("doc_id")
@@ -2659,16 +2593,7 @@ private object GopherSql {
        |  WHERE c >= 2),
        |hit AS (SELECT s5.doc_id, s5.pos FROM s5 JOIN dup
        |        USING (doc_id, shingle)),
-       |m AS (SELECT doc_id, pos,
-       |        max(pos + 4) OVER (PARTITION BY doc_id ORDER BY pos
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM hit),
-       |i AS (SELECT doc_id, pos,
-       |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-       |            THEN 1 ELSE 0 END)
-       |          OVER (PARTITION BY doc_id ORDER BY pos
-       |            ROWS UNBOUNDED PRECEDING) AS island
-       |      FROM m),
+       |${DupSpans.islandIdsSql(5)},
        |isl AS (SELECT doc_id, island, max(pos) + 4 - min(pos) + 1 AS c
        |        FROM i GROUP BY doc_id, island),
        |cv AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS cov5 FROM isl
@@ -2701,22 +2626,7 @@ private object KeepOneSql {
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |d0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
        |              ${MinHash.shingleHashesSql("toks")} AS sh FROM t),
-       |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-       |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-       |dup AS (SELECT shingle FROM (
-       |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-       |  WHERE nd >= 2),
-       |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-       |m AS (SELECT doc_id, pos,
-       |        max(pos + 2) OVER (PARTITION BY doc_id ORDER BY pos
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM hit),
-       |i AS (SELECT doc_id, pos,
-       |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-       |            THEN 1 ELSE 0 END)
-       |          OVER (PARTITION BY doc_id ORDER BY pos
-       |            ROWS UNBOUNDED PRECEDING) AS island
-       |      FROM m),
+       |${DupSpans.sweepSql(3)},
        |sp AS (SELECT doc_id, min(pos) AS st, max(pos) + 2 AS en
        |       FROM i GROUP BY doc_id, island),
        |fp AS (SELECT sp.doc_id, sp.st, sp.en,
@@ -2729,19 +2639,7 @@ private object KeepOneSql {
        |  SELECT doc_id, st, en,
        |         row_number() OVER (PARTITION BY f ORDER BY doc_id, st) AS rn
        |  FROM fp) WHERE rn > 1),
-       |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (
-       |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t)),
-       |kept AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tp
-       |         WHERE NOT EXISTS (SELECT 1 FROM cut
-       |           WHERE cut.doc_id = tp.doc_id
-       |             AND tp.pos >= cut.st AND tp.pos <= cut.en)),
-       |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-       |               string_agg(tok, ' ' ORDER BY pos) AS clean_text
-       |        FROM kept GROUP BY doc_id)
-       |SELECT d0.doc_id, d0.n_tokens,
-       |       coalesce(agg.n_kept, 0) AS n_kept,
-       |       coalesce(agg.clean_text, '') AS clean_text
-       |FROM d0 LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin
+       |${DupSpans.removeSpansSql("cut")}""".stripMargin
 }
 
 /** DuckDB oracle for q128: q122's island CTEs (3-gram census →
@@ -2753,37 +2651,10 @@ private object SpanScrubSql {
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
        |d0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
        |              ${MinHash.shingleHashesSql("toks")} AS sh FROM t),
-       |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-       |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-       |dup AS (SELECT shingle FROM (
-       |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-       |  WHERE nd >= 2),
-       |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-       |m AS (SELECT doc_id, pos,
-       |        max(pos + 2) OVER (PARTITION BY doc_id ORDER BY pos
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM hit),
-       |i AS (SELECT doc_id, pos,
-       |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-       |            THEN 1 ELSE 0 END)
-       |          OVER (PARTITION BY doc_id ORDER BY pos
-       |            ROWS UNBOUNDED PRECEDING) AS island
-       |      FROM m),
+       |${DupSpans.sweepSql(3)},
        |sp AS (SELECT doc_id, min(pos) AS st, max(pos) + 2 AS en
        |       FROM i GROUP BY doc_id, island),
-       |tp AS (SELECT doc_id, i - 1 AS pos, toks[i] AS tok FROM (
-       |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i FROM t)),
-       |kept AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tp
-       |         WHERE NOT EXISTS (SELECT 1 FROM sp
-       |           WHERE sp.doc_id = tp.doc_id
-       |             AND tp.pos >= sp.st AND tp.pos <= sp.en)),
-       |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-       |               string_agg(tok, ' ' ORDER BY pos) AS clean_text
-       |        FROM kept GROUP BY doc_id)
-       |SELECT d0.doc_id, d0.n_tokens,
-       |       coalesce(agg.n_kept, 0) AS n_kept,
-       |       coalesce(agg.clean_text, '') AS clean_text
-       |FROM d0 LEFT JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin
+       |${DupSpans.removeSpansSql("sp")}""".stripMargin
 }
 
 /** DuckDB oracle for q129: the identical synthetic-PII construction from
@@ -2819,28 +2690,6 @@ private object DupSpansW50Sql {
     s"""WITH docs AS (${DupSpans.syntheticLongDocsSql()}),
        |d0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
        |              ${DupSpans.shingleHashesSql("toks", W)} AS sh FROM docs),
-       |s0 AS (SELECT doc_id, i - 1 AS pos, sh[i] AS shingle FROM (
-       |  SELECT doc_id, sh, unnest(range(1, len(sh) + 1)) AS i FROM d0)),
-       |dup AS (SELECT shingle FROM (
-       |  SELECT shingle, count(DISTINCT doc_id) AS nd FROM s0 GROUP BY 1)
-       |  WHERE nd >= 2),
-       |hit AS (SELECT s0.doc_id, s0.pos FROM s0 JOIN dup USING (shingle)),
-       |m AS (SELECT doc_id, pos,
-       |        max(pos + ${W - 1}) OVER (PARTITION BY doc_id ORDER BY pos
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM hit),
-       |i AS (SELECT doc_id, pos,
-       |        sum(CASE WHEN prev_end IS NULL OR pos > prev_end
-       |            THEN 1 ELSE 0 END)
-       |          OVER (PARTITION BY doc_id ORDER BY pos
-       |            ROWS UNBOUNDED PRECEDING) AS island
-       |      FROM m),
-       |isl AS (SELECT doc_id, island, max(pos) + ${W - 1} - min(pos) + 1 AS cov
-       |        FROM i GROUP BY doc_id, island),
-       |cv AS (SELECT doc_id, CAST(sum(cov) AS BIGINT) AS covered
-       |       FROM isl GROUP BY doc_id)
-       |SELECT d0.doc_id, d0.n_tokens, coalesce(cv.covered, 0) AS covered,
-       |       round(CAST(coalesce(cv.covered, 0) AS DOUBLE) / n_tokens, 6)
-       |         AS dup_frac
-       |FROM d0 LEFT JOIN cv USING (doc_id) ORDER BY d0.doc_id""".stripMargin
+       |${DupSpans.sweepSql(W)},
+       |${DupSpans.coverageSql(W, "n_tokens")}""".stripMargin
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
@@ -36,6 +37,83 @@ object EventQueries {
       |                 AND r.rn = rec.rn + 1)
       |SELECT user_id, CAST(day AS BIGINT) AS day, kept
       |FROM rec ORDER BY user_id, day""".stripMargin
+
+  /** Σ round(max(value, 0)·100): exact clamped cents, the quantity every
+    * daily series below sums (clamping keeps floor and truncation equal).
+    */
+  private def clampedCents: Column =
+    sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
+
+  /** DuckDB twin of [[clampedCents]]. */
+  private val clampedCentsSql =
+    "CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT)) AS BIGINT)"
+
+  /** The daily clamped-cents series: `keys` × UTC day → [[clampedCents]]
+    * as `out` — the integer input of the forecasting, anomaly and bandit
+    * queries.
+    */
+  private def dailyCents(events: DataFrame, out: String = "y",
+                         keys: Seq[Column] = Seq(col("event_type"))): DataFrame =
+    events
+      .groupBy(keys :+ expr("unix_micros(ts) div 86400000000").as("day"): _*)
+      .agg(clampedCents.as(out))
+
+  /** DuckDB twin of [[dailyCents]] as CTE `name`; `perType = false` is
+    * `keys = Nil`, a non-empty `where` filters `events` first.
+    */
+  private def dailyCentsSql(name: String = "d", out: String = "y",
+                            perType: Boolean = true,
+                            materialized: Boolean = false,
+                            where: String = ""): String = {
+    val mat = if (materialized) "MATERIALIZED " else ""
+    val (key, groups) = if (perType) ("event_type, ", "1, 2") else ("", "1")
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    s"""$name AS $mat(
+       |  SELECT ${key}epoch_us(ts) // 86400000000 AS day,
+       |         $clampedCentsSql AS $out
+       |  FROM events$filter GROUP BY $groups)""".stripMargin
+  }
+
+  /** CTE `name`: the `from` series numbered per event_type in day order
+    * (rn from 1) — the row index the recursive-CTE recurrences step on.
+    */
+  private def seriesRankSql(name: String = "r", from: String = "d"): String =
+    s"""$name AS MATERIALIZED (SELECT event_type, day, y,
+       |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
+       |      FROM $from)""".stripMargin
+
+  /** Shared by q233 (batch recurrence) and q256 (streaming twin): the α=½
+    * integer EWMA over the daily series, stepped by a recursive CTE.
+    */
+  private val ewmaSql: String =
+    s"""WITH RECURSIVE ${dailyCentsSql(materialized = true)},
+       |${seriesRankSql()},
+       |rec(event_type, rn, day, y, s) AS (
+       |  SELECT event_type, rn, day, y, y FROM r WHERE rn = 1
+       |  UNION ALL
+       |  SELECT r.event_type, r.rn, r.day, r.y, (r.y + rec.s) // 2
+       |  FROM r JOIN rec ON r.event_type = rec.event_type
+       |                 AND r.rn = rec.rn + 1)
+       |SELECT event_type, CAST(day AS BIGINT) AS day, y AS y_cents,
+       |       CAST(s AS BIGINT) AS ewma_cents
+       |FROM rec ORDER BY event_type, day""".stripMargin
+
+  /** Shared by q271 (trend trace) and q283 (backtest): the recursive CTE
+    * `rec` stepping Holt's α=β=½ level/trend recurrence over the daily
+    * series, truncating integer halving on both engines.
+    */
+  private val holtSql: String =
+    s"""WITH RECURSIVE ${dailyCentsSql(materialized = true)},
+       |${seriesRankSql()},
+       |rec(event_type, rn, day, y, l, b) AS (
+       |  SELECT event_type, rn, day, y, y, CAST(0 AS BIGINT)
+       |  FROM r WHERE rn = 1
+       |  UNION ALL
+       |  SELECT r.event_type, r.rn, r.day, r.y,
+       |         (r.y + (rec.l + rec.b)) // 2,
+       |         (((r.y + (rec.l + rec.b)) // 2 - rec.l) + rec.b) // 2
+       |  FROM r JOIN rec ON r.event_type = rec.event_type
+       |                 AND r.rn = rec.rn + 1)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1320,33 +1398,12 @@ object EventQueries {
     // flake post-mortem lives in the handoff): a recurrence is the op
     // class where arrival order IS the semantics (contrast q236/q244,
     // whose commutative state tolerates any slicing).
-    QueryDef("q256_stream_ewma",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |r AS MATERIALIZED (SELECT event_type, day, y,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |      FROM d),
-        |rec(event_type, rn, day, y, s) AS (
-        |  SELECT event_type, rn, day, y, y FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.y, (r.y + rec.s) // 2
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1)
-        |SELECT event_type, CAST(day AS BIGINT) AS day, y AS y_cents,
-        |       CAST(s AS BIGINT) AS ewma_cents
-        |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
+    QueryDef("q256_stream_ewma", ewmaSql) { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .persist() // wave split scans it twice
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)
@@ -1454,12 +1511,7 @@ object EventQueries {
     // k-row stats relation, not the corpus (the q19 scalar-parity
     // posture applied to window moments).
     QueryDef("q261_rolling_corr",
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events WHERE event_type IN ('view', 'purchase')
-        |  GROUP BY 1, 2),
+      s"""WITH ${dailyCentsSql(where = "event_type IN ('view', 'purchase')")},
         |j AS (SELECT v.day, v.y AS x, p.y AS yy
         |      FROM (SELECT day, y FROM d WHERE event_type = 'view') v
         |      JOIN (SELECT day, y FROM d WHERE event_type = 'purchase') p
@@ -1485,12 +1537,8 @@ object EventQueries {
         |      FROM w WHERE rn >= 7)
         |SELECT CAST(day AS BIGINT) AS day, corr_e6
         |FROM c ORDER BY day""".stripMargin) { (s, d) =>
-      val dRel = Tables.events(s, d)
-        .where(col("event_type").isin("view", "purchase"))
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val dRel = dailyCents(Tables.events(s, d)
+        .where(col("event_type").isin("view", "purchase")))
       val v = dRel.where(col("event_type") === "view").select(col("day"), col("y").as("x"))
       val p = dRel.where(col("event_type") === "purchase")
         .select(col("day").as("pd"), col("y").as("yy"))
@@ -1529,11 +1577,7 @@ object EventQueries {
     // exact lower-median rank statistic; everything integer end to end.
     // Output = the anomaly list a pager fires on.
     QueryDef("q262_seasonal_anomaly",
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCentsSql()},
         |b AS (SELECT event_type, day % 7 AS dow,
         |             CAST(sum(y) // count(*) AS BIGINT) AS base
         |      FROM d GROUP BY 1, 2),
@@ -1552,11 +1596,7 @@ object EventQueries {
         |FROM r JOIN m ON m.event_type = r.event_type
         |WHERE abs(r.resid) > 3 * m.mad
         |ORDER BY r.event_type, day""".stripMargin) { (s, d) =>
-      val dRel = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val dRel = dailyCents(Tables.events(s, d))
         .persist() // baseline fit + residual scan
       val b = dRel.groupBy(col("event_type").as("bt"),
           (col("day") % 7).as("dow"))
@@ -1591,11 +1631,7 @@ object EventQueries {
     // composes directly), which keeps the estimator's guarantees in
     // expectation.
     QueryDef("q255_theil_sen",
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCentsSql()},
         |p AS (SELECT a.event_type,
         |             CAST(round(CAST(b.y - a.y AS DOUBLE)
         |                        / (b.day - a.day), 0) AS BIGINT) AS s,
@@ -1622,11 +1658,7 @@ object EventQueries {
         |       CAST(mb.intercept AS BIGINT) AS intercept_cents
         |FROM nd JOIN ms USING (event_type) JOIN mb USING (event_type)
         |ORDER BY event_type""".stripMargin) { (s, d) =>
-      val dRel = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val dRel = dailyCents(Tables.events(s, d))
         .persist() // pair build, residuals, and the day census
       val p = dRel.as("a").join(dRel.as("b"),
           col("a.event_type") === col("b.event_type")
@@ -1670,30 +1702,9 @@ object EventQueries {
     // CTE stepping the same recurrence. Scale: one exchange keyed by
     // series, sort bounded per key, state one long — the canonical shape
     // for gap-aware smoothing/state machines over 100 TB of event series.
-    QueryDef("q233_ewma",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |r AS MATERIALIZED (SELECT event_type, day, y,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |      FROM d),
-        |rec(event_type, rn, day, y, s) AS (
-        |  SELECT event_type, rn, day, y, y FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.y, (r.y + rec.s) // 2
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1)
-        |SELECT event_type, CAST(day AS BIGINT) AS day, y AS y_cents,
-        |       CAST(s AS BIGINT) AS ewma_cents
-        |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
+    QueryDef("q233_ewma", ewmaSql) { (s, d) =>
       import s.implicits._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .as[(String, Long, Long)]
       daily.groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>
@@ -1728,34 +1739,14 @@ object EventQueries {
     // dashboard plots. Oracle: recursive CTE stepping the same recurrence
     // (the q233 precedent with two carried columns).
     QueryDef("q271_holt_trend",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |r AS MATERIALIZED (SELECT event_type, day, y,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |      FROM d),
-        |rec(event_type, rn, day, y, l, b) AS (
-        |  SELECT event_type, rn, day, y, y, CAST(0 AS BIGINT)
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.y,
-        |         (r.y + (rec.l + rec.b)) // 2,
-        |         (((r.y + (rec.l + rec.b)) // 2 - rec.l) + rec.b) // 2
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1)
+      s"""$holtSql
         |SELECT event_type, CAST(day AS BIGINT) AS day, y AS y_cents,
         |       CAST(l AS BIGINT) AS level_cents,
         |       CAST(b AS BIGINT) AS trend_cents,
         |       CAST(l + 3 * b AS BIGINT) AS f3_cents
         |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
       import s.implicits._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .as[(String, Long, Long)]
       daily.groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>
@@ -1832,23 +1823,7 @@ object EventQueries {
     // the row index — calendar gaps don't skew the join), zero-valued
     // realizations are excluded from the denominator on both engines.
     QueryDef("q283_forecast_backtest",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |r AS MATERIALIZED (SELECT event_type, day, y,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |      FROM d),
-        |rec(event_type, rn, day, y, l, b) AS (
-        |  SELECT event_type, rn, day, y, y, CAST(0 AS BIGINT)
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.y,
-        |         (r.y + (rec.l + rec.b)) // 2,
-        |         (((r.y + (rec.l + rec.b)) // 2 - rec.l) + rec.b) // 2
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1),
+      s"""$holtSql,
         |fin AS MATERIALIZED (SELECT event_type, rn, y, l, b,
         |          lead(y, 3) OVER (PARTITION BY event_type ORDER BY rn)
         |            AS ya
@@ -1865,11 +1840,7 @@ object EventQueries {
         |FROM ape GROUP BY event_type ORDER BY event_type""".stripMargin) {
       (s, d) =>
       import s.implicits._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .as[(String, Long, Long)]
       val rec = daily.groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>
@@ -1990,11 +1961,7 @@ object EventQueries {
     // and anomaly systems read first. Three unrolled pair-group levels,
     // each one keyed aggregate over a k-row series relation.
     QueryDef("q286_haar_energy",
-      """WITH d0 AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCentsSql("d0")},
         |l0 AS (SELECT event_type, y,
         |         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1
         |           AS rn
@@ -2030,11 +1997,7 @@ object EventQueries {
         |         CAST(sum(d * d) AS BIGINT) FROM l3 GROUP BY event_type)
         |SELECT event_type, level, n_coeffs, detail_energy
         |FROM en ORDER BY event_type, level""".stripMargin) { (s, d) =>
-      val d0 = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val d0 = dailyCents(Tables.events(s, d))
       val w = Window.partitionBy("event_type").orderBy("day")
       val l0 = d0.select(col("event_type"), col("y"),
         (row_number().over(w) - 1).as("rn"))
@@ -2069,11 +2032,7 @@ object EventQueries {
     // recursive CTE. Output: every (series, day) with its statistic and
     // alarm flag — the pager stream for slow regressions.
     QueryDef("q282_cusum",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${dailyCentsSql(materialized = true)},
         |mu AS MATERIALIZED (SELECT event_type, CAST(sum(y) // count(*) AS BIGINT) AS mu
         |       FROM d GROUP BY event_type),
         |r AS MATERIALIZED (SELECT d.event_type, d.day, d.y, mu.mu,
@@ -2094,11 +2053,7 @@ object EventQueries {
         |       CAST(s AS BIGINT) AS cusum_cents, s > mu AS alarm
         |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
       import s.implicits._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
       val mu = daily.groupBy("event_type")
         .agg(expr("sum(y) div count(*)").as("mu"))
       daily.join(mu, "event_type")
@@ -3309,11 +3264,7 @@ object EventQueries {
     // lead window over the DAY CENSUS (hundreds of rows, not events),
     // one 1-row co-moment aggregate — the scaler posture.
     QueryDef("q379_acf_pacf",
-      """WITH d AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH ${dailyCentsSql(perType = false)},
         |c AS (SELECT CAST(count(*) AS BIGINT) AS n,
         |             CAST(sum(y) AS BIGINT) AS s FROM d),
         |v AS (SELECT CAST(n * y - s AS HUGEINT) AS dev,
@@ -3355,10 +3306,7 @@ object EventQueries {
         |FROM r""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val dec = "decimal(38,0)"
-      val daily = Tables.events(s, d)
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d), keys = Nil)
       val cen = daily.agg(count(lit(1)).as("n"), sum("y").as("s"))
       val w = Window.orderBy("day")
       val devs = daily.crossJoin(broadcast(cen))
@@ -3830,11 +3778,7 @@ object EventQueries {
     // by arithmetic both engines replay). Scale: the recurrence is the
     // q233 single-exchange shape; the eval join is rn = rn+1 within key.
     QueryDef("q415_forecast_backtest",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${dailyCentsSql(materialized = true)},
         |r AS MATERIALIZED (SELECT event_type, day, y,
         |        CAST(row_number() OVER (PARTITION BY event_type
         |          ORDER BY day) AS BIGINT) AS rn
@@ -3872,11 +3816,7 @@ object EventQueries {
         |FROM mae ORDER BY event_type, rank""".stripMargin) { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .as[(String, Long, Long)]
       val st = daily.groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>
@@ -4039,11 +3979,7 @@ object EventQueries {
       def nUpd(i: Int) = s"rec.n$i + CASE WHEN ($cExpr) = $i THEN 1 ELSE 0 END"
       def sUpd(i: Int) =
         s"rec.s$i + CASE WHEN ($cExpr) = $i THEN gw.r$i ELSE 0 END"
-      s"""WITH RECURSIVE d AS MATERIALIZED (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-         |           AS BIGINT) AS r
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE ${dailyCentsSql(out = "r", materialized = true)},
          |fd AS MATERIALIZED (SELECT day FROM d GROUP BY day HAVING count(*) = 5),
          |arms AS MATERIALIZED (SELECT event_type,
          |                CAST(row_number() OVER (ORDER BY event_type)
@@ -4097,11 +4033,7 @@ object EventQueries {
          |       (SELECT barm FROM best) AS best_arm
          |FROM steps ORDER BY t""".stripMargin
     }) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("r"))
+      val daily = dailyCents(Tables.events(s, d), "r")
         .persist() // full-day census + arm index + grid
       val fd = daily.groupBy("day").agg(count(lit(1)).as("c"))
         .where(col("c") === 5).select("day")
@@ -4169,11 +4101,7 @@ object EventQueries {
     // weights exact 5s, truncated division stated on both engines.
     QueryDef("q418_ips_offpolicy", {
       import graft.functions.Hashes
-      s"""WITH d AS (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-         |           AS BIGINT) AS r
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCentsSql(out = "r")},
          |fd AS (SELECT day FROM d GROUP BY day HAVING count(*) = 5),
          |arms AS (SELECT event_type,
          |                CAST(row_number() OVER (ORDER BY event_type)
@@ -4211,11 +4139,7 @@ object EventQueries {
     }) { (s, d) =>
       import graft.functions.Hashes
       import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("r"))
+      val daily = dailyCents(Tables.events(s, d), "r")
         .persist() // full-day census + arm index + grid + rmax
       val fd = daily.groupBy("day").agg(count(lit(1)).as("c"))
         .where(col("c") === 5).select("day")
@@ -4592,13 +4516,12 @@ object EventQueries {
     // value share — the table a CRM actually routes campaigns by. One
     // user pass + rank windows; the census is ≤ 27 rows at any scale.
     QueryDef("q426_rfm_segments",
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT user_id,
         |         max(epoch_us(ts) // 86400000000) AS last_day,
         |         CAST(count(DISTINCT epoch_us(ts) // 86400000000)
         |           AS BIGINT) AS freq,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0)
-        |           AS BIGINT)) AS BIGINT) AS money
+        |         $clampedCentsSql AS money
         |  FROM events GROUP BY user_id),
         |h AS (SELECT max(last_day) AS horizon FROM u),
         |sc AS (SELECT user_id, freq, money,
@@ -4619,8 +4542,7 @@ object EventQueries {
       val u = Tables.events(s, d).groupBy("user_id")
         .agg(max(expr("unix_micros(ts) div 86400000000")).as("last_day"),
           countDistinct(expr("unix_micros(ts) div 86400000000")).as("freq"),
-          sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-            .as("money"))
+          clampedCents.as("money"))
         .persist() // horizon census + tercile windows + value total
       val horizon = u.agg(max("last_day")).head().getLong(0)
       val total = u.agg(sum("money")).head().getLong(0)
@@ -4772,11 +4694,7 @@ object EventQueries {
     // excluded by a stated guard on both engines. Scale: everything
     // after the day rollup is statistics-sized.
     QueryDef("q393_matrix_profile",
-      """WITH d0 AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH ${dailyCentsSql("d0", perType = false)},
         |d AS (SELECT row_number() OVER (ORDER BY day) AS rn, y FROM d0),
         |n AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM d),
         |st AS (SELECT rn AS a FROM d, n WHERE rn <= nd - 6),
@@ -4813,10 +4731,7 @@ object EventQueries {
         |       d2_e6 = (SELECT md FROM mn) AS is_motif
         |FROM mp ORDER BY w_start""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val d0 = Tables.events(s, d)
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val d0 = dailyCents(Tables.events(s, d), keys = Nil)
       val dd = d0.select(row_number().over(Window.orderBy("day"))
           .cast("long").as("rn"), col("y"))
         .persist() // the start list + both alignment sides scan it
@@ -4881,15 +4796,8 @@ object EventQueries {
     // exactly what a forecast eval exists to surface. The spec replays
     // both recurrences independently instead of betting on a winner.
     QueryDef("q394_holt_winters",
-      """WITH RECURSIVE d0 AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(sum(CAST(round(greatest(value, 0) * 100, 0) AS BIGINT))
-        |           AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |d AS MATERIALIZED (SELECT event_type, day, y,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day)
-        |          AS rn
-        |      FROM d0),
+      s"""WITH RECURSIVE ${dailyCentsSql("d0", materialized = true)},
+        |${seriesRankSql("d", "d0")},
         |ini AS MATERIALIZED (
         |  SELECT event_type,
         |    CAST(sum(y) // 7 AS BIGINT) AS l0,
@@ -4928,11 +4836,7 @@ object EventQueries {
         |FROM rec WHERE rn >= 8
         |ORDER BY event_type, day""".stripMargin) { (s, d) =>
       import s.implicits._
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(sum(round(greatest(col("value"), lit(0)) * 100, 0).cast("long"))
-          .as("y"))
+      val daily = dailyCents(Tables.events(s, d))
         .as[(String, Long, Long)]
       daily.groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>

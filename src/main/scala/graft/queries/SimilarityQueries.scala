@@ -95,13 +95,7 @@ object SimilarityQueries {
          |  SELECT query_id, v.vec_id AS neighbor_id,
          |         round(${dotSql("qv", "v.embedding")} / (qn * v.nrm), 6) AS cos
          |  FROM q JOIN v ON v.vec_id <> query_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM pairs)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
-         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+         |${rankedTopKSql(5)}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 5)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
@@ -132,13 +126,7 @@ object SimilarityQueries {
          |  SELECT query_id, v.vec_id AS neighbor_id,
          |         round(${dotSql("qv", "v.embedding")} / (qn * v.nrm), 6) AS cos
          |  FROM q JOIN v ON v.bucket = q.bucket AND v.vec_id <> query_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM pairs)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
-         |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+         |${rankedTopKSql(3)}""".stripMargin) { (s, d) =>
       Similarity.bucketedTopK(Tables.embeddings(s, d), col("vec_id") < 20, Dim, 4, 3)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), col("cos"))
@@ -172,37 +160,14 @@ object SimilarityQueries {
     // cell assignment by argmin distance, search within the query's cell —
     // the inverted-file counterpart to q42's data-independent LSH buckets.
     QueryDef("q53_ivf_ann",
-      s"""WITH cent AS (
-         |  SELECT label AS cell_id, list(m ORDER BY dim) AS centroid
-         |  FROM (SELECT label, i AS dim, avg(CAST(embedding[i + 1] AS DOUBLE)) AS m
-         |        FROM embeddings, (SELECT unnest(range(0, $Dim)) AS i)
-         |        GROUP BY label, i)
-         |  GROUP BY label),
-         |assigned AS (
-         |  SELECT vec_id, embedding, cell_id, ${normSql("embedding")} AS nrm
-         |  FROM (
-         |    SELECT e.vec_id, e.embedding, c.cell_id,
-         |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |               list_transform(range(1, ${Dim + 1}),
-         |                 i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-         |                    * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]))),
-         |               (x, y) -> x + y), 6), c.cell_id) AS rn
-         |    FROM embeddings e CROSS JOIN cent c) t
-         |  WHERE rn = 1),
+      s"""WITH ${ivfCellsSql(materialized = false)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn, cell_id
          |      FROM assigned WHERE vec_id < 20),
          |pairs AS (
          |  SELECT query_id, a.vec_id AS neighbor_id,
          |         round(${dotSql("qv", "a.embedding")} / (qn * a.nrm), 6) AS cos
          |  FROM q JOIN assigned a ON a.cell_id = q.cell_id AND a.vec_id <> query_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |         row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM pairs)
-         |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
-         |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+         |${rankedTopKSql(3)}""".stripMargin) { (s, d) =>
       Similarity.ivfTopK(Tables.embeddings(s, d), col("vec_id") < 20, Dim, 3)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), col("cos"))
@@ -615,34 +580,8 @@ object SimilarityQueries {
          |  FROM embeddings),
          |q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
          |      FROM v WHERE vec_id < 20),
-         |tpairs AS (
-         |  SELECT query_id, v.vec_id AS neighbor_id,
-         |         round(${dotSql("qv", "v.embedding")} / (qn * v.nrm), 6) AS cos
-         |  FROM q JOIN v ON v.vec_id <> query_id),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM tpairs) t WHERE rank <= 10),
-         |cent AS MATERIALIZED (
-         |  SELECT label AS cell_id, list(m ORDER BY dim) AS centroid
-         |  FROM (SELECT label, i AS dim, avg(CAST(embedding[i + 1] AS DOUBLE)) AS m
-         |        FROM embeddings, (SELECT unnest(range(0, $Dim)) AS i)
-         |        GROUP BY label, i)
-         |  GROUP BY label),
-         |assigned AS MATERIALIZED (
-         |  SELECT vec_id, embedding, cell_id, ${normSql("embedding")} AS nrm
-         |  FROM (
-         |    SELECT e.vec_id, e.embedding, c.cell_id,
-         |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |               list_transform(range(1, ${Dim + 1}),
-         |                 i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
-         |                    * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]))),
-         |               (x, y) -> x + y), 6), c.cell_id) AS rn
-         |    FROM embeddings e CROSS JOIN cent c) t
-         |  WHERE rn = 1),
+         |${truthSql("query_id", "qv", 10)},
+         |${ivfCellsSql(materialized = true)},
          |iq AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn, cell_id
          |       FROM assigned WHERE vec_id < 20),
          |ipairs AS (
@@ -650,36 +589,13 @@ object SimilarityQueries {
          |         round(${dotSql("qv", "a.embedding")} / (qn * a.nrm), 6) AS cos
          |  FROM iq JOIN assigned a
          |    ON a.cell_id = iq.cell_id AND a.vec_id <> query_id),
-         |iv AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM ipairs) t WHERE rank <= 10),
-         |per AS (SELECT t.query_id, CAST(count(iv.neighbor_id) AS BIGINT) AS hits
-         |        FROM truth t LEFT JOIN iv
-         |          ON iv.query_id = t.query_id AND iv.neighbor_id = t.neighbor_id
-         |        GROUP BY t.query_id),
-         |th AS (SELECT CAST(sum(hits) AS BIGINT) AS th FROM per)
-         |SELECT query_id, hits,
-         |       CAST(hits * 1000000 // 10 AS BIGINT) AS recall_ppm,
-         |       CAST(th * 1000000 // 200 AS BIGINT) AS mean_recall_ppm
-         |FROM per, th ORDER BY query_id""".stripMargin) { (s, d) =>
+         |${cosTopKSql("iv", "ipairs", 10)},
+         |${recallPpmSql("iv", "query_id", "neighbor_id", 20, 10)}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val truth = Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 10)
         .select(col("query_id"), col("neighbor_id"))
-      val ivf = Similarity.ivfTopK(emb, col("vec_id") < 20, Dim, 10)
-        .select(col("query_id").as("iq"), col("neighbor_id").as("inb"))
-      val per = truth.join(ivf,
-          col("query_id") === col("iq") && col("neighbor_id") === col("inb"),
-          "left")
-        .groupBy("query_id").agg(count(col("inb")).as("hits"))
-      val th = per.agg(sum("hits").as("th"))
-      per.crossJoin(broadcast(th))
-        .select(col("query_id"), col("hits"),
-          expr("hits * 1000000 div 10").as("recall_ppm"),
-          expr("th * 1000000 div 200").as("mean_recall_ppm"))
-        .orderBy("query_id")
+      recallPpm(truth, Similarity.ivfTopK(emb, col("vec_id") < 20, Dim, 10),
+        20, 10)
     },
 
     // IVF with LEARNED cells + multi-probe, graded on q200's exact harness:
@@ -700,28 +616,8 @@ object SimilarityQueries {
          |  FROM embeddings),
          |q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
          |      FROM v WHERE vec_id < 20),
-         |tpairs AS (
-         |  SELECT query_id, v.vec_id AS neighbor_id,
-         |         round(${dotSql("qv", "v.embedding")} / (qn * v.nrm), 6) AS cos
-         |  FROM q JOIN v ON v.vec_id <> query_id),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM tpairs) t WHERE rank <= 10),
-         |probes AS MATERIALIZED (
-         |  SELECT query_id, cluster FROM (
-         |    SELECT q2.vec_id AS query_id, c.cluster,
-         |           row_number() OVER (PARTITION BY q2.vec_id ORDER BY
-         |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |               list_transform(range(1, ${Dim + 1}),
-         |                 i -> (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i])
-         |                    * (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i]))),
-         |               (x, y) -> x + y), 6), c.cluster) AS rn
-         |    FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20) q2
-         |    CROSS JOIN c2 c) t
-         |  WHERE rn <= 2),
+         |${truthSql("query_id", "qv", 10)},
+         |${probesSql("probes", "query_id, cluster", 2)},
          |ipairs AS (
          |  SELECT p.query_id, a.vec_id AS neighbor_id,
          |         round(${dotSql("q.qv", "a.embedding")} / (q.qn * nb.nrm), 6)
@@ -730,37 +626,13 @@ object SimilarityQueries {
          |  JOIN q ON q.query_id = p.query_id
          |  JOIN a3 a ON a.cluster = p.cluster AND a.vec_id <> p.query_id
          |  JOIN v nb ON nb.vec_id = a.vec_id),
-         |iv AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM ipairs) t WHERE rank <= 10),
-         |per AS (SELECT t.query_id, CAST(count(iv.neighbor_id) AS BIGINT) AS hits
-         |        FROM truth t LEFT JOIN iv
-         |          ON iv.query_id = t.query_id AND iv.neighbor_id = t.neighbor_id
-         |        GROUP BY t.query_id),
-         |th AS (SELECT CAST(sum(hits) AS BIGINT) AS th FROM per)
-         |SELECT query_id, hits,
-         |       CAST(hits * 1000000 // 10 AS BIGINT) AS recall_ppm,
-         |       CAST(th * 1000000 // 200 AS BIGINT) AS mean_recall_ppm
-         |FROM per, th ORDER BY query_id""".stripMargin) { (s, d) =>
+         |${cosTopKSql("iv", "ipairs", 10)},
+         |${recallPpmSql("iv", "query_id", "neighbor_id", 20, 10)}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val truth = Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 20), 10)
         .select(col("query_id"), col("neighbor_id"))
-      val ivf = Similarity.ivfKmeansTopK(emb, col("vec_id") < 20, Dim, 10,
-          cells = 8, iters = 2, nprobe = 2)
-        .select(col("query_id").as("iq"), col("neighbor_id").as("inb"))
-      val per = truth.join(ivf,
-          col("query_id") === col("iq") && col("neighbor_id") === col("inb"),
-          "left")
-        .groupBy("query_id").agg(count(col("inb")).as("hits"))
-      val th = per.agg(sum("hits").as("th"))
-      per.crossJoin(broadcast(th))
-        .select(col("query_id"), col("hits"),
-          expr("hits * 1000000 div 10").as("recall_ppm"),
-          expr("th * 1000000 div 200").as("mean_recall_ppm"))
-        .orderBy("query_id")
+      recallPpm(truth, Similarity.ivfKmeansTopK(emb, col("vec_id") < 20, Dim,
+        10, cells = 8, iters = 2, nprobe = 2), 20, 10)
     },
 
     // Label-confusability diagnostic: which classes sit closest in
@@ -835,28 +707,8 @@ object SimilarityQueries {
          |  FROM embeddings),
          |q AS (SELECT vec_id AS query_id, embedding AS qv, nrm AS qn
          |      FROM v WHERE vec_id < 20),
-         |tpairs AS (
-         |  SELECT query_id, v.vec_id AS neighbor_id,
-         |         round(${dotSql("qv", "v.embedding")} / (qn * v.nrm), 6) AS cos
-         |  FROM q JOIN v ON v.vec_id <> query_id),
-         |truth AS MATERIALIZED (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM tpairs) t WHERE rank <= 10),
-         |pr AS MATERIALIZED (
-         |  SELECT query_id, cluster, rn FROM (
-         |    SELECT q2.vec_id AS query_id, c.cluster,
-         |           row_number() OVER (PARTITION BY q2.vec_id ORDER BY
-         |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |               list_transform(range(1, ${Dim + 1}),
-         |                 i -> (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i])
-         |                    * (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i]))),
-         |               (x, y) -> x + y), 6), c.cluster) AS rn
-         |    FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20) q2
-         |    CROSS JOIN c2 c) t
-         |  WHERE rn <= 4),
+         |${truthSql("query_id", "qv", 10)},
+         |${probesSql("pr", "query_id, cluster, rn", 4)},
          |axis AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS np),
          |probes AS (SELECT axis.np, pr.query_id, pr.cluster
          |           FROM pr JOIN axis ON pr.rn <= axis.np),
@@ -2157,6 +2009,105 @@ object SimilarityQueries {
       .orderBy("query_id")
   }
 
+  /** DuckDB twin of [[recallPpm]] over the `truth` CTE ([[truthSql]]):
+    * `found` carries the query and neighbor ids as `qid` / `nid`.
+    */
+  private[queries] def recallPpmSql(found: String, qid: String, nid: String,
+                                    nq: Int, k: Int): String =
+    s"""per AS (SELECT t.query_id, CAST(count($found.$nid) AS BIGINT) AS hits
+       |        FROM truth t LEFT JOIN $found
+       |          ON $found.$qid = t.query_id AND $found.$nid = t.neighbor_id
+       |        GROUP BY t.query_id),
+       |th AS (SELECT CAST(sum(hits) AS BIGINT) AS th FROM per)
+       |SELECT query_id, hits,
+       |       CAST(hits * 1000000 // $k AS BIGINT) AS recall_ppm,
+       |       CAST(th * 1000000 // ${nq * k} AS BIGINT) AS mean_recall_ppm
+       |FROM per, th ORDER BY query_id""".stripMargin
+
+  /** DuckDB twin of [[Similarity.bruteForceTopK]]'s ranking: CTE `name`
+    * keeps the (query_id, neighbor_id) of each query's `k` best `pairs` rows
+    * by (rounded cos DESC, neighbor_id).
+    */
+  private[queries] def cosTopKSql(name: String, pairs: String, k: Int): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, neighbor_id,
+       |           row_number() OVER (PARTITION BY query_id
+       |             ORDER BY cos DESC, neighbor_id) AS rank
+       |    FROM $pairs) t WHERE rank <= $k)""".stripMargin
+
+  /** The exact recall truth: `tpairs` (every query × corpus pair's rounded
+    * cosine, self excluded) and its top-k as `truth`. `q` carries the query
+    * id and vector as `qid` / `qv` and the norm as `qn`; `v` is
+    * (vec_id, embedding, nrm).
+    */
+  private[queries] def truthSql(qid: String, qv: String, k: Int): String = {
+    val (sel, self) =
+      if (qid == "query_id") (qid, qid) else (s"$qid AS query_id", s"q.$qid")
+    s"""tpairs AS (
+       |  SELECT $sel, v.vec_id AS neighbor_id,
+       |         round(${dotSql(qv, "v.embedding")} / (qn * v.nrm), 6) AS cos
+       |  FROM q JOIN v ON v.vec_id <> $self),
+       |${cosTopKSql("truth", "tpairs", k)}""".stripMargin
+  }
+
+  /** DuckDB twin of [[Similarity.ivfTopK]]'s quantizer: per-label
+    * centroids `cent` and each vector's nearest cell in `assigned`
+    * (vec_id, embedding, cell_id, nrm), by rounded squared distance with a
+    * cell-id tie-break.
+    */
+  private def ivfCellsSql(materialized: Boolean): String = {
+    val m = if (materialized) "MATERIALIZED " else ""
+    s"""cent AS $m(
+       |  SELECT label AS cell_id, list(m ORDER BY dim) AS centroid
+       |  FROM (SELECT label, i AS dim, avg(CAST(embedding[i + 1] AS DOUBLE)) AS m
+       |        FROM embeddings, (SELECT unnest(range(0, $Dim)) AS i)
+       |        GROUP BY label, i)
+       |  GROUP BY label),
+       |assigned AS $m(
+       |  SELECT vec_id, embedding, cell_id, ${normSql("embedding")} AS nrm
+       |  FROM (
+       |    SELECT e.vec_id, e.embedding, c.cell_id,
+       |           row_number() OVER (PARTITION BY e.vec_id ORDER BY
+       |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |               list_transform(range(1, ${Dim + 1}),
+       |                 i -> (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i])
+       |                    * (CAST(e.embedding[i] AS DOUBLE) - c.centroid[i]))),
+       |               (x, y) -> x + y), 6), c.cell_id) AS rn
+       |    FROM embeddings e CROSS JOIN cent c) t
+       |  WHERE rn = 1)""".stripMargin
+  }
+
+  /** DuckDB twin of [[Similarity.ivfKmeansTopK]]'s probe ranking: CTE
+    * `name` with the `cols` of each of the 20 queries' `nprobe` nearest
+    * k-means cells of `c2` (rounded distance, cluster tie-break).
+    */
+  private def probesSql(name: String, cols: String, nprobe: Int): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT $cols FROM (
+       |    SELECT q2.vec_id AS query_id, c.cluster,
+       |           row_number() OVER (PARTITION BY q2.vec_id ORDER BY
+       |             round(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |               list_transform(range(1, ${Dim + 1}),
+       |                 i -> (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i])
+       |                    * (CAST(q2.embedding[i] AS DOUBLE) - c.centroid[i]))),
+       |               (x, y) -> x + y), 6), c.cluster) AS rn
+       |    FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20) q2
+       |    CROSS JOIN c2 c) t
+       |  WHERE rn <= $nprobe)""".stripMargin
+
+  /** [[Similarity.bruteForceTopK]]'s full output over `pairs`: the `k`
+    * best neighbors per query with their rank and cosine.
+    */
+  private def rankedTopKSql(k: Int): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, cos,
+       |         row_number() OVER (PARTITION BY query_id
+       |           ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM pairs)
+       |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cos
+       |FROM ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+
   /** q260/q266 shared single-layer harness: walk from the smallest-id
     * entry, Hops × Beam, then grade. `v` = (vec_id, embedding, nrm),
     * persisted by the caller.
@@ -3402,6 +3353,7 @@ private[queries] object MmrSql {
   * sub-cap contract).
   */
 private[queries] object PqRecallSql {
+  import SimilarityQueries.recallPpmSql
   val M = 8
   val Ksub = 16
   val Sub = 8
@@ -3489,15 +3441,7 @@ private[queries] object PqRecallSql {
        |             AS rank
        |    FROM qq q JOIN vv v ON v.vec_id <> q.qid) t
        |  WHERE rank <= 10),
-       |per AS (SELECT t.query_id, CAST(count(rr.neighbor_id) AS BIGINT) AS hits
-       |        FROM truth t LEFT JOIN rr
-       |          ON rr.query_id = t.query_id AND rr.neighbor_id = t.neighbor_id
-       |        GROUP BY t.query_id),
-       |th AS (SELECT CAST(sum(hits) AS BIGINT) AS th FROM per)
-       |SELECT query_id, hits,
-       |       CAST(hits * 1000000 // 10 AS BIGINT) AS recall_ppm,
-       |       CAST(th * 1000000 // ${Nq * 10} AS BIGINT) AS mean_recall_ppm
-       |FROM per, th ORDER BY query_id""".stripMargin
+       |${recallPpmSql("rr", "query_id", "neighbor_id", Nq, 10)}""".stripMargin
 
   private val vvCte =
     """vv AS MATERIALIZED (
@@ -3587,7 +3531,7 @@ private[queries] object NswSql {
   val Beam = 16
   val Hops = 6
   val Nq = 20
-  import SimilarityQueries.{dotSql, normSql}
+  import SimilarityQueries.{dotSql, normSql, recallPpmSql, truthSql}
 
   /** One beam-search hop over graph CTE `graph`, frontier `prev` → `cur`,
     * keeping `beam` per query (graph/beam parameterized so the two-layer
@@ -3624,25 +3568,8 @@ private[queries] object NswSql {
        |    FROM $last f JOIN v ON v.vec_id = f.vid JOIN q ON q.qid = f.qid
        |    WHERE f.vid <> f.qid) t
        |  WHERE rn <= 10),
-       |tpairs AS (
-       |  SELECT qid AS query_id, v.vec_id AS neighbor_id,
-       |         round(${dotSql("qe", "v.embedding")} / (qn * v.nrm), 6) AS cos
-       |  FROM q JOIN v ON v.vec_id <> q.qid),
-       |truth AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |             ORDER BY cos DESC, neighbor_id) AS rank
-       |    FROM tpairs) t WHERE rank <= 10),
-       |per AS (SELECT t.query_id, CAST(count(found.vid) AS BIGINT) AS hits
-       |        FROM truth t LEFT JOIN found
-       |          ON found.qid = t.query_id AND found.vid = t.neighbor_id
-       |        GROUP BY t.query_id),
-       |th AS (SELECT CAST(sum(hits) AS BIGINT) AS th FROM per)
-       |SELECT query_id, hits,
-       |       CAST(hits * 1000000 // 10 AS BIGINT) AS recall_ppm,
-       |       CAST(th * 1000000 // ${Nq * 10} AS BIGINT) AS mean_recall_ppm
-       |FROM per, th ORDER BY query_id""".stripMargin
+       |${truthSql("qid", "qe", 10)},
+       |${recallPpmSql("found", "qid", "vid", Nq, 10)}""".stripMargin
 
   /** The full search+recall oracle over ANY graph CTE chain ending in
     * `g(src, dst)` — the walk, the truth, and the recall arithmetic are
@@ -3945,7 +3872,7 @@ private[queries] object RefreshSql {
   * reduced to one (beam, mean_recall_ppm) row against the shared truth.
   */
 private[queries] object BeamSweepSql {
-  import SimilarityQueries.{dotSql, normSql}
+  import SimilarityQueries.{dotSql, normSql, truthSql}
   import graft.operators.NswGraph
 
   val sql: String = {
@@ -3980,16 +3907,7 @@ private[queries] object BeamSweepSql {
        |q AS (SELECT vec_id AS qid, embedding AS qe, nrm AS qn
        |      FROM v WHERE vec_id < ${NswSql.Nq}),
        |f0 AS (SELECT q.qid, (SELECT min(vec_id) FROM v) AS vid FROM q),
-       |tpairs AS (
-       |  SELECT qid AS query_id, v.vec_id AS neighbor_id,
-       |         round(${dotSql("qe", "v.embedding")} / (qn * v.nrm), 6) AS cos
-       |  FROM q JOIN v ON v.vec_id <> q.qid),
-       |truth AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |             ORDER BY cos DESC, neighbor_id) AS rank
-       |    FROM tpairs) t WHERE rank <= 10),
+       |${truthSql("qid", "qe", 10)},
        |${walk(8)},
        |${walk(16)},
        |${walk(32)}
@@ -4015,15 +3933,36 @@ private[graft] object RankMetricsSql {
   val WE6: Seq[Long] = Seq(1000000L, 630930L, 500000L, 430677L, 386853L,
     356207L, 333333L, 315465L, 301030L, 289065L)
 
-  private def dotKSql(a: String, b: String, k: Int): String =
+  private[queries] def dotKSql(a: String, b: String, k: Int): String =
     s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |  list_transform(range(1, ${k + 1}),
        |    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))),
        |  (x, y) -> x + y)""".stripMargin
 
-  val sql: String = {
+  /** The graded-relevance truth every rank-metric oracle grades against:
+    * `v`, the 20 queries `qt`, `truth` (qid, cid, rel = 11 − exact cosine
+    * rank, top-10 only), the discount table `w` and the ideal DCG `idcg`.
+    */
+  private[queries] def gradedTruthSql(materialized: Boolean): String = {
     val wRows = WE6.zipWithIndex
       .map { case (w, i) => s"(${i + 1}, $w)" }.mkString(", ")
+    val m = if (materialized) "MATERIALIZED " else ""
+    s"""v AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
+       |      FROM embeddings),
+       |qt AS (SELECT vec_id AS qid, embedding AS qe, nrm AS tqn FROM v
+       |       WHERE vec_id < ${NswSql.Nq}),
+       |truth AS $m(SELECT qid, cid, CAST(11 - tr AS BIGINT) AS rel FROM (
+       |    SELECT qt.qid, v.vec_id AS cid,
+       |           row_number() OVER (PARTITION BY qt.qid
+       |             ORDER BY round(${dotSql("qe", "v.embedding")}
+       |                            / (tqn * v.nrm), 6) DESC, v.vec_id) AS tr
+       |    FROM qt JOIN v ON v.vec_id <> qt.qid) t
+       |  WHERE tr <= 10),
+       |w(i, w_e6) AS (VALUES $wRows),
+       |idcg AS (SELECT CAST(sum((11 - i) * w_e6) AS BIGINT) AS v FROM w)""".stripMargin
+  }
+
+  val sql: String =
     s"""WITH p AS MATERIALIZED (
        |  SELECT vec_id,
        |         list_transform(range(0, $RpDimOut),
@@ -4039,19 +3978,7 @@ private[graft] object RankMetricsSql {
        |                            / (qn * pn.yn), 6) DESC, pn.vec_id) AS r
        |    FROM qp JOIN pn ON pn.vec_id <> qp.qid) t
        |  WHERE r <= 10),
-       |v AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
-       |      FROM embeddings),
-       |qt AS (SELECT vec_id AS qid, embedding AS qe, nrm AS tqn FROM v
-       |       WHERE vec_id < ${NswSql.Nq}),
-       |truth AS (SELECT qid, cid, CAST(11 - tr AS BIGINT) AS rel FROM (
-       |    SELECT qt.qid, v.vec_id AS cid,
-       |           row_number() OVER (PARTITION BY qt.qid
-       |             ORDER BY round(${dotSql("qe", "v.embedding")}
-       |                            / (tqn * v.nrm), 6) DESC, v.vec_id) AS tr
-       |    FROM qt JOIN v ON v.vec_id <> qt.qid) t
-       |  WHERE tr <= 10),
-       |w(i, w_e6) AS (VALUES $wRows),
-       |idcg AS (SELECT CAST(sum((11 - i) * w_e6) AS BIGINT) AS v FROM w),
+       |${gradedTruthSql(materialized = false)},
        |g AS (SELECT f.qid, f.r, coalesce(t.rel, 0) AS rel, w.w_e6
        |      FROM found f LEFT JOIN truth t ON t.qid = f.qid AND t.cid = f.cid
        |      JOIN w ON w.i = f.r),
@@ -4071,7 +3998,6 @@ private[graft] object RankMetricsSql {
        |            ELSE 1000000 // pq.fr END AS BIGINT) AS rr_ppm,
        |       m.mean_ndcg_ppm, m.mean_rr_ppm
        |FROM pq, idcg, m ORDER BY query_id""".stripMargin
-  }
 }
 
 /** Oracle for q296: q295's graded harness instantiated per rung — the
@@ -4081,14 +4007,10 @@ private[graft] object RankMetricsSql {
   * method with the same pinned-discount integer arithmetic.
   */
 private[queries] object RankLadderSql {
-  import SimilarityQueries.{dotSql, normSql, Dim, RpDimOut, RpSeed}
+  import SimilarityQueries.{Dim, RpDimOut, RpSeed}
   import graft.operators.RandomProjection
 
-  private def dotKSql(a: String, b: String, k: Int): String =
-    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |  list_transform(range(1, ${k + 1}),
-       |    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))),
-       |  (x, y) -> x + y)""".stripMargin
+  import RankMetricsSql.dotKSql
 
   /** Rung chain for method `m` over candidate CTE `${m}y(vec_id, y)` of
     * dimension `k`, ending in the one-row summary `${m}s`.
@@ -4124,23 +4046,8 @@ private[queries] object RankLadderSql {
        |          AS mean_ndcg_ppm
        |      FROM ${m}p, idcg)""".stripMargin
 
-  val sql: String = {
-    val wRows = RankMetricsSql.WE6.zipWithIndex
-      .map { case (w, i) => s"(${i + 1}, $w)" }.mkString(", ")
-    s"""WITH v AS (SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
-       |      FROM embeddings),
-       |qt AS (SELECT vec_id AS qid, embedding AS qe, nrm AS tqn FROM v
-       |       WHERE vec_id < ${NswSql.Nq}),
-       |truth AS MATERIALIZED (
-       |  SELECT qid, cid, CAST(11 - tr AS BIGINT) AS rel FROM (
-       |    SELECT qt.qid, v.vec_id AS cid,
-       |           row_number() OVER (PARTITION BY qt.qid
-       |             ORDER BY round(${dotSql("qe", "v.embedding")}
-       |                            / (tqn * v.nrm), 6) DESC, v.vec_id) AS tr
-       |    FROM qt JOIN v ON v.vec_id <> qt.qid) t
-       |  WHERE tr <= 10),
-       |w(i, w_e6) AS (VALUES $wRows),
-       |idcg AS (SELECT CAST(sum((11 - i) * w_e6) AS BIGINT) AS v FROM w),
+  val sql: String =
+    s"""WITH ${RankMetricsSql.gradedTruthSql(materialized = true)},
        |e AS (SELECT vec_id,
        |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS x
        |      FROM embeddings),
@@ -4171,7 +4078,6 @@ private[queries] object RankLadderSql {
        |UNION ALL
        |SELECT 'jl16', recall10_ppm, mean_rr_ppm, mean_ndcg_ppm FROM jls
        |ORDER BY method""".stripMargin
-  }
 }
 
 /** Oracle for q156: q121's BM25 CTE chain restricted to the one lexical

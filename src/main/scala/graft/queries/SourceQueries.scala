@@ -22,6 +22,31 @@ object SourceQueries {
   private def tmp(name: String, sfDir: String) =
     s"/tmp/graft_src_${name}_${math.abs(sfDir.hashCode.toLong)}"
 
+  /** The WebDataset fixture's pixels replayed arithmetically: CTE `v`
+    * (gid, w, h, ch, p), one row per channel byte of image `gid` (q166,
+    * q173, q252).
+    */
+  private val wdsPixelsSql =
+    s"""dims AS (SELECT gid, 8 + (gid % 3) * 4 AS w, 6 + (gid % 2) * 4 AS h
+       |              FROM (SELECT unnest(range(0, 16)) AS gid)),
+       |px AS (SELECT gid, w, h, unnest(range(0, w * h * 3)) AS f FROM dims),
+       |v AS (SELECT gid, w, h, f % 3 AS ch,
+       |             (f * ${graft.functions.Hashes.Mult} + 149 * gid) % 256 AS p
+       |      FROM px)""".stripMargin
+
+  /** Per-image dimensions, [[graft.operators.MediaCodecs.channelSums]] and
+    * caption over [[wdsPixelsSql]], keyed by `key`.
+    */
+  private val wdsSumsSql =
+    """CAST(max(w) AS INTEGER) AS width,
+      |       CAST(max(h) AS INTEGER) AS height,
+      |       CAST(sum(CASE WHEN ch = 0 THEN p END) AS BIGINT) AS sum_r,
+      |       CAST(sum(CASE WHEN ch = 1 THEN p END) AS BIGINT) AS sum_g,
+      |       CAST(sum(CASE WHEN ch = 2 THEN p END) AS BIGINT) AS sum_b,
+      |       'caption ' || CAST(gid AS VARCHAR) || ' ' ||
+      |         CAST((gid * 7) % 100 AS VARCHAR) AS txt
+      |FROM v GROUP BY gid ORDER BY key""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // CSV sink → schema'd CSV scan → aggregate; oracle aggregates the
@@ -300,36 +325,17 @@ object SourceQueries {
     // the file is the parallel unit, which is exactly why the convention
     // shards corpora into many tars; decode is row-local.
     QueryDef("q166_webdataset_scan",
-      s"""WITH dims AS (SELECT gid, 8 + (gid % 3) * 4 AS w, 6 + (gid % 2) * 4 AS h
-         |              FROM (SELECT unnest(range(0, 16)) AS gid)),
-         |px AS (SELECT gid, w, h, unnest(range(0, w * h * 3)) AS f FROM dims),
-         |v AS (SELECT gid, w, h, f % 3 AS ch,
-         |             (f * ${graft.functions.Hashes.Mult} + 149 * gid) % 256 AS p
-         |      FROM px)
+      s"""WITH $wdsPixelsSql
          |SELECT 'shard_' || CAST(gid // 8 AS VARCHAR) || '.tar' AS shard,
          |       lpad(CAST(gid AS VARCHAR), 6, '0') AS key,
-         |       CAST(max(w) AS INTEGER) AS width,
-         |       CAST(max(h) AS INTEGER) AS height,
-         |       CAST(sum(CASE WHEN ch = 0 THEN p END) AS BIGINT) AS sum_r,
-         |       CAST(sum(CASE WHEN ch = 1 THEN p END) AS BIGINT) AS sum_g,
-         |       CAST(sum(CASE WHEN ch = 2 THEN p END) AS BIGINT) AS sum_b,
-         |       'caption ' || CAST(gid AS VARCHAR) || ' '
-         |         || CAST((gid * 7) % 100 AS VARCHAR) AS txt
-         |FROM v GROUP BY gid ORDER BY key""".stripMargin) { (s, _) =>
+         |       $wdsSumsSql""".stripMargin) { (s, _) =>
       import s.implicits._
       graft.sources.WebDatasetIngest
         .scanSamples(s, ContainerFixtures.dir("webdataset"), "*.tar")
         .as[(String, String, Array[Byte], String)]
         .map { case (shard, key, image, txt) =>
           val img = graft.operators.MediaCodecs.decodePpm(image)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var i = 0
-          while (i < img.pixels.length) {
-            sr += img.pixels(i) & 0xff
-            sg += img.pixels(i + 1) & 0xff
-            sb += img.pixels(i + 2) & 0xff
-            i += 3
-          }
+          val (sr, sg, sb) = graft.operators.MediaCodecs.channelSums(img.pixels)
           (shard, key, img.width, img.height, sr, sg, sb, txt)
         }
         .toDF("shard", "key", "width", "height", "sum_r", "sum_g", "sum_b", "txt")
@@ -345,21 +351,9 @@ object SourceQueries {
     // one wrong octal size field, checksum, member boundary, or padded
     // byte on the write path is a hash mismatch through the decode.
     QueryDef("q173_webdataset_roundtrip",
-      s"""WITH dims AS (SELECT gid, 8 + (gid % 3) * 4 AS w, 6 + (gid % 2) * 4 AS h
-         |              FROM (SELECT unnest(range(0, 16)) AS gid)),
-         |px AS (SELECT gid, w, h, unnest(range(0, w * h * 3)) AS f FROM dims),
-         |v AS (SELECT gid, w, h, f % 3 AS ch,
-         |             (f * ${graft.functions.Hashes.Mult} + 149 * gid) % 256 AS p
-         |      FROM px)
+      s"""WITH $wdsPixelsSql
          |SELECT lpad(CAST(gid AS VARCHAR), 6, '0') AS key,
-         |       CAST(max(w) AS INTEGER) AS width,
-         |       CAST(max(h) AS INTEGER) AS height,
-         |       CAST(sum(CASE WHEN ch = 0 THEN p END) AS BIGINT) AS sum_r,
-         |       CAST(sum(CASE WHEN ch = 1 THEN p END) AS BIGINT) AS sum_g,
-         |       CAST(sum(CASE WHEN ch = 2 THEN p END) AS BIGINT) AS sum_b,
-         |       'caption ' || CAST(gid AS VARCHAR) || ' '
-         |         || CAST((gid * 7) % 100 AS VARCHAR) AS txt
-         |FROM v GROUP BY gid ORDER BY key""".stripMargin) { (s, d) =>
+         |       $wdsSumsSql""".stripMargin) { (s, d) =>
       import s.implicits._
       val dir = tmp("wds", d)
       graft.sources.WebDatasetIngest.writeSamples(
@@ -372,14 +366,7 @@ object SourceQueries {
         .as[(String, String, Array[Byte], String)]
         .map { case (_, key, image, txt) =>
           val img = graft.operators.MediaCodecs.decodePpm(image)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var i = 0
-          while (i < img.pixels.length) {
-            sr += img.pixels(i) & 0xff
-            sg += img.pixels(i + 1) & 0xff
-            sb += img.pixels(i + 2) & 0xff
-            i += 3
-          }
+          val (sr, sg, sb) = graft.operators.MediaCodecs.channelSums(img.pixels)
           (key, img.width, img.height, sr, sg, sb, txt)
         }
         .toDF("key", "width", "height", "sum_r", "sum_g", "sum_b", "txt")
@@ -399,21 +386,9 @@ object SourceQueries {
     // chain is a hash mismatch. Scale: decode/encode are row-local; shard
     // count = partition count on both sides.
     QueryDef("q252_transcode",
-      s"""WITH dims AS (SELECT gid, 8 + (gid % 3) * 4 AS w, 6 + (gid % 2) * 4 AS h
-         |              FROM (SELECT unnest(range(0, 16)) AS gid)),
-         |px AS (SELECT gid, w, h, unnest(range(0, w * h * 3)) AS f FROM dims),
-         |v AS (SELECT gid, w, h, f % 3 AS ch,
-         |             (f * ${graft.functions.Hashes.Mult} + 149 * gid) % 256 AS p
-         |      FROM px)
+      s"""WITH $wdsPixelsSql
          |SELECT lpad(CAST(gid AS VARCHAR), 6, '0') AS key,
-         |       CAST(max(w) AS INTEGER) AS width,
-         |       CAST(max(h) AS INTEGER) AS height,
-         |       CAST(sum(CASE WHEN ch = 0 THEN p END) AS BIGINT) AS sum_r,
-         |       CAST(sum(CASE WHEN ch = 1 THEN p END) AS BIGINT) AS sum_g,
-         |       CAST(sum(CASE WHEN ch = 2 THEN p END) AS BIGINT) AS sum_b,
-         |       'caption ' || CAST(gid AS VARCHAR) || ' '
-         |         || CAST((gid * 7) % 100 AS VARCHAR) AS txt
-         |FROM v GROUP BY gid ORDER BY key""".stripMargin) { (s, d) =>
+         |       $wdsSumsSql""".stripMargin) { (s, d) =>
       import s.implicits._
       val dir = tmp("transcode", d)
       val samples = graft.sources.WebDatasetIngest
@@ -421,14 +396,7 @@ object SourceQueries {
         .as[(String, String, Array[Byte], String)]
         .map { case (_, key, image, txt) =>
           val img = graft.operators.MediaCodecs.decodePpm(image)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var i = 0
-          while (i < img.pixels.length) {
-            sr += img.pixels(i) & 0xff
-            sg += img.pixels(i + 1) & 0xff
-            sb += img.pixels(i + 2) & 0xff
-            i += 3
-          }
+          val (sr, sg, sb) = graft.operators.MediaCodecs.channelSums(img.pixels)
           (key.toLong,
             Seq(img.width.toLong, img.height.toLong, sr, sg, sb), txt)
         }

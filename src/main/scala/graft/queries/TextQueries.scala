@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.functions.Hashes
-import graft.operators.{MinHash, Split}
+import graft.operators.{MinHash, PageRank, Split}
 
 /** Training-data text pipeline ops over `documents` (north-star brief):
   * exact dedup, token stats, quality scoring, language-ID, fingerprinting.
@@ -1309,20 +1309,6 @@ object TextQueries {
     // Top-20 by (rank DESC, word) with the oracle replaying the same
     // dictionary, edges, and both PageRank rounds.
     QueryDef("q309_textrank", {
-      def m(k: Int, prev: String) =
-        s"""d$k AS (
-           |  SELECT coalesce(sum(CAST(round(p.r * 1e12, 0) AS BIGINT)), 0) AS dm
-           |  FROM $prev p WHERE NOT EXISTS (SELECT 1 FROM deg WHERE deg.src = p.id)),
-           |m$k AS (
-           |  SELECT e.dst AS id,
-           |         sum(CAST(round(p.r / deg.outdeg * 1e12, 0) AS BIGINT)) AS m
-           |  FROM e JOIN $prev p ON e.src = p.id JOIN deg ON deg.src = e.src
-           |  GROUP BY e.dst)""".stripMargin
-      def r(k: Int) =
-        s"""r$k AS (
-           |  SELECT v.id, round((CAST(1.0 AS DOUBLE) - 0.85) / nn.n
-           |    + 0.85 * (coalesce(m$k.m, 0) / 1e12 + (d$k.dm / 1e12) / nn.n), 9) AS r
-           |  FROM v CROSS JOIN nn CROSS JOIN d$k LEFT JOIN m$k ON m$k.id = v.id)""".stripMargin
       s"""WITH t AS (
          |  SELECT string_split(text, ' ') AS toks FROM documents
          |  WHERE len(string_split(text, ' ')) >= 2),
@@ -1345,15 +1331,11 @@ object TextQueries {
          |nn AS (SELECT count(*) AS n FROM v),
          |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
          |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) / nn.n AS r FROM v CROSS JOIN nn),
-         |${m(1, "r0")},
-         |${r(1)},
-         |${m(2, "r1")},
-         |${r(2)}
+         |${PageRank.unrolledSql(2)(PageRank.uniformRankSql)}
          |SELECT vocab.word, round(r2.r, 6) AS textrank
          |FROM r2 JOIN vocab ON vocab.wid = r2.id
          |ORDER BY textrank DESC, word LIMIT 20""".stripMargin
     }) { (s, d) =>
-      import graft.operators.PageRank
       val t = Tables.documents(s, d)
         .select(split(col("text"), " ", -1).as("toks"))
         .where(size(col("toks")) >= 2)
@@ -1825,26 +1807,6 @@ object TextQueries {
     // the same ranking). The top-10 keywords are the graph's hubs — the
     // unsupervised summary a corpus triage pass actually ships.
     QueryDef("q396_textrank", {
-      def m(k: Int, prev: String) =
-        s"""d$k AS (
-           |  SELECT coalesce(sum(CAST(round(p.r * 1e12, 0) AS BIGINT)), 0)
-           |    AS dm
-           |  FROM $prev p WHERE NOT EXISTS (SELECT 1 FROM deg
-           |                                 WHERE deg.src = p.id)),
-           |m$k AS (
-           |  SELECT e.dst AS id,
-           |         sum(CAST(round(p.r / deg.outdeg * 1e12, 0) AS BIGINT))
-           |           AS m
-           |  FROM e JOIN $prev p ON e.src = p.id
-           |  JOIN deg ON deg.src = e.src
-           |  GROUP BY e.dst)""".stripMargin
-      def r(k: Int) =
-        s"""r$k AS (
-           |  SELECT v.id, round((CAST(1.0 AS DOUBLE) - 0.85) / nn.n
-           |    + 0.85 * (coalesce(m$k.m, 0) / 1e12 + (d$k.dm / 1e12) / nn.n),
-           |    9) AS r
-           |  FROM v CROSS JOIN nn CROSS JOIN d$k
-           |  LEFT JOIN m$k ON m$k.id = v.id)""".stripMargin
       s"""WITH pos AS (
          |  SELECT doc_id, i AS p, l[i] AS tok FROM (
          |    SELECT doc_id, string_split(text, ' ') AS l FROM documents) b,
@@ -1870,10 +1832,7 @@ object TextQueries {
          |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
          |r0 AS (SELECT id, CAST(1.0 AS DOUBLE) / nn.n AS r
          |       FROM v CROSS JOIN nn),
-         |${m(1, "r0")},
-         |${r(1)},
-         |${m(2, "r1")},
-         |${r(2)}
+         |${PageRank.unrolledSql(2)(PageRank.uniformRankSql)}
          |SELECT dict.tok AS token, round(r2.r, 6) AS textrank
          |FROM r2 JOIN dict ON dict.id = r2.id
          |ORDER BY textrank DESC, token LIMIT 10""".stripMargin
@@ -1899,7 +1858,7 @@ object TextQueries {
           col("id").as("ib"))), "tb")
       val e = enc.select(col("ia").as("src"), col("ib").as("dst"))
         .unionAll(enc.select(col("ib"), col("ia")))
-      graft.operators.PageRank.pagerank(e, iters = 2)
+      PageRank.pagerank(e, iters = 2)
         .withColumnRenamed("id", "rid")
         .join(broadcast(dict), col("rid") === col("id"))
         .select(col("tok").as("token"), round(col("r"), 6).as("textrank"))

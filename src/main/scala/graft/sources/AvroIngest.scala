@@ -77,9 +77,14 @@ object AvroIngest {
 
   /** Distributed write: one avro container per partition under `dest`, plus
     * a `_SUCCESS` marker. Encoding runs on executors; the driver only
-    * coordinates and stamps the marker.
+    * coordinates and stamps the marker. An existing `dest` is replaced.
     */
   def write(df: DataFrame, dest: String): Unit = {
+    val fs = new Path(dest).getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    // containers of an earlier write with more partitions would otherwise
+    // survive and be read back with this one
+    fs.delete(new Path(dest), true)
     val avroJson = toAvroSchema(df.schema).toString
     val width = df.schema.length
     val written = df.rdd.mapPartitionsWithIndex { case (pid, rows) =>
@@ -106,8 +111,6 @@ object AvroIngest {
       Iterator.single(n)
     }.sum()
     require(written >= 0) // the sum() action is what runs the write
-    val fs = new Path(dest).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     fs.create(new Path(dest, "_SUCCESS"), true).close()
   }
 

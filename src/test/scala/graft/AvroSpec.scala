@@ -56,6 +56,12 @@ class AvroSpec extends AnyFunSuite {
     val files = new java.io.File(dir).listFiles().map(_.getName).sorted
     assert(files.count(_.endsWith(".avro")) == 4, files.mkString(","))
     assert(files.contains("_SUCCESS"))
+    // a re-write with fewer partitions replaces the dataset: no container
+    // of the first write survives to be read back with it
+    AvroIngest.write((1 to 100).toDF("x").repartition(2), dir)
+    val again = new java.io.File(dir).listFiles().map(_.getName)
+    assert(again.count(_.endsWith(".avro")) == 2, again.mkString(","))
+    assert(AvroIngest.read(spark, dir).count() == 100L)
   }
 
   test("unsupported types fail loudly at schema mapping, not mid-write") {

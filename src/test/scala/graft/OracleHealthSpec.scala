@@ -158,5 +158,8 @@ class OracleHealthSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql("q488_running_drawdown") ==
       SparkEntry.oracleSql("q489_stream_drawdown"),
       "q488/q489 oracles diverged — the twins must share one text")
+    assert(SparkEntry.oracleSql("q233_ewma") ==
+      SparkEntry.oracleSql("q256_stream_ewma"),
+      "q233/q256 oracles diverged — the twins must share one text")
   }
 }

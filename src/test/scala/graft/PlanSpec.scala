@@ -56,27 +56,31 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned sink: static partition pruning skips non-matching partitions") {
-    val dir = s"/tmp/graft_pp_${System.nanoTime()}"
-    Tables.documents(spark, TestSpark.sfDir)
-      .write.mode("overwrite").partitionBy("lang").parquet(dir)
-    val scan = spark.read.parquet(dir).where(col("lang") === "en")
-    val p = plan(scan)
-    assert(p.contains("PartitionFilters:"), p)
-    assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*lang[^\\]]*\\].*"), p)
+    Scratch.run(spark, "graft_pp_") { root =>
+      val dir = root.toString
+      Tables.documents(spark, TestSpark.sfDir)
+        .write.mode("overwrite").partitionBy("lang").parquet(dir)
+      val scan = spark.read.parquet(dir).where(col("lang") === "en")
+      val p = plan(scan)
+      assert(p.contains("PartitionFilters:"), p)
+      assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*lang[^\\]]*\\].*"), p)
+    }
   }
 
   test("dynamic partition pruning fires on a dim-filtered star join") {
-    val dir = s"/tmp/graft_dpp_${System.nanoTime()}"
-    // fact partitioned by nation key; dim filter on region should prune
-    // fact partitions at runtime via DPP subquery
-    Tables.customer(spark, TestSpark.sfDir)
-      .write.mode("overwrite").partitionBy("c_nationkey").parquet(dir)
-    val fact = spark.read.parquet(dir)
-    val dim = Tables.nation(spark, TestSpark.sfDir).where(col("n_regionkey") === 1)
-    val joined = fact.join(dim, col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name").count()
-    val p = plan(joined)
-    assert(p.contains("dynamicpruning"), p)
+    Scratch.run(spark, "graft_dpp_") { root =>
+      val dir = root.toString
+      // fact partitioned by nation key; dim filter on region should prune
+      // fact partitions at runtime via DPP subquery
+      Tables.customer(spark, TestSpark.sfDir)
+        .write.mode("overwrite").partitionBy("c_nationkey").parquet(dir)
+      val fact = spark.read.parquet(dir)
+      val dim = Tables.nation(spark, TestSpark.sfDir).where(col("n_regionkey") === 1)
+      val joined = fact.join(dim, col("c_nationkey") === col("n_nationkey"))
+        .groupBy("n_name").count()
+      val p = plan(joined)
+      assert(p.contains("dynamicpruning"), p)
+    }
   }
 
   test("orderBy+limit plans as TakeOrderedAndProject, not a global sort") {

@@ -79,12 +79,13 @@ class SourceSpec extends AnyFunSuite {
     import graft.sources.AuditSink
     val stream = spark.readStream.format("graft.sources.ShowerEventsSource")
       .option("rows", "300").option("partitions", "3").load()
-    val q = stream.writeStream.format("graft.sources.AuditSink")
-      .option("name", "stream_audit")
-      .option("checkpointLocation", s"/tmp/graft_audit_ckpt_${System.nanoTime()}")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
+    Scratch.run(spark, "graft_audit_ckpt_") { ckpt =>
+      val q = stream.writeStream.format("graft.sources.AuditSink")
+        .option("name", "stream_audit")
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val counts = AuditSink.result("stream_audit")
     assert(counts.exists(_.rows == 300L), counts)
   }

@@ -82,34 +82,36 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_landing").toString
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
-    // batch 1: two distinct docs + one corpus dup; batch 2: a re-arrival of
-    // doc 1 (cross-micro-batch dup) + one fresh doc + another corpus dup
-    val b1 = Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta"),
-      (3L, ts(2), "corpus one"))
-    val b2 = Seq((4L, ts(3), "alpha beta"), (5L, ts(4), "epsilon zeta"),
-      (6L, ts(5), "corpus two"))
-    b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    val corpus = Seq((100L, "corpus one"), (101L, "corpus two"))
-      .toDF("doc_id", "text")
-    // force one file per micro-batch so the dedup state crosses batches
-    val stream = EventStreams.runToMemory(
-      DocStreams.dedupedIngest(
-        DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
-      "ingest_dedup_parity", mode = "append")
-    val streamDigests = stream.select("h").collect().map(_.getString(0)).toSet
-    val batch = DocStreams.dedupedIngest(
-      (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
-    val batchDigests = batch.select("h").collect().map(_.getString(0)).toSet
-    assert(streamDigests == batchDigests)
-    // exactly the three fresh texts survive, each once
-    assert(stream.count() == 3 && batch.count() == 3)
-    assert(stream.select("text").collect().map(_.getString(0)).toSet ==
-      Set("alpha beta", "gamma delta", "epsilon zeta"))
+    Scratch.run(spark, "graft_landing") { root =>
+      val dir = root.toString
+      val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
+      // batch 1: two distinct docs + one corpus dup; batch 2: a re-arrival of
+      // doc 1 (cross-micro-batch dup) + one fresh doc + another corpus dup
+      val b1 = Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta"),
+        (3L, ts(2), "corpus one"))
+      val b2 = Seq((4L, ts(3), "alpha beta"), (5L, ts(4), "epsilon zeta"),
+        (6L, ts(5), "corpus two"))
+      b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      val corpus = Seq((100L, "corpus one"), (101L, "corpus two"))
+        .toDF("doc_id", "text")
+      // force one file per micro-batch so the dedup state crosses batches
+      val stream = EventStreams.runToMemory(
+        DocStreams.dedupedIngest(
+          DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
+        "ingest_dedup_parity", mode = "append")
+      val streamDigests = stream.select("h").collect().map(_.getString(0)).toSet
+      val batch = DocStreams.dedupedIngest(
+        (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
+      val batchDigests = batch.select("h").collect().map(_.getString(0)).toSet
+      assert(streamDigests == batchDigests)
+      // exactly the three fresh texts survive, each once
+      assert(stream.count() == 3 && batch.count() == 3)
+      assert(stream.select("text").collect().map(_.getString(0)).toSet ==
+        Set("alpha beta", "gamma delta", "epsilon zeta"))
+    }
   }
 
   test("curated ingest: gate + dedup micro-batched == batch; low-quality dropped") {
@@ -117,31 +119,33 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_curated").toString
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
-    // good docs carry stopwords; doc 3 has none (gate must drop it); doc 4
-    // re-arrives cross-batch (dedup must drop the second copy)
-    val b1 = Seq((1L, ts(0), "the quick fox of the field"),
-      (2L, ts(1), "a stitch of time and thread"),
-      (3L, ts(2), "xx yy zz ww vv uu"))
-    val b2 = Seq((4L, ts(3), "the quick fox of the field"),
-      (5L, ts(4), "to each of the many a share"))
-    b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
-    val stream = EventStreams.runToMemory(
-      DocStreams.curatedIngest(
-        DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
-      "curated_parity", mode = "append")
-    val batch = DocStreams.curatedIngest(
-      (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
-    assert(stream.select("h").collect().map(_.getString(0)).toSet ==
-      batch.select("h").collect().map(_.getString(0)).toSet)
-    val texts = stream.select("text").collect().map(_.getString(0)).toSet
-    assert(texts == Set("the quick fox of the field",
-      "a stitch of time and thread", "to each of the many a share"))
+    Scratch.run(spark, "graft_curated") { root =>
+      val dir = root.toString
+      val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
+      // good docs carry stopwords; doc 3 has none (gate must drop it); doc 4
+      // re-arrives cross-batch (dedup must drop the second copy)
+      val b1 = Seq((1L, ts(0), "the quick fox of the field"),
+        (2L, ts(1), "a stitch of time and thread"),
+        (3L, ts(2), "xx yy zz ww vv uu"))
+      val b2 = Seq((4L, ts(3), "the quick fox of the field"),
+        (5L, ts(4), "to each of the many a share"))
+      b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
+      val stream = EventStreams.runToMemory(
+        DocStreams.curatedIngest(
+          DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
+        "curated_parity", mode = "append")
+      val batch = DocStreams.curatedIngest(
+        (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
+      assert(stream.select("h").collect().map(_.getString(0)).toSet ==
+        batch.select("h").collect().map(_.getString(0)).toSet)
+      val texts = stream.select("text").collect().map(_.getString(0)).toSet
+      assert(texts == Set("the quick fox of the field",
+        "a stitch of time and thread", "to each of the many a share"))
+    }
   }
 
   test("moderated ingest: blocklist + gate + dedup micro-batched == batch") {
@@ -149,32 +153,34 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.DocStreams
     val sql = spark
     import sql.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_moderated").toString
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
-    // doc 2 contains a blocked phrase (blocklist must drop it); doc 3 has no
-    // stopwords (quality gate); doc 4 re-arrives cross-batch (dedup)
-    val b1 = Seq((1L, ts(0), "the quick fox of the field"),
-      (2L, ts(1), "the bad crawl of a dark web page"),
-      (3L, ts(2), "xx yy zz ww vv uu"))
-    val b2 = Seq((4L, ts(3), "the quick fox of the field"),
-      (5L, ts(4), "to each of the many a share"))
-    b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
-      .write.mode("append").parquet(dir)
-    val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
-    val block = Seq("dark web", "bad crawl")
-    val stream = EventStreams.runToMemory(
-      DocStreams.moderatedIngest(
-        DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)),
-        corpus, block),
-      "moderated_parity", mode = "append")
-    val batch = DocStreams.moderatedIngest(
-      (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus, block)
-    assert(stream.select("h").collect().map(_.getString(0)).toSet ==
-      batch.select("h").collect().map(_.getString(0)).toSet)
-    assert(stream.select("text").collect().map(_.getString(0)).toSet ==
-      Set("the quick fox of the field", "to each of the many a share"))
+    Scratch.run(spark, "graft_moderated") { root =>
+      val dir = root.toString
+      val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000)
+      // doc 2 contains a blocked phrase (blocklist must drop it); doc 3 has no
+      // stopwords (quality gate); doc 4 re-arrives cross-batch (dedup)
+      val b1 = Seq((1L, ts(0), "the quick fox of the field"),
+        (2L, ts(1), "the bad crawl of a dark web page"),
+        (3L, ts(2), "xx yy zz ww vv uu"))
+      val b2 = Seq((4L, ts(3), "the quick fox of the field"),
+        (5L, ts(4), "to each of the many a share"))
+      b1.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
+        .write.mode("append").parquet(dir)
+      val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
+      val block = Seq("dark web", "bad crawl")
+      val stream = EventStreams.runToMemory(
+        DocStreams.moderatedIngest(
+          DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)),
+          corpus, block),
+        "moderated_parity", mode = "append")
+      val batch = DocStreams.moderatedIngest(
+        (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus, block)
+      assert(stream.select("h").collect().map(_.getString(0)).toSet ==
+        batch.select("h").collect().map(_.getString(0)).toSet)
+      assert(stream.select("text").collect().map(_.getString(0)).toSet ==
+        Set("the quick fox of the field", "to each of the many a share"))
+    }
   }
 
   test("streaming PQ encode: per-file micro-batches == batch; re-run is a no-op") {
@@ -183,47 +189,49 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.EmbeddingStreams
     val sql = spark
     import sql.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pq_stream").toString
-    val emb = Tables.embeddings(spark, TestSpark.sfDir)
-      .where(col("vec_id") < 200).select(col("vec_id"), col("embedding"))
-    emb.repartition(3).write.parquet(s"$root/landing")
-    val cb = Pq.fit(emb, "vec_id", "embedding", 64, m = 4, ksub = 4, iters = 1)
-    // one file per trigger: codes must be identical however the rows batch
-    EmbeddingStreams.runEncode(spark, s"$root/landing", cb,
-      s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(1))
-    def sink() = spark.read.parquet(s"$root/codes")
-      .select(col("vec_id"), col("code"))
-    val streamed = sink().as[(Long, Seq[Int])].collect().toMap
-    val batch = EmbeddingStreams.encoded(emb, cb)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(streamed == batch)
-    // exactly-once: draining the same landing dir again adds nothing
-    EmbeddingStreams.runEncode(spark, s"$root/landing", cb,
-      s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(1))
-    assert(sink().count() == batch.size.toLong)
+    Scratch.run(spark, "graft_pq_stream") { root =>
+      val emb = Tables.embeddings(spark, TestSpark.sfDir)
+        .where(col("vec_id") < 200).select(col("vec_id"), col("embedding"))
+      emb.repartition(3).write.parquet(s"$root/landing")
+      val cb = Pq.fit(emb, "vec_id", "embedding", 64, m = 4, ksub = 4, iters = 1)
+      // one file per trigger: codes must be identical however the rows batch
+      EmbeddingStreams.runEncode(spark, s"$root/landing", cb,
+        s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(1))
+      def sink() = spark.read.parquet(s"$root/codes")
+        .select(col("vec_id"), col("code"))
+      val streamed = sink().as[(Long, Seq[Int])].collect().toMap
+      val batch = EmbeddingStreams.encoded(emb, cb)
+        .as[(Long, Seq[Int])].collect().toMap
+      assert(streamed == batch)
+      // exactly-once: draining the same landing dir again adds nothing
+      EmbeddingStreams.runEncode(spark, s"$root/landing", cb,
+        s"$root/codes", s"$root/ckpt", maxFilesPerTrigger = Some(1))
+      assert(sink().count() == batch.size.toLong)
+    }
   }
 
   test("count-min sketch: streaming complete-mode matrix == batch matrix") {
     import org.apache.spark.sql.functions._
     import graft.functions.CountMin
-    val root = java.nio.file.Files.createTempDirectory("graft_cms_stream").toString
-    val items = Tables.documents(spark, TestSpark.sfDir)
-      .where(col("doc_id") < 100)
-      .select(explode(split(col("text"), " ", -1)).as("item"))
-    items.repartition(3).write.parquet(s"$root/landing")
-    // one file per trigger: the sketch must survive the state store's
-    // serialize/merge path across micro-batches and still equal the batch
-    // matrix exactly (commutative integer sum)
-    val stream = spark.readStream
-      .schema(new org.apache.spark.sql.types.StructType()
-        .add("item", org.apache.spark.sql.types.StringType))
-      .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-      .agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
-    val streamed = EventStreams.runToMemory(stream, "cms_stream_parity")
-      .head().getSeq[Long](0)
-    val batch = items.agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
-      .head().getSeq[Long](0)
-    assert(streamed == batch)
+    Scratch.run(spark, "graft_cms_stream") { root =>
+      val items = Tables.documents(spark, TestSpark.sfDir)
+        .where(col("doc_id") < 100)
+        .select(explode(split(col("text"), " ", -1)).as("item"))
+      items.repartition(3).write.parquet(s"$root/landing")
+      // one file per trigger: the sketch must survive the state store's
+      // serialize/merge path across micro-batches and still equal the batch
+      // matrix exactly (commutative integer sum)
+      val stream = spark.readStream
+        .schema(new org.apache.spark.sql.types.StructType()
+          .add("item", org.apache.spark.sql.types.StringType))
+        .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
+        .agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
+      val streamed = EventStreams.runToMemory(stream, "cms_stream_parity")
+        .head().getSeq[Long](0)
+      val batch = items.agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
+        .head().getSeq[Long](0)
+      assert(streamed == batch)
+    }
   }
 
   test("TTL state evicts between drains; TTL-free state survives the restart") {
