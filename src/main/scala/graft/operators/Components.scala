@@ -17,13 +17,11 @@ import org.apache.spark.sql.functions._
   * quasi-cliques, so diameter is small in practice).
   *
   * Scale notes (100 TB):
-  *   - `localCheckpoint` after each round truncates the exponentially-growing
-  *     lineage — without it round k replays all rounds < k.
+  *   - rounds run through [[Fixpoint.converge]]: each is checkpointed (no
+  *     lineage replay) and its change count observed in that same job.
   *   - the symmetric edge list is repartitioned on `src` BEFORE its one-time
   *     checkpoint (localCheckpoint preserves hash partitioning), so every
   *     round's gather join reuses that layout instead of re-shuffling O(E).
-  *   - the convergence signal rides the checkpoint materialization job via
-  *     `observe()` metrics — no separate count job per round.
   *   - for graphs with giant high-degree components the large-star/small-star
   *     variant (Kiveris et al., "Connected Components in MapReduce") bounds
   *     the per-round skew; plain propagation is the right default for dedup
@@ -39,46 +37,8 @@ object Components {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 25): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges.select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
-      .repartition(col("src")).localCheckpoint()
-
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
-
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // gather: best label any neighbor can offer each vertex
-      val offers = sym
-        .join(labels.withColumnRenamed("id", "src_id"), col("src") === col("src_id"))
-        .groupBy(col("dst").as("id"))
-        .agg(min("comp").as("offer"))
-      // the convergence count piggybacks on the checkpoint's materialization
-      // job via observe() — metrics are collected DURING that job, so no
-      // separate count action scans the round's output again
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-      val next = labels
-        .join(offers, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("offer"), col("comp"))).as("comp"),
-          (coalesce(col("offer"), col("comp")) < col("comp")).as("chg"))
-        .observe(obs, coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))
-          .as("changed"))
-        .localCheckpoint()
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = next.select("id", "comp")
-      iter += 1
-    }
-    // fail loudly rather than return intermediate labels: a graph whose
-    // diameter exceeds maxIter would otherwise silently violate the
-    // "component = minimum reachable id" contract
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still changing) — raise maxIter")
-    labels
+    val (sym, init) = seed(edges, srcCol, dstCol)
+    Fixpoint.converge("connectedComponents", init, maxIter)(propagate(sym, _))
   }
 
   /** Exactly `rounds` min-label propagation rounds with NO convergence test
@@ -96,25 +56,41 @@ object Components {
       srcCol: String,
       dstCol: String,
       rounds: Int): DataFrame = {
+    val (sym, init) = seed(edges, srcCol, dstCol)
+    (0 until rounds).foldLeft(init)((labels, _) => propagate(sym, labels)._1)
+  }
+
+  /** The symmetric edge list (src, dst), repartitioned on `src` BEFORE its
+    * one-time checkpoint, and every vertex labeled with its own id.
+    */
+  private def seed(edges: DataFrame, srcCol: String,
+                   dstCol: String): (DataFrame, DataFrame) = {
     val sym = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .union(edges.select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
       .repartition(col("src")).localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
+    (sym, sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint()
-    for (_ <- 0 until rounds) {
-      val offers = sym
-        .join(labels.withColumnRenamed("id", "src_id"), col("src") === col("src_id"))
-        .groupBy(col("dst").as("id"))
-        .agg(min("comp").as("offer"))
-      labels = labels
+      .localCheckpoint())
+  }
+
+  /** One min-label round: every vertex takes the minimum label among itself
+    * and its neighbors. Returns the new labels and how many changed.
+    */
+  private def propagate(sym: DataFrame, labels: DataFrame): (DataFrame, Long) = {
+    // gather: best label any neighbor can offer each vertex
+    val offers = sym
+      .join(labels.withColumnRenamed("id", "src_id"), col("src") === col("src_id"))
+      .groupBy(col("dst").as("id"))
+      .agg(min("comp").as("offer"))
+    val (next, Seq(changed)) = Fixpoint.checkpoint(
+      labels
         .join(offers, Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("offer"), col("comp"))).as("comp"))
-        .localCheckpoint()
-    }
-    labels
+          least(col("comp"), coalesce(col("offer"), col("comp"))).as("comp"),
+          (coalesce(col("offer"), col("comp")) < col("comp")).as("chg")),
+      sum(when(col("chg"), 1L).otherwise(0L)))
+    (next.select("id", "comp"), changed)
   }
 
   /** Large-star/small-star connected components (Kiveris et al., "Connected
@@ -136,9 +112,6 @@ object Components {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 40): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
     val init = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .localCheckpoint()
@@ -168,39 +141,25 @@ object Components {
         .where(col("a") =!= col("b"))
     }
 
-    // Fixpoint detection rides the checkpoint materialization via observe(),
-    // like connectedComponents' change count: each round's edge set is
-    // distinct and canonically oriented (a > b), so (count, XOR xxhash64(a,b))
-    // is an order-insensitive set signature collected for free DURING the
-    // checkpoint job (bit_xor, not sum: commutative AND overflow-free under
-    // ANSI mode). Signature equality triggers ONE confirming anti-join
-    // (|next| = |e| plus next∖e = ∅ ⇒ set equality) — so the exact check
-    // runs once at convergence instead of two O(E) shuffle-scan jobs every
-    // round, which on a giant graph was the dominant non-rewrite cost.
-    def checkpointWithSig(df: DataFrame, name: String): (DataFrame, Long, Long) = {
-      val obs = org.apache.spark.sql.Observation(name)
-      val out = df.observe(obs, count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("h"))
-        .localCheckpoint()
-      (out, obs.get("n").asInstanceOf[Long], obs.get("h").asInstanceOf[Long])
-    }
-
-    var (e, eN, eH) = checkpointWithSig(
+    // Each round's edge set is distinct and canonically oriented (a > b),
+    // so (count, XOR xxhash64(a,b)) is an order-insensitive set signature,
+    // observed on the round's checkpoint job (bit_xor, not sum: commutative
+    // AND overflow-free under ANSI mode). Signature equality triggers ONE
+    // confirming anti-join (|next| = |e| plus next∖e = ∅ ⇒ set equality) —
+    // so the exact check runs once at convergence instead of two O(E)
+    // shuffle-scan jobs every round, which on a giant graph was the
+    // dominant non-rewrite cost. Progress is the edge count of a round
+    // whose edge set still changed.
+    def signed(df: DataFrame) =
+      Fixpoint.checkpoint(df, count(lit(1)), expr("bit_xor(xxhash64(a, b))"))
+    val (e, _) = Fixpoint.converge("largeStarSmallStar", signed(
       init.where(col("a") =!= col("b"))
         .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-        .distinct(),
-      "lsss_init")
-    var iter = 0
-    var converged = eN == 0
-    while (!converged && iter < maxIter) {
-      val (next, nN, nH) = checkpointWithSig(
-        smallStar(largeStar(e).distinct()).distinct(), s"lsss_round_$iter")
-      converged = nN == eN && nH == eH && next.exceptAll(e).isEmpty
-      e = next; eN = nN; eH = nH
-      iter += 1
+        .distinct()), maxIter) { case (e, sig) =>
+      val (next, nSig) = signed(smallStar(largeStar(e).distinct()).distinct())
+      val same = nSig == sig && next.exceptAll(e).isEmpty
+      ((next, nSig), if (same) 0L else nSig.head)
     }
-    if (!converged && iter >= maxIter) throw new IllegalStateException(
-      s"largeStarSmallStar did not converge in $maxIter rounds")
     // fixpoint edges are (v, root); roots label themselves, and vertices
     // whose edges were all self-loops fall back to their own id
     val starLabels = e.select(col("a").as("id"), col("b").as("comp"))

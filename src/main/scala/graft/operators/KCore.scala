@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * column comparing the last two edge sets — true on the fixtures (the
   * 2-core of the spatial graph converges in ≤ 2 peels at every SF), and the
   * honest signal if a regenerated fixture ever needs more rounds. A
-  * production run on an unbounded graph would instead drive rounds by the
-  * observe()-fused change count exactly like
-  * [[Components.connectedComponents]].
+  * production run on an unbounded graph would instead drive the peel
+  * through [[Fixpoint.converge]], its progress the edges a round dropped,
+  * counted on the round's own checkpoint by [[Fixpoint.checkpoint]].
   */
 object KCore {
 

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is one edge-keyed exchange (alive neighbors'
   * min priority) + one anti-join (remove decided) over a monotonically
   * shrinking vertex set — with random priorities the alive set falls by
-  * a constant factor per round in expectation, so O(log n) rounds; the
-  * per-round `localCheckpoint` truncates the growing plan exactly as the
-  * Components fixpoint does.
+  * a constant factor per round in expectation, so O(log n) rounds; each
+  * round's alive set is a [[Fixpoint.checkpoint]], which truncates the
+  * growing plan and counts the survivors in the same job.
   */
 object Mis {
 
@@ -43,15 +43,15 @@ object Mis {
       .distinct()
       .repartition(col("a")).localCheckpoint()
 
-    var alive = vertices
-      .select(col("id").cast("long").as("id"), col("prio").cast("long").as("prio"))
-      .localCheckpoint()
+    var (alive, Seq(nAlive)) = Fixpoint.checkpoint(vertices
+      .select(col("id").cast("long").as("id"), col("prio").cast("long").as("prio")),
+      count(lit(1)))
     var decided = alive.sparkSession.emptyDataFrame
       .withColumn("id", lit(0L)).withColumn("round", lit(0L))
       .withColumn("selected", lit(false))
       .where(lit(false)).select("id", "round", "selected")
 
-    for (r <- 1 to rounds if !alive.isEmpty) {
+    for (r <- 1 to rounds if nAlive > 0) {
       // min alive-neighbor priority, delivered along edges
       val nbrMin = sym
         .join(alive.select(col("id").as("b_id"), col("prio").as("b_prio")),
@@ -73,8 +73,10 @@ object Mis {
         .unionByName(removedNbrs.select(col("id"), lit(r.toLong).as("round"),
           lit(false).as("selected")))
         .localCheckpoint()
-      alive = alive.join(decided.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint()
+      val (left, Seq(n)) = Fixpoint.checkpoint(
+        alive.join(decided.select("id"), Seq("id"), "left_anti"), count(lit(1)))
+      alive = left
+      nAlive = n
     }
     decided
   }

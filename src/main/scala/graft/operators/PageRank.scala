@@ -66,13 +66,9 @@ object PageRank {
                      tags: Seq[String], init: Column, iters: Int)
                     (next: (Column, Column) => Column): DataFrame = {
     val carried = (Seq("id", "dang") ++ tags).map(col)
-    var ranks = base.select(carried :+ init.as("r"): _*)
-    // round 0's dangling mass, in the same 1e-12 integer units every later
-    // round's observe() emits — one O(V) job before the loop, never per round
-    var dm = ranks.where(col("dang"))
-      .agg(coalesce(sum(round(col("r") * 1e12, 0).cast("long")), lit(0L)))
-      .head().getLong(0)
-    for (_ <- 0 until iters) {
+    val ranks0 = base.select(carried :+ init.as("r"): _*)
+    (0 until iters).foldLeft((ranks0, Seq(danglingCensus(ranks0)))) {
+        case ((ranks, Seq(dm)), _) =>
       // one fused job per round: per-edge messages quantized to integer
       // 1e-12 units (float addition order cannot perturb the sum), dangling
       // mass redistributed as the LITERAL observed on the previous round's
@@ -83,18 +79,25 @@ object PageRank {
         .join(deg, "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(round(col("r") / col("outdeg") * 1e12, 0).cast("long")).as("m"))
-      val obs = org.apache.spark.sql.Observation()
-      ranks = base
+      Fixpoint.checkpoint(base
         .join(msgs, Seq("id"), "left")
         .select(carried :+
-          round(next(coalesce(col("m"), lit(0L)), lit(dm)), 9).as("r"): _*)
-        .observe(obs, coalesce(sum(when(col("dang"),
-          round(col("r") * 1e12, 0).cast("long"))), lit(0L)).as("dm"))
-        .localCheckpoint()
-      dm = obs.get("dm").asInstanceOf[Long]
-    }
-    ranks.select("id", "r")
+          round(next(coalesce(col("m"), lit(0L)), lit(dm)), 9).as("r"): _*),
+        danglingMass)
+    }._1.select("id", "r")
   }
+
+  /** A round's dangling mass in integer 1e-12 units. */
+  private def danglingMass: Column =
+    sum(when(col("dang"), round(col("r") * 1e12, 0).cast("long")))
+
+  /** Round 0's dangling mass, in the same units every later round's
+    * checkpoint observes — one O(V) job before the loop, never per round.
+    */
+  private def danglingCensus(ranks: DataFrame): Long =
+    ranks.where(col("dang"))
+      .agg(coalesce(sum(round(col("r") * 1e12, 0).cast("long")), lit(0L)))
+      .head().getLong(0)
 
   /** DuckDB twin of [[rounds]], unrolled `iters` times from ranks
     * `r0(id, r)`: per round k the dangling census `d$k` (dm), the messages
@@ -187,13 +190,11 @@ object PageRank {
       .select(col("id"), col("outdeg"), (col("outdeg") === 0L).as("dang"))
       .localCheckpoint()
 
-    var ranks = vTag.crossJoin(nDF)
+    val ranks0 = vTag.crossJoin(nDF)
       .select(col("id"), col("outdeg"), col("dang"),
         (lit(1.0) / col("n")).as("r"))
-    var dm = ranks.where(col("dang"))
-      .agg(coalesce(sum(round(col("r") * 1e12, 0).cast("long")), lit(0L)))
-      .head().getLong(0)
-    for (_ <- 0 until iters) {
+    (0 until iters).foldLeft((ranks0, Seq(danglingCensus(ranks0)))) {
+        case ((ranks, Seq(dm)), _) =>
       // per-vertex message value (identical to the per-edge quantization —
       // same integer for every out-edge of the vertex), then one riding
       // join per half and one V-bounded partial aggregation per half
@@ -204,24 +205,19 @@ object PageRank {
         .groupBy(col("b").as("id")).agg(sum(col("mv")).as("m"))
       val mAB = half(pa).withColumnRenamed("m", "m1")
       val mBA = half(pb).withColumnRenamed("m", "m2")
-      val obs = org.apache.spark.sql.Observation()
       // both message halves land hash(id)-partitioned from their groupBy —
       // joining them SEPARATELY (coalesced exact long sum) keeps the rank
       // rewrite exchange-free where a union would forget the partitioning
-      ranks = vTag.crossJoin(nDF)
+      Fixpoint.checkpoint(vTag.crossJoin(nDF)
         .join(mAB, Seq("id"), "left")
         .join(mBA, Seq("id"), "left")
         .select(col("id"), col("outdeg"), col("dang"),
           round(lit(1.0 - damping) / col("n")
             + lit(damping) * ((coalesce(col("m1"), lit(0L))
               + coalesce(col("m2"), lit(0L))) / lit(1e12)
-              + (lit(dm) / lit(1e12)) / col("n")), 9).as("r"))
-        .observe(obs, coalesce(sum(when(col("dang"),
-          round(col("r") * 1e12, 0).cast("long"))), lit(0L)).as("dm"))
-        .localCheckpoint()
-      dm = obs.get("dm").asInstanceOf[Long]
-    }
-    ranks.select("id", "r")
+              + (lit(dm) / lit(1e12)) / col("n")), 9).as("r")),
+        danglingMass)
+    }._1.select("id", "r")
   }
 
   /** Personalized PageRank (random walk with restart): the teleport mass —

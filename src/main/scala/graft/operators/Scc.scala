@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * is joined to the edge relation each round, so round k adds exactly the
   * pairs whose shortest path is k — each round is one equi-join + one
   * anti-join (no all-pairs product), converging in O(longest shortest
-  * path) rounds.
+  * path) rounds. [[Fixpoint.converge]] drives the rounds; each round's
+  * new-pair count rides that round's checkpoint job.
   *
   * Scale contract (stated, not hidden): transitive closure materializes
   * O(n · avg-reach) pairs, so this is the right operator for
@@ -45,22 +46,18 @@ object Scc {
       .distinct()
       .repartition(col("src")).localCheckpoint()
 
-    var reach = e.select(col("src").as("a"), col("dst").as("b")).localCheckpoint()
-    var delta = reach
-    var iter = 0
-    while (iter < maxIter && !delta.isEmpty) {
-      // semi-naive step: only the last round's NEW pairs extend by one edge
-      val step = delta.join(e, col("b") === col("src"))
-        .select(col("a"), col("dst").as("b"))
-      val fresh = step.except(reach).localCheckpoint()
-      reach = reach.unionByName(fresh).localCheckpoint()
-      delta = fresh
-      iter += 1
-    }
-    if (!delta.isEmpty) throw new IllegalStateException(
-      s"Scc.closure did not converge in $maxIter rounds — raise maxIter " +
-        "or roll the graph up to a bounded vertex domain first")
-    reach
+    val reach0 = e.select(col("src").as("a"), col("dst").as("b")).localCheckpoint()
+    Fixpoint.converge("Scc.closure", (reach0, reach0), maxIter) {
+      case (reach, delta) =>
+        // semi-naive step: only the last round's NEW pairs extend by one
+        // edge; progress is their count, observed on their own checkpoint
+        val (fresh, Seq(n)) = Fixpoint.checkpoint(
+          delta.join(e, col("b") === col("src"))
+            .select(col("a"), col("dst").as("b"))
+            .except(reach),
+          count(lit(1)))
+        ((reach.unionByName(fresh).localCheckpoint(), fresh), n)
+    }._1
   }
 
   /** SCC labels: (id, scc) for every vertex appearing in `edges`, where

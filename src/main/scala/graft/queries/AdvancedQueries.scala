@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Tensors
-import graft.operators.{AsofJoin, Components, PageRank, PrefixSum}
+import graft.operators.{AsofJoin, Components, Fixpoint, PageRank, PrefixSum}
 
 /** Advanced relational + pipeline operators beyond the first coverage pass:
   * as-of join, rollup, exact percentiles, ranking-window family, range
@@ -2452,12 +2452,14 @@ object AdvancedQueries {
       var last: DataFrame = null
       for (r <- 1 to 3) {
         val sup = if (r == 1) sup0 else support(e)
-        last = e.join(sup, Seq("a", "b"), "left")
-          .select(col("a"), col("b"),
-            coalesce(col("sup"), lit(0L)).as("sup"))
-          .where(col("sup") >= thr)
-          .localCheckpoint()
-        census += ((r.toLong, last.count()))
+        val (kept, Seq(n)) = Fixpoint.checkpoint(
+          e.join(sup, Seq("a", "b"), "left")
+            .select(col("a"), col("b"),
+              coalesce(col("sup"), lit(0L)).as("sup"))
+            .where(col("sup") >= thr),
+          count(lit(1)))
+        last = kept
+        census += ((r.toLong, n))
         e = last.select("a", "b").localCheckpoint()
       }
       import s.implicits._
@@ -3872,13 +3874,14 @@ object AdvancedQueries {
         row_number().over(Window.partitionBy("sn")
           .orderBy(col("rev").desc, col("cn"))).cast("long").as("srk"))
         .persist() // every round's keep pass + the output ranks
-      var matched: DataFrame = s.emptyDataFrame
+      val none: DataFrame = s.emptyDataFrame
         .withColumn("c", lit(0L)).withColumn("s", lit(0L))
         .where(lit(false)).select("c", "s")
-      var rej: DataFrame = matched
-      var free = nk.count()
-      var r = 0
-      while (r < 40 && free > 0) {
+      val n = nk.count()
+      // GS with complete lists always terminates; 40 rounds is a bound, not
+      // a proof. Progress = proposers still free = n − |kept|.
+      val (matched, _) = Fixpoint.converge("stable matching", (none, none),
+          40) { case (matched, rej) =>
         val avail = cpref
           .join(matched.select(col("c").as("mc")),
             col("cn") === col("mc"), "left_anti")
@@ -3891,28 +3894,19 @@ object AdvancedQueries {
           .where(col("rn") === 1)
           .select(col("cn").as("c"), col("sn").as("s"))
         val cand = prop.unionByName(matched).localCheckpoint()
-        val kept = cand
+        val (kept, Seq(nKept)) = Fixpoint.checkpoint(cand
           .join(spref, col("c") === col("cn") && col("s") === col("sn"))
           .withColumn("rn", row_number().over(
             Window.partitionBy("s").orderBy("srk")))
           .where(col("rn") === 1)
-          .select("c", "s")
-          .localCheckpoint()
-        rej = rej.unionByName(
+          .select("c", "s"),
+          count(lit(1)))
+        val rej1 = rej.unionByName(
           cand.join(kept.withColumnsRenamed(Map("c" -> "kc", "s" -> "ks")),
             col("c") === col("kc") && col("s") === col("ks"), "left_anti"))
           .localCheckpoint()
-        matched = kept
-        free = nk.count() - matched.count()
-        r += 1
+        ((kept, rej1), n - nKept)
       }
-      // GS with complete lists always terminates, but the 40-round unroll
-      // is a bound, not a proof — a pathological preference census that
-      // needed more rounds would otherwise silently emit a PARTIAL (and
-      // hence possibly unstable) matching. Fail loudly instead; the
-      // fixture census converges well inside the bound.
-      require(free == 0,
-        s"stable matching did not converge in $r rounds ($free proposers still free)")
       val um = nk
         .join(matched.select(col("c")), col("id") === col("c"), "left_anti")
         .agg(count(lit(1)).as("n_unmatched"))

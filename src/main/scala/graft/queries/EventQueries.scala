@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
@@ -37,6 +37,57 @@ object EventQueries {
       |                 AND r.rn = rec.rn + 1)
       |SELECT user_id, CAST(day AS BIGINT) AS day, kept
       |FROM rec ORDER BY user_id, day""".stripMargin
+
+  /** Shared by q410 (batch recurrence) and q412 (streaming twin): Page's
+    * CUSUM trace — streamed ≡ batch by the shared hash.
+    */
+  private val pageCusumSql: String =
+    """WITH RECURSIVE d AS MATERIALIZED (
+      |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+      |         CAST(count(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2),
+      |r0 AS MATERIALIZED (SELECT event_type, day, x,
+      |         CAST(row_number() OVER (PARTITION BY event_type
+      |           ORDER BY day) AS BIGINT) AS rn
+      |       FROM d),
+      |ref AS MATERIALIZED (SELECT event_type,
+      |          CAST(sum(x) AS BIGINT) // count(*) AS refx
+      |        FROM r0 WHERE rn <= 15 GROUP BY event_type),
+      |r AS MATERIALIZED (SELECT r0.event_type, r0.rn, r0.day, r0.x,
+      |             CAST(ref.refx AS BIGINT) AS refx
+      |      FROM r0 JOIN ref USING (event_type)),
+      |rec(event_type, rn, day, x, refx, s) AS (
+      |  SELECT event_type, rn, day, x, refx,
+      |         greatest(CAST(0 AS BIGINT), x - refx - refx // 10)
+      |  FROM r WHERE rn = 1
+      |  UNION ALL
+      |  SELECT r.event_type, r.rn, r.day, r.x, r.refx,
+      |         greatest(CAST(0 AS BIGINT),
+      |                  rec.s + r.x - r.refx - r.refx // 10)
+      |  FROM r JOIN rec ON r.event_type = rec.event_type
+      |                 AND r.rn = rec.rn + 1)
+      |SELECT event_type, CAST(day AS BIGINT) AS day, x, refx,
+      |       CAST(s AS BIGINT) AS s_cusum,
+      |       CAST(CASE WHEN s > 3 * refx THEN 1 ELSE 0 END AS BIGINT)
+      |         AS alarm
+      |FROM rec ORDER BY event_type, day""".stripMargin
+
+  /** The CUSUM input both q410 and q412 run the recurrence over: per
+    * event type and UTC day the event count `x`, and `refx`, the truncated
+    * mean of the first 15 days.
+    */
+  private def pageCusumInput(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy("event_type").orderBy("day")
+    val r0 = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        expr("unix_micros(ts) div 86400000000").as("day"))
+      .agg(count(lit(1)).as("x"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+    val ref = r0.where(col("rn") <= 15).groupBy("event_type")
+      .agg(expr("sum(x) div count(1)").as("refx"))
+    r0.join(ref, "event_type")
+      .select(col("event_type"), col("day"), col("x"), col("refx"))
+  }
 
   /** Σ round(max(value, 0)·100): exact clamped cents, the quantity every
     * daily series below sums (clamping keeps floor and truncation equal).
@@ -3622,47 +3673,9 @@ object EventQueries {
     // CTE. Emits the full per-day trace so the alarm PATH, not just the
     // verdict, is hash-checked.
     QueryDef("q410_page_cusum",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |r0 AS MATERIALIZED (SELECT event_type, day, x,
-        |         CAST(row_number() OVER (PARTITION BY event_type
-        |           ORDER BY day) AS BIGINT) AS rn
-        |       FROM d),
-        |ref AS MATERIALIZED (SELECT event_type,
-        |          CAST(sum(x) AS BIGINT) // count(*) AS refx
-        |        FROM r0 WHERE rn <= 15 GROUP BY event_type),
-        |r AS MATERIALIZED (SELECT r0.event_type, r0.rn, r0.day, r0.x,
-        |             CAST(ref.refx AS BIGINT) AS refx
-        |      FROM r0 JOIN ref USING (event_type)),
-        |rec(event_type, rn, day, x, refx, s) AS (
-        |  SELECT event_type, rn, day, x, refx,
-        |         greatest(CAST(0 AS BIGINT), x - refx - refx // 10)
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.x, r.refx,
-        |         greatest(CAST(0 AS BIGINT),
-        |                  rec.s + r.x - r.refx - r.refx // 10)
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1)
-        |SELECT event_type, CAST(day AS BIGINT) AS day, x, refx,
-        |       CAST(s AS BIGINT) AS s_cusum,
-        |       CAST(CASE WHEN s > 3 * refx THEN 1 ELSE 0 END AS BIGINT)
-        |         AS alarm
-        |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
+      pageCusumSql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("x"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      val r0 = daily.withColumn("rn", row_number().over(w).cast("long"))
-      val ref = r0.where(col("rn") <= 15).groupBy("event_type")
-        .agg(expr("sum(x) div count(1)").as("refx"))
-      r0.join(ref, "event_type")
-        .select(col("event_type"), col("day"), col("x"), col("refx"))
+      pageCusumInput(s, d)
         .as[(String, Long, Long, Long)]
         .groupByKey(_._1)
         .flatMapSortedGroups(col("day")) { (k, rows) =>
@@ -3687,50 +3700,12 @@ object EventQueries {
     // production posture for drift alarms: the alarm fires mid-stream,
     // not in a nightly batch.
     QueryDef("q412_stream_cusum",
-      """WITH RECURSIVE d AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |r0 AS MATERIALIZED (SELECT event_type, day, x,
-        |         CAST(row_number() OVER (PARTITION BY event_type
-        |           ORDER BY day) AS BIGINT) AS rn
-        |       FROM d),
-        |ref AS MATERIALIZED (SELECT event_type,
-        |          CAST(sum(x) AS BIGINT) // count(*) AS refx
-        |        FROM r0 WHERE rn <= 15 GROUP BY event_type),
-        |r AS MATERIALIZED (SELECT r0.event_type, r0.rn, r0.day, r0.x,
-        |             CAST(ref.refx AS BIGINT) AS refx
-        |      FROM r0 JOIN ref USING (event_type)),
-        |rec(event_type, rn, day, x, refx, s) AS (
-        |  SELECT event_type, rn, day, x, refx,
-        |         greatest(CAST(0 AS BIGINT), x - refx - refx // 10)
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn, r.day, r.x, r.refx,
-        |         greatest(CAST(0 AS BIGINT),
-        |                  rec.s + r.x - r.refx - r.refx // 10)
-        |  FROM r JOIN rec ON r.event_type = rec.event_type
-        |                 AND r.rn = rec.rn + 1)
-        |SELECT event_type, CAST(day AS BIGINT) AS day, x, refx,
-        |       CAST(s AS BIGINT) AS s_cusum,
-        |       CAST(CASE WHEN s > 3 * refx THEN 1 ELSE 0 END AS BIGINT)
-        |         AS alarm
-        |FROM rec ORDER BY event_type, day""".stripMargin) { (s, d) =>
+      pageCusumSql) { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
-      import org.apache.spark.sql.expressions.Window
       import graft.streaming.StatefulStreams
-      val w = Window.partitionBy("event_type").orderBy("day")
-      val r0 = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-      val ref = r0.where(col("rn") <= 15).groupBy("event_type")
-        .agg(expr("sum(x) div count(1)").as("refx"))
-      val daily = r0.join(ref, "event_type")
-        .select(col("event_type"), col("day"), col("x"), col("refx"))
+      val daily = pageCusumInput(s, d)
         .persist() // wave split scans it twice
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)

@@ -248,8 +248,6 @@ object SimilarityQueries {
     // compare on the 1e-6 integer grid with lowest-index ties, ADC sums are
     // exact integers with id tie-breaks.
     QueryDef("q125_pq_ann", PqAnnSql.sql) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.Tensors
       import graft.operators.Pq
       val emb = Tables.embeddings(s, d)
       val cb = Pq.fit(emb, "vec_id", "embedding", Dim,
@@ -263,20 +261,7 @@ object SimilarityQueries {
       val qdf = queries.toDF("qid", "qv")
       val shortlist = Pq.adcTopK(codes, Pq.adcTables(s, queries, cb),
         k = PqAnnSql.Shortlist, excludeSelf = true)
-      val reranked = Pq.rerank(shortlist, emb, "vec_id", "embedding", qdf, 10)
-      val exact = exactDistTopK(emb, qdf, 10)
-        .persist() // feeds both the d10 anchor and the recall join
-      val d10 = exact.where(col("rank") === 10)
-        .select(col("qid").as("query_id"), col("d2").as("exact_d10"))
-      val hits = reranked.join(
-          exact.select(col("qid").as("query_id"), col("vec_id").as("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      d10.join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("exact_d10"),
-          (coalesce(col("n_hit"), lit(0L)) >= PqAnnSql.MinRecall10)
-            .as("recall_ok"))
-        .orderBy("query_id")
+      pqRecallCheck(emb, qdf, shortlist, PqAnnSql.MinRecall10)
     },
 
     // IVF-PQ (the FAISS IndexIVFPQ composition): coarse k-means cells over
@@ -289,8 +274,6 @@ object SimilarityQueries {
     // threshold 3 leaves drift margin — probing fewer cells trades recall
     // for cost by design).
     QueryDef("q127_ivfpq", PqAnnSql.sql) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.Tensors
       import graft.operators.{KMeans, Pq}
       val emb = Tables.embeddings(s, d)
       val (assigned, cents) = KMeans.fit(emb, "vec_id", "embedding", Dim,
@@ -311,20 +294,7 @@ object SimilarityQueries {
       val shortlist = Pq.ivfAdcTopK(codes, Pq.adcTables(s, queries, cb),
         probes, k = PqAnnSql.Shortlist, excludeSelf = true)
       val qdf = queries.toDF("qid", "qv")
-      val reranked = Pq.rerank(shortlist, emb, "vec_id", "embedding", qdf, 10)
-      val exact = exactDistTopK(emb, qdf, 10)
-        .persist() // feeds both the d10 anchor and the recall join
-      val d10 = exact.where(col("rank") === 10)
-        .select(col("qid").as("query_id"), col("d2").as("exact_d10"))
-      val hits = reranked.join(
-          exact.select(col("qid").as("query_id"), col("vec_id").as("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      d10.join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("exact_d10"),
-          (coalesce(col("n_hit"), lit(0L)) >= PqAnnSql.MinRecallIvf)
-            .as("recall_ok"))
-        .orderBy("query_id")
+      pqRecallCheck(emb, qdf, shortlist, PqAnnSql.MinRecallIvf)
     },
 
     // Streaming PQ encode (streaming/EmbeddingStreams): the embedding
@@ -1984,6 +1954,31 @@ object SimilarityQueries {
       .withColumn("rank", row_number().over(
         Window.partitionBy("qid").orderBy(col("d2"), col("vec_id"))))
       .where(col("rank") <= k)
+  }
+
+  /** The engine side of [[PqAnnSql]] that q125 and q127 share: exact
+    * re-rank of the ADC `shortlist` to a top-10, the exact 10th-neighbor
+    * distance anchor per query, and whether the re-ranked top-10 recovered
+    * at least `minRecall` of the exact top-10.
+    */
+  private def pqRecallCheck(emb: org.apache.spark.sql.DataFrame,
+                            qdf: org.apache.spark.sql.DataFrame,
+                            shortlist: org.apache.spark.sql.DataFrame,
+                            minRecall: Int): org.apache.spark.sql.DataFrame = {
+    val reranked = graft.operators.Pq.rerank(shortlist, emb, "vec_id",
+      "embedding", qdf, 10)
+    val exact = exactDistTopK(emb, qdf, 10)
+      .persist() // feeds both the d10 anchor and the recall join
+    val d10 = exact.where(col("rank") === 10)
+      .select(col("qid").as("query_id"), col("d2").as("exact_d10"))
+    val hits = reranked.join(
+        exact.select(col("qid").as("query_id"), col("vec_id").as("neighbor_id")),
+        Seq("query_id", "neighbor_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+    d10.join(hits, Seq("query_id"), "left")
+      .select(col("query_id"), col("exact_d10"),
+        (coalesce(col("n_hit"), lit(0L)) >= minRecall).as("recall_ok"))
+      .orderBy("query_id")
   }
 
   /** Per-query hit census + ppm summary — the recall@k surface every ANN

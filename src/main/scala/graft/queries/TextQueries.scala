@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.functions.Hashes
-import graft.operators.{MinHash, PageRank, Split}
+import graft.operators.{Fixpoint, MinHash, PageRank, Split}
 
 /** Training-data text pipeline ops over `documents` (north-star brief):
   * exact dedup, token stats, quality scoring, language-ID, fingerprinting.
@@ -1440,11 +1440,12 @@ object TextQueries {
           .limit(1).collect() // 1-row census pick, the scaler posture
         if (gains.nonEmpty) {
           val (src, gain) = (gains(0).getString(0), gains(0).getLong(1))
-          covered = covered
+          // round plans must not nest; the checkpoint job counts `covered`
+          val (cov, Seq(n)) = Fixpoint.checkpoint(covered
             .unionByName(st.where(col("source") === src).select("token"))
-            .distinct()
-            .localCheckpoint() // round plans must not nest
-          out += ((k.toLong, src, gain, covered.count()))
+            .distinct(), count(lit(1)))
+          covered = cov
+          out += ((k.toLong, src, gain, n))
         }
       }
       s.createDataFrame(out.toSeq)

@@ -161,5 +161,8 @@ class OracleHealthSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql("q233_ewma") ==
       SparkEntry.oracleSql("q256_stream_ewma"),
       "q233/q256 oracles diverged — the twins must share one text")
+    assert(SparkEntry.oracleSql("q410_page_cusum") ==
+      SparkEntry.oracleSql("q412_stream_cusum"),
+      "q410/q412 oracles diverged — the twins must share one text")
   }
 }
