@@ -32,14 +32,16 @@ import scala.jdk.CollectionConverters._
   * but the operator returns a LAZY frame, so it cannot unpersist inline
   * without defeating the cache. ONE shared listener per SparkContext watches
   * a pending map (emit RDD id → cached frame) and unpersists each entry when
-  * the first job whose lineage contains its emit RDD completes. This bounds
-  * within-query cache pressure (a nested zip chain frees each level as the
-  * downstream action sweeps through it) instead of holding every level until
-  * the runner's clearCache. A zip that is BUILT but never actioned leaves
-  * its entry pending — [[sweepPending]] (called from the runners' clearCache
-  * lifecycle) unpersists and drops those, so a long-lived server session
-  * can't accrete entries; the listener itself is a singleton, so listener
-  * count never grows with operator calls. If a later action re-reads a
+  * the first job whose lineage contains its emit RDD completes — unless
+  * another pending entry reads the same cached plan, whose emit job then
+  * does the release. This bounds within-query cache pressure (a nested zip
+  * chain frees each level as the downstream action sweeps through it)
+  * instead of holding every level until the runner's clearCache. A zip that
+  * is BUILT but never actioned leaves its entry pending — [[sweepPending]]
+  * (called from the runners' clearCache lifecycle) unpersists and drops
+  * those, so a long-lived server session can't accrete entries; the
+  * listener itself is a singleton, so listener count never grows with
+  * operator calls. If a later action re-reads a
   * released emit RDD, the recompute is bit-identical: the range bounds live
   * in the captured plan's shuffle dependency (sampled once), assignment and
   * sort are deterministic functions of the total order.
@@ -80,8 +82,17 @@ private[graft] object ScaleZip {
       val hits = jobWatch.remove(je.jobId)
       if (hits != null) hits.foreach { id =>
         val cached = pending.remove(id)
-        if (cached != null) cached.unpersist(blocking = false)
+        if (cached != null && !readByPending(cached))
+          cached.unpersist(blocking = false)
       }
+    }
+    /** Two zips over the same input, order and fan-out persist ONE cache
+      * entry: it is released when the last of their emit jobs ends, never
+      * while another side's stage may still be reading its blocks.
+      */
+    private def readByPending(cached: DataFrame): Boolean = {
+      val plan = cached.queryExecution.normalized
+      pending.values.asScala.exists(_.queryExecution.normalized.sameResult(plan))
     }
     def sweep(): Unit = {
       pending.values.asScala.foreach(_.unpersist(blocking = false))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.functions.{CountMin, Hashes, MisraGries}
 import graft.operators.{DupSpans, Hilbert, MinHash, Redact, SimHash, UrlCanon, ZOrder}
+import graft.streaming.Drain
 
 /** Round-3 corpus-curation operators: heavy-hitter sketching, RAG chunking,
   * boilerplate passage removal, perplexity-band quality gating, exact
@@ -698,14 +699,7 @@ object CurationQueries {
             .add("token", org.apache.spark.sql.types.StringType))
           .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
           .agg(CountMin.sketch(col("token"), depth, width).as("sk"))
-        val memName = root.getName // unique per invocation — parallel runs
-                                   // cannot clobber each other's memory sink
-        val q = stream.writeStream.outputMode("complete").format("memory")
-          .queryName(memName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val streamedSk = s.table(memName)
+        val streamedSk = Drain.toMemory(stream, s"$root/ckpt", "complete")
         val batchSk = tok.agg(CountMin.sketch(col("token"), depth, width).as("bsk"))
         val total = tok.agg(count(lit(1)).as("n"))
         val top = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -754,13 +748,7 @@ object CurationQueries {
             .add("token", org.apache.spark.sql.types.StringType))
           .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
           .agg(MisraGries.candidates(col("token"), k).as("cands"))
-        val memName = root.getName
-        val q = stream.writeStream.outputMode("complete").format("memory")
-          .queryName(memName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val streamedCands = s.table(memName)
+        val streamedCands = Drain.toMemory(stream, s"$root/ckpt", "complete")
         val total = tok.agg(count(lit(1)).as("n"))
         val exact = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
         exact.crossJoin(broadcast(total))
@@ -801,13 +789,7 @@ object CurationQueries {
           .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
           .groupBy("source")
           .agg(approx_count_distinct(col("token"), 0.02).as("approx_tokens"))
-        val memName = root.getName
-        val q = stream.writeStream.outputMode("complete").format("memory")
-          .queryName(memName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val streamed = s.table(memName)
+        val streamed = Drain.toMemory(stream, s"$root/ckpt", "complete")
         val batch = tok.groupBy("source")
           .agg(approx_count_distinct(col("token"), 0.02).as("batch_approx"),
             countDistinct(col("token")).as("exact_tokens"))
@@ -2346,7 +2328,7 @@ object CurationQueries {
     // per-doc assignment trace is hash-checked, not just the bin census.
     QueryDef("q463_stream_packing", PackSql.nfSql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
       val W = PackSql.W
@@ -2359,7 +2341,11 @@ object CurationQueries {
       val mid = t.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
         .head().getLong(0)
       Scratch.run(s, "graft_pack_q_", StatefulStreams.RocksDb) { root =>
-        def drain(): Unit = {
+        // ordered waves: all wave-A doc ids precede wave-B's, so each
+        // shard's cursor sees docs in id order across the restart
+        Drain.twoWaves(s"$root/landing",
+            t.where(col("doc_id") <= mid).coalesce(1),
+            t.where(col("doc_id") > mid).coalesce(1)) {
           val stream = s.readStream
             .schema(new StructType().add("doc_id", LongType)
               .add("len", LongType).add("shard", LongType))
@@ -2368,22 +2354,9 @@ object CurationQueries {
             .groupByKey(_._3)
             .transformWithState(new StatefulStreams.Packer(W.toLong),
               TimeMode.None(), OutputMode.Append())
-          val q = stream.toDF("shard", "doc_id", "len", "bin")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(stream.toDF("shard", "doc_id", "len", "bin"),
+            s"$root/out", s"$root/ckpt")
         }
-        // ordered waves: all wave-A doc ids precede wave-B's, so each
-        // shard's cursor sees docs in id order across the restart
-        t.where(col("doc_id") <= mid).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        t.where(col("doc_id") > mid).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("shard", "doc_id", "len", "bin")
           .orderBy("shard", "doc_id")

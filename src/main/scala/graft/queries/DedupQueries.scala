@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.functions.Hashes
 import graft.operators.{MinHash, SimHash}
+import graft.streaming.Drain
 
 /** Near-duplicate detection over `documents` (north-star dedup family):
   * MinHash signatures, LSH candidate pairs with exact-Jaccard verification,
@@ -496,35 +497,22 @@ object DedupQueries {
     // over a static corpus ⇒ streamed ≡ batch EXACTLY — the oracle is
     // q474's VERBATIM (shared QualitySurvivorsSql), no weaker contract.
     QueryDef("q476_stream_survivors", QualitySurvivorsSql.sql) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
       Scratch.run(s, "graft_surv_q_") { root =>
         val surv = qualitySurvivors(Tables.documents(s, d))
           .persist() // static corpus statistic: probed by every batch
         surv.count(): Unit
-        def drain(): Unit = {
-          val q = s.readStream
+        Drain.twoWaves(s"$root/landing",
+            surv.select("cluster").where(col("cluster") % 2 === 0).coalesce(1),
+            surv.select("cluster").where(col("cluster") % 2 =!= 0).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType().add("cluster", LongType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            // batchId-keyed overwrite for retry idempotency — q471's sink
-            // discipline
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-              surv.join(broadcast(batch.select("cluster")), "cluster")
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toBatchDirs(stream, s"$root/out", s"$root/ckpt") { (batch, _) =>
+            surv.join(broadcast(batch.select("cluster")), "cluster")
+          }
         }
-        surv.select("cluster").where(col("cluster") % 2 === 0).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        surv.select("cluster").where(col("cluster") % 2 =!= 0).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         val res = s.read.parquet(s"$root/out")
           .select("cluster", "n_docs", "kept_doc", "kept_q_e6",
             "minid_doc", "policy_differs")
@@ -1131,7 +1119,6 @@ object DedupQueries {
     // append this harness does for landing). Oracle = q444's VERBATIM:
     // streamed ≡ batch, row for row, by the shared hash.
     QueryDef("q457_stream_substr_gate", SubstrGateSql.sql) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       Scratch.run(s, "graft_sgate_q_") { root =>
         val docs = Tables.documents(s, d)
@@ -1142,39 +1129,30 @@ object DedupQueries {
           .select(col("doc_id"), col("text"))
         val mid = probe.agg(expr("(min(doc_id) + max(doc_id)) div 2"))
           .head().getLong(0)
-        def drain(): Unit = {
-          val q = s.readStream
+        Drain.twoWaves(s"$root/landing",
+            probe.where(col("doc_id") <= mid).coalesce(1),
+            probe.where(col("doc_id") > mid).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType()
               .add("doc_id", LongType).add("text", StringType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              val xmr = graft.operators.ExactSubstr.crossMaximalRepeats(
-                batch, corpus, col("doc_id"), split(col("text"), " ", -1),
-                minLen = 8, cap = 16)
-              val hits = xmr.groupBy("probe_id")
-                .agg(count(lit(1)).as("n_hits"),
-                  max("len_tokens").as("max_len"))
-              batch.select(col("doc_id").as("probe_id"))
-                .join(hits, Seq("probe_id"), "left")
-                .select(col("probe_id").as("doc_id"),
-                  coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-                  coalesce(col("max_len"), lit(0L)).as("max_len"),
-                  col("n_hits").isNull.as("admitted"))
-                .write.mode("append").parquet(s"$root/out")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.foreachBatch(stream, s"$root/ckpt") { (batch, _) =>
+            val xmr = graft.operators.ExactSubstr.crossMaximalRepeats(
+              batch, corpus, col("doc_id"), split(col("text"), " ", -1),
+              minLen = 8, cap = 16)
+            val hits = xmr.groupBy("probe_id")
+              .agg(count(lit(1)).as("n_hits"),
+                max("len_tokens").as("max_len"))
+            batch.select(col("doc_id").as("probe_id"))
+              .join(hits, Seq("probe_id"), "left")
+              .select(col("probe_id").as("doc_id"),
+                coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+                coalesce(col("max_len"), lit(0L)).as("max_len"),
+                col("n_hits").isNull.as("admitted"))
+              .write.mode("append").parquet(s"$root/out")
+          }
         }
-        probe.where(col("doc_id") <= mid).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        probe.where(col("doc_id") > mid).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("doc_id", "n_hits", "max_len", "admitted")
           .orderBy("doc_id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
+import graft.streaming.Drain
 
 /** Event-time analytics over the `events` fixture (SURVEY §2.12): tumbling and
   * sliding windows, gap-based sessionization, and JSON extraction. These are
@@ -439,7 +440,7 @@ object EventQueries {
       import graft.streaming.EventStreams
       // the result reads the memory sink + batch tables, so the landing dir
       // deletes at query exit
-      val memName = Scratch.run(s, "graft_ssjoin_q_") { root =>
+      val streamed = Scratch.run(s, "graft_ssjoin_q_") { root =>
         val ev = Tables.events(s, d)
           .where(col("event_type").isin("view", "purchase"))
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -451,18 +452,13 @@ object EventQueries {
           .add("event_type", org.apache.spark.sql.types.StringType)
         def src() = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-        val joined = EventStreams.viewPurchaseJoin(src(), src(), "60 days")
-        val q = joined.writeStream.outputMode("append").format("memory")
-          .queryName(root.getName) // unique per invocation
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        root.getName
+        Drain.toMemory(EventStreams.viewPurchaseJoin(src(), src(), "60 days"),
+          s"$root/ckpt", "append")
       }
       def perUser(j: org.apache.spark.sql.DataFrame) =
         j.groupBy("user_id").agg(count(lit(1)).as("n_pairs"),
           sum(col("p_us") - col("v_us")).as("lat_us"))
-      val sAgg = perUser(s.table(memName))
+      val sAgg = perUser(streamed)
       val bEv = Tables.events(s, d)
       val bAgg = perUser(EventStreams.viewPurchaseJoin(bEv, bEv, "60 days"))
         .withColumnsRenamed(Map("n_pairs" -> "b_pairs", "lat_us" -> "b_lat"))
@@ -708,7 +704,7 @@ object EventQueries {
         |FROM ses, mx WHERE end_ms < mx.m - 2400000
         |ORDER BY user_id, start_ms""".stripMargin) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
       import graft.streaming.StatefulStreams
       val gapMs = 1800000L
@@ -726,7 +722,16 @@ object EventQueries {
       // the stream runs at StatefulStreams.statePartitionCap.
       Scratch.run(s, "graft_timer_q_", StatefulStreams.RocksDb,
           StatefulStreams.statePartitionCap(s, 20)) { root =>
-        def drain(): Unit = {
+        // wave A lands and drains to a STOP; wave B arrives and the SAME
+        // checkpoint resumes — buffers and registered timers must survive
+        // a full query restart through the RocksDB checkpoint. Waves are
+        // 20-user session censuses — coalesce the landing writes so the
+        // file source lists/opens a handful of files per batch instead of
+        // one near-empty file per core (guide §6 small-files; the state
+        // machine is file-pickup-order independent BY DESIGN, see above).
+        Drain.twoWaves(s"$root/landing",
+            e.where(expr(s"unix_millis(ts) <= $mid")).coalesce(4),
+            e.where(expr(s"unix_millis(ts) > $mid")).coalesce(4)) {
           val stream = s.readStream
             .schema(new StructType()
               .add("user_id", LongType).add("ts", TimestampType))
@@ -736,27 +741,10 @@ object EventQueries {
             .groupByKey(_._1)
             .transformWithState(new StatefulStreams.TimerSessions(gapMs),
               TimeMode.EventTime(), OutputMode.Append())
-          val q = stream.toDF("user_id", "start_ms", "end_ms", "n_events")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(
+            stream.toDF("user_id", "start_ms", "end_ms", "n_events"),
+            s"$root/out", s"$root/ckpt")
         }
-        // wave A lands and drains to a STOP; wave B arrives and the SAME
-        // checkpoint resumes — buffers and registered timers must survive
-        // a full query restart through the RocksDB checkpoint. Waves are
-        // 20-user session censuses — coalesce the landing writes so the
-        // file source lists/opens a handful of files per batch instead of
-        // one near-empty file per core (guide §6 small-files; the state
-        // machine is file-pickup-order independent BY DESIGN, see above).
-        e.where(expr(s"unix_millis(ts) <= $mid"))
-          .coalesce(4).write.parquet(s"$root/landing")
-        drain()
-        e.where(expr(s"unix_millis(ts) > $mid"))
-          .coalesce(4).write.mode("append").parquet(s"$root/landing")
-        drain()
         val mx = e.agg(expr("max(unix_millis(ts))").as("m"))
         s.read.parquet(s"$root/out")
           .crossJoin(broadcast(mx))
@@ -853,7 +841,7 @@ object EventQueries {
         |FROM e GROUP BY user_id, event_type
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
       val e = Tables.events(s, d).where(col("user_id") < 20)
@@ -871,15 +859,8 @@ object EventQueries {
           .groupByKey(_._1)
           .transformWithState(new StatefulStreams.CategoryCounts,
             TimeMode.None(), OutputMode.Update())
-        val memName = root.getName
-        val q = stream.toDF("user_id", "event_type", "n")
-          .writeStream.outputMode("update").format("memory")
-          .queryName(memName)
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val streamed = s.table(memName)
+        val streamed = Drain.toMemory(stream.toDF("user_id", "event_type", "n"),
+            s"$root/ckpt", "update")
           .groupBy("user_id", "event_type").agg(max("n").as("sn"))
         val batch = e.groupBy("user_id", "event_type")
           .agg(count(lit(1)).as("n_events"))
@@ -1096,7 +1077,7 @@ object EventQueries {
         |SELECT user_id, ttl_cnt, keep_cnt
         |FROM r ORDER BY user_id, keep_cnt""".stripMargin) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.LongType
       import org.apache.spark.sql.types.StructType
       import graft.streaming.StatefulStreams
@@ -1107,7 +1088,11 @@ object EventQueries {
       // state partitions capped at the 20-user key domain (q254's note)
       Scratch.run(s, "graft_ttl_q_", StatefulStreams.RocksDb,
           StatefulStreams.statePartitionCap(s, 20)) { root =>
-        def drain(): Unit = {
+        // coalesce(1): exactly one file per wave → exactly one micro-batch
+        // per drain (a split wave would reset the TTL counter mid-wave)
+        Drain.twoWaves(s"$root/landing",
+            e.where(col("us") <= mid).coalesce(1),
+            e.where(col("us") > mid).coalesce(1)) {
           val stream = s.readStream
             .schema(new StructType()
               .add("user_id", LongType).add("us", LongType))
@@ -1122,21 +1107,9 @@ object EventQueries {
           // AvailableNow never terminates — it kept appending empty
           // micro-batches forever when tried. Once() runs exactly one
           // batch per drain, which is also precisely the wave contract.
-          val q = stream.toDF("user_id", "ttl_cnt", "keep_cnt")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.Once())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(stream.toDF("user_id", "ttl_cnt", "keep_cnt"),
+            s"$root/out", s"$root/ckpt", once = true)
         }
-        // coalesce(1): exactly one file per wave → exactly one micro-batch
-        // per drain (a split wave would reset the TTL counter mid-wave)
-        e.where(col("us") <= mid).coalesce(1).write.parquet(s"$root/landing")
-        drain()
-        e.where(col("us") > mid).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("user_id", "ttl_cnt", "keep_cnt")
           .orderBy("user_id", "keep_cnt")
@@ -1168,14 +1141,16 @@ object EventQueries {
         |SELECT CAST(w.start_ms AS BIGINT) AS window_start_ms, w.n
         |FROM w, wm WHERE w.start_ms + 86400000 <= wm.wm_ms
         |ORDER BY window_start_ms""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       val e = Tables.events(s, d).select(col("ts"),
           expr("unix_micros(ts)").as("us"))
         .persist() // wave split boundary + both landing writes
       val mid = e.agg(expr("(min(us) + max(us)) div 2")).head().getLong(0)
       Scratch.run(s, "graft_late_q_") { root =>
-        def drain(): Unit = {
-          val q = s.readStream
+        // REVERSED waves: the new half first (watermark jumps), old half late
+        Drain.twoWaves(s"$root/landing",
+            e.where(col("us") > mid).select("ts").coalesce(1),
+            e.where(col("us") <= mid).select("ts").coalesce(1)) {
+          val stream = s.readStream
             .schema(org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField("ts",
                 org.apache.spark.sql.types.TimestampType))))
@@ -1183,20 +1158,8 @@ object EventQueries {
             .withWatermark("ts", "1 hour")
             .groupBy(window(col("ts"), "1 day")).count()
             .select(col("window.start").as("start"), col("count").as("n"))
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(stream, s"$root/out", s"$root/ckpt")
         }
-        // REVERSED waves: the new half first (watermark jumps), old half late
-        e.where(col("us") > mid).select("ts").coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        e.where(col("us") <= mid).select("ts").coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         // the result READS $root/out — materialize (day-census sized)
         // before the delete
         s.read.parquet(s"$root/out")
@@ -1327,7 +1290,7 @@ object EventQueries {
         |       TRUE AS stream_eq_batch
         |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
       val e = Tables.events(s, d).where(col("user_id") < 20)
@@ -1347,18 +1310,11 @@ object EventQueries {
           .groupByKey(_._1)
           .transformWithState(new StatefulStreams.RunningMax,
             TimeMode.None(), OutputMode.Update())
-        val memName = root.getName // unique per invocation
-        val q = stream.toDF("user_id", "n", "mx")
-          .writeStream.outputMode("update").format("memory")
-          .queryName(memName)
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         // Update mode emits the running state once per touched key per
         // micro-batch; n is monotone, so max(n) (and its mx) IS the final
         // state
-        val streamed = s.table(memName)
+        val streamed = Drain.toMemory(stream.toDF("user_id", "n", "mx"),
+            s"$root/ckpt", "update")
           .groupBy("user_id").agg(max("n").as("sn"), max("mx").as("smx"))
         val batch = e.groupBy("user_id")
           .agg(count(lit(1)).as("n_events"), max("cents").as("max_cents"))
@@ -1451,7 +1407,7 @@ object EventQueries {
     // whose commutative state tolerates any slicing).
     QueryDef("q256_stream_ewma", ewmaSql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
       val daily = dailyCents(Tables.events(s, d))
@@ -1459,7 +1415,14 @@ object EventQueries {
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)
       Scratch.run(s, "graft_sewma_q_", StatefulStreams.RocksDb) { root =>
-        def drain(): Unit = {
+        // ordered WAVES, not ordered files: the early half of the calendar
+        // lands and drains to a stop, then the late half arrives and the
+        // SAME checkpoint resumes — the smoothing state crosses a real
+        // query restart, and wave order is guaranteed by code, not by
+        // whatever file order the source picks (the flake post-mortem in
+        // the handoff)
+        Drain.twoWaves(s"$root/landing", daily.where(col("day") <= midDay),
+            daily.where(col("day") > midDay)) {
           val stream = s.readStream
             .schema(new StructType().add("event_type", StringType)
               .add("day", LongType).add("y", LongType))
@@ -1468,25 +1431,10 @@ object EventQueries {
             .groupByKey(_._1)
             .transformWithState(new StatefulStreams.OrderedEwma,
               TimeMode.None(), OutputMode.Append())
-          val q = stream.toDF("event_type", "day", "y_cents", "ewma_cents")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(
+            stream.toDF("event_type", "day", "y_cents", "ewma_cents"),
+            s"$root/out", s"$root/ckpt")
         }
-        // ordered WAVES, not ordered files: the early half of the calendar
-        // lands and drains to a stop, then the late half arrives and the
-        // SAME checkpoint resumes — the smoothing state crosses a real
-        // query restart, and wave order is guaranteed by code, not by
-        // whatever file order the source picks (the flake post-mortem in
-        // the handoff)
-        daily.where(col("day") <= midDay).write.parquet(s"$root/landing")
-        drain()
-        daily.where(col("day") > midDay)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("event_type", "day", "y_cents", "ewma_cents")
           .orderBy("event_type", "day")
@@ -3439,7 +3387,7 @@ object EventQueries {
          |FROM mins ORDER BY event_type""".stripMargin
     }) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.functions.{Hashes, KmvSketch}
       import graft.streaming.StatefulStreams
@@ -3457,18 +3405,11 @@ object EventQueries {
           .groupByKey(_._1)
           .transformWithState(new StatefulStreams.KmvStream(64),
             TimeMode.None(), OutputMode.Update())
-        val memName = root.getName // unique per invocation
-        val q = stream.toDF("event_type", "n", "kmins")
-          .writeStream.outputMode("update").format("memory")
-          .queryName(memName)
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         // n is monotone per key → the max-n emission carries final state
         val wn = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type").orderBy(col("n").desc)
-        val streamed = s.table(memName)
+        val streamed = Drain.toMemory(stream.toDF("event_type", "n", "kmins"),
+            s"$root/ckpt", "update")
           .withColumn("rk", row_number().over(wn))
           .where(col("rk") === 1)
           .select(col("event_type"), col("kmins").as("skmins"))
@@ -3533,7 +3474,7 @@ object EventQueries {
          |FROM samp ORDER BY event_type""".stripMargin
     }) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.functions.{Hashes, QuantileSketch}
       import graft.streaming.StatefulStreams
@@ -3552,18 +3493,11 @@ object EventQueries {
           .groupByKey(_._1)
           .transformWithState(new StatefulStreams.QSketchStream(64),
             TimeMode.None(), OutputMode.Update())
-        val memName = root.getName // unique per invocation
-        val q = stream.toDF("event_type", "n", "pairs")
-          .writeStream.outputMode("update").format("memory")
-          .queryName(memName)
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         // n is monotone per key → the max-n emission carries final state
         val wn = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type").orderBy(col("n").desc)
-        val streamed = s.table(memName)
+        val streamed = Drain.toMemory(stream.toDF("event_type", "n", "pairs"),
+            s"$root/ckpt", "update")
           .withColumn("rk", row_number().over(wn))
           .where(col("rk") === 1)
           .select(col("event_type"), col("pairs").as("spairs"))
@@ -3702,7 +3636,7 @@ object EventQueries {
     QueryDef("q412_stream_cusum",
       pageCusumSql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       import graft.streaming.StatefulStreams
       val daily = pageCusumInput(s, d)
@@ -3710,7 +3644,8 @@ object EventQueries {
       val midDay = daily.agg(expr("(min(day) + max(day)) div 2"))
         .head().getLong(0)
       Scratch.run(s, "graft_scusum_q_", StatefulStreams.RocksDb) { root =>
-        def drain(): Unit = {
+        Drain.twoWaves(s"$root/landing", daily.where(col("day") <= midDay),
+            daily.where(col("day") > midDay)) {
           val stream = s.readStream
             .schema(new StructType().add("event_type", StringType)
               .add("day", LongType).add("x", LongType)
@@ -3720,20 +3655,10 @@ object EventQueries {
             .groupByKey(_._1)
             .transformWithState(new StatefulStreams.PageCusum,
               TimeMode.None(), OutputMode.Append())
-          val q = stream
-            .toDF("event_type", "day", "x", "refx", "s_cusum", "alarm")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(
+            stream.toDF("event_type", "day", "x", "refx", "s_cusum", "alarm"),
+            s"$root/out", s"$root/ckpt")
         }
-        daily.where(col("day") <= midDay).write.parquet(s"$root/landing")
-        drain()
-        daily.where(col("day") > midDay)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .orderBy("event_type", "day")
           // the result READS $root/out lazily — materialize (day-census
@@ -5125,7 +5050,7 @@ object EventQueries {
     // batch, row for row, by the shared hash.
     QueryDef("q451_stream_throttle", ttlThrottleSql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import org.apache.spark.sql.types.{LongType, StructType}
       import graft.streaming.StatefulStreams
       val ud = Tables.events(s, d).where(col("user_id") < 30)
@@ -5135,7 +5060,11 @@ object EventQueries {
         .persist() // wave split boundary + both landing writes
       val mid = ud.agg(expr("(min(day) + max(day)) div 2")).head().getLong(0)
       Scratch.run(s, "graft_thr_q_", StatefulStreams.RocksDb) { root =>
-        def drain(): Unit = {
+        // ordered waves: all wave-A days precede all wave-B days, so the
+        // per-key recurrence sees days in order across the restart
+        Drain.twoWaves(s"$root/landing",
+            ud.where(col("day") <= mid).coalesce(1),
+            ud.where(col("day") > mid).coalesce(1)) {
           val stream = s.readStream
             .schema(new StructType()
               .add("user_id", LongType).add("day", LongType))
@@ -5144,22 +5073,9 @@ object EventQueries {
             .groupByKey(_._1)
             .transformWithState(new StatefulStreams.Throttle(7),
               TimeMode.None(), OutputMode.Append())
-          val q = stream.toDF("user_id", "day", "kept")
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$root/out")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toParquet(stream.toDF("user_id", "day", "kept"),
+            s"$root/out", s"$root/ckpt")
         }
-        // ordered waves: all wave-A days precede all wave-B days, so the
-        // per-key recurrence sees days in order across the restart
-        ud.where(col("day") <= mid).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        ud.where(col("day") > mid).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("user_id", "day", "kept")
           .orderBy("user_id", "day")

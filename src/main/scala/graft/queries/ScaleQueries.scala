@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.operators.{BloomPrefilter, BucketCatalog, SkewJoin, Split}
+import graft.streaming.Drain
 
 /** Scale-technique queries: TF-IDF over exploded tokens, bucketed
   * (exchange-free) joins, and salted skew joins. Each is oracle-checked
@@ -480,7 +481,6 @@ object ScaleQueries {
     // OracleHealthSpec-guarded).
     QueryDef("q489_stream_drawdown", DrawdownSql.sql) { (s, d) =>
       import graft.operators.PrefixSum
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
       Scratch.run(s, "graft_dd_q_") { root =>
         val ev = Tables.events(s, d)
@@ -500,57 +500,47 @@ object ScaleQueries {
           .add("bucket", LongType).add("n_led", LongType)
           .add("end_balance", LongType).add("end_peak", LongType)
           .add("max_drawdown", LongType)
-        def drain(): Unit = {
-          val q = s.readStream
+        Drain.twoWaves(s"$root/landing",
+            led.where(expr(s"event_id div ${wd}L") < bkSplit).coalesce(1),
+            led.where(expr(s"event_id div ${wd}L") >= bkSplit).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType()
               .add("event_id", LongType).add("cents", LongType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, bid: Long) =>
-              val f = new java.io.File(s"$root/out")
-              val prior =
-                if (f.isDirectory && f.listFiles != null
-                    && f.listFiles.exists(_.getName.startsWith("batch=")))
-                  s.read.schema(gridSchema.add("batch", LongType))
-                    .parquet(s"$root/out").where(col("batch") < bid)
-                else s.createDataFrame(
-                  s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  gridSchema.add("batch", LongType))
-              // 2 longs of carried state: end-of-history balance and peak
-              val carry = prior.agg(
-                coalesce(expr("max_by(end_balance, bucket)"), lit(0L))
-                  .as("pb"),
-                coalesce(expr("max_by(end_peak, bucket)"),
-                  lit(Long.MinValue)).as("pp"))
-              val bal = PrefixSum.cumsum(batch0, Seq(col("event_id")),
-                  "cents", inclusive = true, sumName = "lb")
-                .crossJoin(broadcast(carry))
-                .select(col("event_id"), col("pp"),
-                  (col("lb") + col("pb")).as("balance"))
-              val peak = PrefixSum.cumExtremum(bal, Seq(col("event_id")),
-                  "balance", isMax = true, inclusive = true,
-                  outName = "cmx")
-                .select(col("event_id"), col("balance"),
-                  greatest(col("cmx"), col("pp")).as("peak"))
-              peak.groupBy(expr(s"event_id div ${wd}L").as("bucket"))
-                .agg(count(lit(1)).as("n_led"),
-                  expr("max_by(balance, event_id)").as("end_balance"),
-                  expr("max_by(peak, event_id)").as("end_peak"),
-                  max(col("peak") - col("balance")).as("max_drawdown"))
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toBatchDirs(stream, s"$root/out", s"$root/ckpt") { (batch0, bid) =>
+            val f = new java.io.File(s"$root/out")
+            val prior =
+              if (f.isDirectory && f.listFiles != null
+                  && f.listFiles.exists(_.getName.startsWith("batch=")))
+                s.read.schema(gridSchema.add("batch", LongType))
+                  .parquet(s"$root/out").where(col("batch") < bid)
+              else s.createDataFrame(
+                s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                gridSchema.add("batch", LongType))
+            // 2 longs of carried state: end-of-history balance and peak
+            val carry = prior.agg(
+              coalesce(expr("max_by(end_balance, bucket)"), lit(0L))
+                .as("pb"),
+              coalesce(expr("max_by(end_peak, bucket)"),
+                lit(Long.MinValue)).as("pp"))
+            val bal = PrefixSum.cumsum(batch0, Seq(col("event_id")),
+                "cents", inclusive = true, sumName = "lb")
+              .crossJoin(broadcast(carry))
+              .select(col("event_id"), col("pp"),
+                (col("lb") + col("pb")).as("balance"))
+            val peak = PrefixSum.cumExtremum(bal, Seq(col("event_id")),
+                "balance", isMax = true, inclusive = true,
+                outName = "cmx")
+              .select(col("event_id"), col("balance"),
+                greatest(col("cmx"), col("pp")).as("peak"))
+            peak.groupBy(expr(s"event_id div ${wd}L").as("bucket"))
+              .agg(count(lit(1)).as("n_led"),
+                expr("max_by(balance, event_id)").as("end_balance"),
+                expr("max_by(peak, event_id)").as("end_peak"),
+                max(col("peak") - col("balance")).as("max_drawdown"))
+          }
         }
-        led.where(expr(s"event_id div ${wd}L") < bkSplit).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        led.where(expr(s"event_id div ${wd}L") >= bkSplit).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         val res = s.read.parquet(s"$root/out")
           .select("bucket", "n_led", "end_balance", "end_peak",
             "max_drawdown")
@@ -864,30 +854,25 @@ object ScaleQueries {
           .add("cents", org.apache.spark.sql.types.LongType)
           .add("op", org.apache.spark.sql.types.StringType)
           .add("v", org.apache.spark.sql.types.IntegerType)
-        val q = s.readStream.schema(schema)
+        val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-          .writeStream
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            val delta = Upsert.latestPerKey(batch, Seq("k"), "v")
-              .withColumnsRenamed(Map("st" -> "nst", "cents" -> "ncents", "v" -> "nv"))
-            val cur = s.read.parquet(curPath)
-            val takeChange = col("nv").isNotNull &&
-              (col("v").isNull || col("nv") > col("v"))
-            val next = cur.join(delta, Seq("k"), "full_outer")
-              .where(!(takeChange && col("op") === "D"))
-              .select(col("k"),
-                when(takeChange, col("nst")).otherwise(col("st")).as("st"),
-                when(takeChange, col("ncents")).otherwise(col("cents")).as("cents"),
-                when(takeChange, col("nv")).otherwise(col("v")).as("v"))
-            val out = s"$root/snap${id + 1}"
-            next.write.parquet(out)
-            curPath = out
-            batches += 1
-          }
-          .start()
-        q.awaitTermination()
+        Drain.foreachBatch(stream, s"$root/ckpt") { (batch, id) =>
+          val delta = Upsert.latestPerKey(batch, Seq("k"), "v")
+            .withColumnsRenamed(Map("st" -> "nst", "cents" -> "ncents", "v" -> "nv"))
+          val cur = s.read.parquet(curPath)
+          val takeChange = col("nv").isNotNull &&
+            (col("v").isNull || col("nv") > col("v"))
+          val next = cur.join(delta, Seq("k"), "full_outer")
+            .where(!(takeChange && col("op") === "D"))
+            .select(col("k"),
+              when(takeChange, col("nst")).otherwise(col("st")).as("st"),
+              when(takeChange, col("ncents")).otherwise(col("cents")).as("cents"),
+              when(takeChange, col("nv")).otherwise(col("v")).as("v"))
+          val out = s"$root/snap${id + 1}"
+          next.write.parquet(out)
+          curPath = out
+          batches += 1
+        }
         s.read.parquet(curPath)
           .select(col("k").as("o_orderkey"), col("st").as("o_orderstatus"),
             col("cents"), lit(batches >= 2).as("multi_batch"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.operators.{NswGraph, RandomProjection, Similarity}
+import graft.streaming.Drain
 
 /** Similarity search over `embeddings` (north-star similarity family):
   * brute-force exact cosine top-k, LSH bucket assignment, LSH-bucketed ANN
@@ -3160,7 +3161,6 @@ object SimilarityQueries {
     // needed (unlike q463's order-sensitive packing, playbook #47).
     QueryDef("q471_stream_grounding", RagGroundingSql.sql) { (s, d) =>
       import graft.operators.{DupSpans, Similarity}
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
       Scratch.run(s, "graft_ground_q_") { root =>
         val emb = Tables.embeddings(s, d)
@@ -3194,33 +3194,18 @@ object SimilarityQueries {
             .select(col("doc_id").as("query_id"), col("h"))
           RagGrounding.grade(ans, vtop, ltop, tg)
         }
-        def drain(): Unit = {
-          val q = s.readStream
+        val claims = t.where(col("doc_id") < 5).select("doc_id")
+        Drain.twoWaves(s"$root/landing",
+            claims.where(col("doc_id") < 3).coalesce(1),
+            claims.where(col("doc_id") >= 3).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType().add("doc_id", LongType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            // batchId-keyed subdir with overwrite: a micro-batch the engine
-            // retries after a partial write REPLACES its own output instead
-            // of double-appending graded rows (batch ids are checkpoint-
-            // scoped, so they stay unique across the stop/resume waves);
-            // the final read discovers batch= partitions and drops the key
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-              gradeBatch(batch)
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toBatchDirs(stream, s"$root/out", s"$root/ckpt") { (batch, _) =>
+            gradeBatch(batch)
+          }
         }
-        val claims = t.where(col("doc_id") < 5).select("doc_id")
-        claims.where(col("doc_id") < 3).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        claims.where(col("doc_id") >= 3).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         s.read.parquet(s"$root/out")
           .select("query_id", "n_trigrams", "vec_supported", "vec_ppm",
             "lex_supported", "lex_ppm")
@@ -3239,35 +3224,22 @@ object SimilarityQueries {
     // streamed ≡ batch exactly and the oracle is q461's VERBATIM
     // (shared MmrSql).
     QueryDef("q472_stream_mmr", MmrSql.sql) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StructType}
       Scratch.run(s, "graft_mmr_q_") { root =>
         val emb = Tables.embeddings(s, d).persist() // static corpus side
-        def drain(): Unit = {
-          val q = s.readStream
+        val queries = emb.where(col("vec_id") < 5).select("vec_id")
+        Drain.twoWaves(s"$root/landing",
+            queries.where(col("vec_id") < 3).coalesce(1),
+            queries.where(col("vec_id") >= 3).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType().add("vec_id", LongType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            // batchId-keyed overwrite for retry idempotency — q471's sink
-            // discipline
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-              Mmr.diversify(emb,
-                  emb.join(broadcast(batch.select("vec_id")), "vec_id"))
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toBatchDirs(stream, s"$root/out", s"$root/ckpt") { (batch, _) =>
+            Mmr.diversify(emb,
+              emb.join(broadcast(batch.select("vec_id")), "vec_id"))
+          }
         }
-        val queries = emb.where(col("vec_id") < 5).select("vec_id")
-        queries.where(col("vec_id") < 3).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        queries.where(col("vec_id") >= 3).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         val res = s.read.parquet(s"$root/out")
           .select("query_id", "pick_idx", "neighbor_id", "mmr_e7")
           .orderBy("query_id", "pick_idx")
@@ -3635,17 +3607,17 @@ private[queries] object HnswSql {
   val UpHops = 3
   val UpBeam = 8
 
-  val sql: String = {
-    import SimilarityQueries.{dotSql, normSql}
-    import graft.operators.NswGraph
+  /** The layered walk over two graph CTE chains: `baseCtes` ends in the
+    * base graph `baseG`, `hubCtes` (which may read `hubv`, the hub layer's
+    * vectors) ends in the hub graph `hubG`. Both graphs are symmetrized
+    * (`bu`, `hu`); the walk runs UpHops × UpBeam over `hu` from the
+    * smallest hub, then Hops × Beam over `bu`, graded by the recall tail.
+    * Shared by q267 and q294 (HnswUpsertSql).
+    */
+  def layeredWalkSql(baseCtes: String, baseG: String, hubCtes: String,
+                     hubG: String): String = {
+    import SimilarityQueries.normSql
     import graft.functions.Hashes
-    val base = NswGraph.refinedGraphCteSql(SimilarityQueries.Dim,
-      ScalableNswSql.Bands, ScalableNswSql.Rbits, ScalableNswSql.Seed,
-      ScalableNswSql.Cap, ScalableNswSql.KInternal, ScalableNswSql.Rounds,
-      NswSql.Deg, dotSql)
-    val hub = NswGraph.refinedGraphCteSql(SimilarityQueries.Dim, HubBands,
-      HubRbits, ScalableNswSql.Seed, ScalableNswSql.Cap, HubK, HubRounds,
-      HubDeg, dotSql, p = "h_", src = "hubv")
     val upHops = (1 to UpHops).map(h =>
       NswSql.hopOver(s"p${h - 1}", s"p$h", "hu", UpBeam)).mkString(",\n")
     val baseHops = (1 to NswSql.Hops).map(h =>
@@ -3654,21 +3626,34 @@ private[queries] object HnswSql {
     s"""WITH v AS MATERIALIZED (
        |  SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
        |  FROM embeddings),
-       |$base,
-       |bu AS MATERIALIZED (SELECT src, dst FROM g
-       |  UNION SELECT dst AS src, src AS dst FROM g),
+       |$baseCtes,
+       |bu AS MATERIALIZED (SELECT src, dst FROM $baseG
+       |  UNION SELECT dst AS src, src AS dst FROM $baseG),
        |hubv AS MATERIALIZED (
        |  SELECT vec_id, embedding, nrm FROM v
        |  WHERE (${Hashes.mulHashSql("vec_id", HubSalt)}) % $HubMod = 0),
-       |$hub,
-       |hu AS MATERIALIZED (SELECT src, dst FROM h_g
-       |  UNION SELECT dst AS src, src AS dst FROM h_g),
+       |$hubCtes,
+       |hu AS MATERIALIZED (SELECT src, dst FROM $hubG
+       |  UNION SELECT dst AS src, src AS dst FROM $hubG),
        |q AS (SELECT vec_id AS qid, embedding AS qe, nrm AS qn
        |      FROM v WHERE vec_id < ${NswSql.Nq}),
        |p0 AS (SELECT q.qid, (SELECT min(vec_id) FROM hubv) AS vid FROM q),
        |$upHops,
        |$baseHops,
        |${NswSql.recallTail(s"b${NswSql.Hops}")}""".stripMargin
+  }
+
+  val sql: String = {
+    import SimilarityQueries.dotSql
+    import graft.operators.NswGraph
+    val base = NswGraph.refinedGraphCteSql(SimilarityQueries.Dim,
+      ScalableNswSql.Bands, ScalableNswSql.Rbits, ScalableNswSql.Seed,
+      ScalableNswSql.Cap, ScalableNswSql.KInternal, ScalableNswSql.Rounds,
+      NswSql.Deg, dotSql)
+    val hub = NswGraph.refinedGraphCteSql(SimilarityQueries.Dim, HubBands,
+      HubRbits, ScalableNswSql.Seed, ScalableNswSql.Cap, HubK, HubRounds,
+      HubDeg, dotSql, p = "h_", src = "hubv")
+    layeredWalkSql(base, "g", hub, "h_g")
   }
 }
 
@@ -3734,9 +3719,8 @@ private[queries] object DeleteNswSql {
   * the q267 coarse-to-fine walk and the standard recall tail.
   */
 private[queries] object HnswUpsertSql {
-  import SimilarityQueries.{dotSql, normSql}
+  import SimilarityQueries.dotSql
   import graft.operators.NswGraph
-  import graft.functions.Hashes
 
   val sql: String = {
     val newPred = (id: String) => s"$id % 8 = 0"
@@ -3756,35 +3740,13 @@ private[queries] object HnswUpsertSql {
       HnswSql.HubBands, HnswSql.HubRbits, ScalableNswSql.Seed,
       ScalableNswSql.Cap, HnswSql.HubK, HnswSql.HubDeg, dotSql,
       newPred, baseG = "h_g", p = "w_", src = "hubv", out = "hg")
-    val upHops = (1 to HnswSql.UpHops).map(h =>
-      NswSql.hopOver(s"p${h - 1}", s"p$h", "hu", HnswSql.UpBeam)).mkString(",\n")
-    val baseHops = (1 to NswSql.Hops).map(h =>
-      NswSql.hopOver(if (h == 1) s"p${HnswSql.UpHops}" else s"b${h - 1}",
-        s"b$h", "bu", NswSql.Beam)).mkString(",\n")
-    s"""WITH v AS MATERIALIZED (
-       |  SELECT vec_id, embedding, ${normSql("embedding")} AS nrm
-       |  FROM embeddings),
-       |bv AS MATERIALIZED (
-       |  SELECT vec_id, embedding, nrm FROM v WHERE NOT (vec_id % 8 = 0)),
-       |$base,
-       |$up,
-       |bu AS MATERIALIZED (SELECT src, dst FROM bg
-       |  UNION SELECT dst AS src, src AS dst FROM bg),
-       |hubv AS MATERIALIZED (
-       |  SELECT vec_id, embedding, nrm FROM v
-       |  WHERE (${Hashes.mulHashSql("vec_id", HnswSql.HubSalt)}) % ${HnswSql.HubMod} = 0),
-       |hubbv AS MATERIALIZED (
-       |  SELECT vec_id, embedding, nrm FROM hubv WHERE NOT (vec_id % 8 = 0)),
-       |$hub,
-       |$hup,
-       |hu AS MATERIALIZED (SELECT src, dst FROM hg
-       |  UNION SELECT dst AS src, src AS dst FROM hg),
-       |q AS (SELECT vec_id AS qid, embedding AS qe, nrm AS qn
-       |      FROM v WHERE vec_id < ${NswSql.Nq}),
-       |p0 AS (SELECT q.qid, (SELECT min(vec_id) FROM hubv) AS vid FROM q),
-       |$upHops,
-       |$baseHops,
-       |${NswSql.recallTail(s"b${NswSql.Hops}")}""".stripMargin
+    // the base and hub layers each drop the batch (the 1/8 the upserts add)
+    val bv = """bv AS MATERIALIZED (
+      |  SELECT vec_id, embedding, nrm FROM v WHERE NOT (vec_id % 8 = 0))""".stripMargin
+    val hubbv = """hubbv AS MATERIALIZED (
+      |  SELECT vec_id, embedding, nrm FROM hubv WHERE NOT (vec_id % 8 = 0))""".stripMargin
+    HnswSql.layeredWalkSql(s"$bv,\n$base,\n$up", "bg",
+      s"$hubbv,\n$hub,\n$hup", "hg")
   }
 }
 

@@ -451,7 +451,7 @@ object SourceQueries {
         |       source AS tag
         |FROM documents ORDER BY id""".stripMargin) { (s, d) =>
       val dir = tmp("arrows", d)
-      graft.sources.ArrowIngest.writeStreams(
+      graft.sources.ArrowIngest.writeArrowStreams(
         Tables.documents(s, d).select(col("doc_id").as("id"),
           when(col("doc_id") % 7 === 0, lit(null).cast("double"))
             .otherwise(col("n_chars").cast("double") / 16.0).as("val"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Scratch, Tables}
 import graft.functions.Hashes
 import graft.operators.{Fixpoint, MinHash, PageRank, Split}
+import graft.streaming.Drain
 
 /** Training-data text pipeline ops over `documents` (north-star brief):
   * exact dedup, token stats, quality scoring, language-ID, fingerprinting.
@@ -3005,35 +3006,22 @@ object TextQueries {
     // a static corpus => streamed == batch EXACTLY - the oracle is q480's
     // VERBATIM (shared QuotaSampleSql), no weaker contract.
     QueryDef("q483_stream_quota", QuotaSampleSql.sql) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{StringType, StructType}
       Scratch.run(s, "graft_quota_q_") { root =>
         val report = quotaSampleReport(Tables.documents(s, d))
           .persist() // static corpus statistic: probed by every batch
         report.count(): Unit
-        def drain(): Unit = {
-          val q = s.readStream
+        Drain.twoWaves(s"$root/landing",
+            report.select("source").where(col("quota") % 2 === 0).coalesce(1),
+            report.select("source").where(col("quota") % 2 =!= 0).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType().add("source", StringType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            // batchId-keyed overwrite for retry idempotency - q471's sink
-            // discipline
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-              report.join(broadcast(batch.select("source")), "source")
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.toBatchDirs(stream, s"$root/out", s"$root/ckpt") { (batch, _) =>
+            report.join(broadcast(batch.select("source")), "source")
+          }
         }
-        report.select("source").where(col("quota") % 2 === 0).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        report.select("source").where(col("quota") % 2 =!= 0).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         val res = s.read.parquet(s"$root/out")
           .select("source", "n", "quota", "n_selected", "quota_exact",
             "sel_checksum")
@@ -3290,7 +3278,6 @@ object TextQueries {
     // state dir). Two waves here ⇒ compaction is a no-op, so the query
     // states the contract instead of performing it.
     QueryDef("q486_stream_vocab_growth", VocabGrowthSql.sql) { (s, d) =>
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType, StructType}
       Scratch.run(s, "graft_vgrow_q_") { root =>
         val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -3312,62 +3299,53 @@ object TextQueries {
           .add("new_types", LongType).add("cum_tokens", LongType)
           .add("cum_types", LongType)
         val seenSchema = new StructType().add("token", StringType)
-        def drain(): Unit = {
-          val q = s.readStream
+        Drain.twoWaves(s"$root/landing",
+            docs.where(expr(s"doc_id div ${wd}L") < ckSplit).coalesce(1),
+            docs.where(expr(s"doc_id div ${wd}L") >= ckSplit).coalesce(1)) {
+          val stream = s.readStream
             .schema(new StructType()
               .add("doc_id", LongType).add("text", StringType))
             .option("maxFilesPerTrigger", 1)
             .parquet(s"$root/landing")
-            .writeStream
-            .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, bid: Long) =>
-              val batch = batch0.persist() // doc census + trigram explode
-              val toks = trigramTokens(batch)
-                .persist() // token count + first-occurrence share it
-              val dk = batch
-                .groupBy(expr(s"doc_id div ${wd}L").as("ck"))
-                .agg(count(lit(1)).as("n_docs"))
-              val dt = toks
-                .groupBy(expr(s"doc_id div ${wd}L").as("ck"))
-                .agg(count(lit(1)).as("nt"))
-              val seen = readPrior(s"$root/state", seenSchema, bid)
-                .select("token")
-              val ft = toks.groupBy("token").agg(min("doc_id").as("fd"))
-                .join(seen, Seq("token"), "left_anti")
-                .persist() // the nv census + the state delta share it
-              val nv = ft.groupBy(expr(s"fd div ${wd}L").as("ck"))
-                .agg(count(lit(1)).as("nv"))
-              val prior = readPrior(s"$root/out", gridSchema, bid)
-                .agg(coalesce(max("cum_tokens"), lit(0L)).as("pt"),
-                  coalesce(max("cum_types"), lit(0L)).as("pv"))
-              // batch-local cumsum over the batch's ≤bounded ck slice,
-              // offset by the carried-in totals
-              val w = Window.orderBy("ck")
-              dk.join(dt, Seq("ck"), "left").join(nv, Seq("ck"), "left")
-                .crossJoin(broadcast(prior))
-                .select(col("ck"), col("n_docs"),
-                  coalesce(col("nv"), lit(0L)).as("new_types"),
-                  (sum(coalesce(col("nt"), lit(0L))).over(w) + col("pt"))
-                    .as("cum_tokens"),
-                  (sum(coalesce(col("nv"), lit(0L))).over(w) + col("pv"))
-                    .as("cum_types"))
-                .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
-              ft.select("token")
-                .write.mode("overwrite").parquet(s"$root/state/batch=$bid")
-              ft.unpersist()
-              toks.unpersist()
-              batch.unpersist(): Unit
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Drain.foreachBatch(stream, s"$root/ckpt") { (batch0, bid) =>
+            val batch = batch0.persist() // doc census + trigram explode
+            val toks = trigramTokens(batch)
+              .persist() // token count + first-occurrence share it
+            val dk = batch
+              .groupBy(expr(s"doc_id div ${wd}L").as("ck"))
+              .agg(count(lit(1)).as("n_docs"))
+            val dt = toks
+              .groupBy(expr(s"doc_id div ${wd}L").as("ck"))
+              .agg(count(lit(1)).as("nt"))
+            val seen = readPrior(s"$root/state", seenSchema, bid)
+              .select("token")
+            val ft = toks.groupBy("token").agg(min("doc_id").as("fd"))
+              .join(seen, Seq("token"), "left_anti")
+              .persist() // the nv census + the state delta share it
+            val nv = ft.groupBy(expr(s"fd div ${wd}L").as("ck"))
+              .agg(count(lit(1)).as("nv"))
+            val prior = readPrior(s"$root/out", gridSchema, bid)
+              .agg(coalesce(max("cum_tokens"), lit(0L)).as("pt"),
+                coalesce(max("cum_types"), lit(0L)).as("pv"))
+            // batch-local cumsum over the batch's ≤bounded ck slice,
+            // offset by the carried-in totals
+            val w = Window.orderBy("ck")
+            dk.join(dt, Seq("ck"), "left").join(nv, Seq("ck"), "left")
+              .crossJoin(broadcast(prior))
+              .select(col("ck"), col("n_docs"),
+                coalesce(col("nv"), lit(0L)).as("new_types"),
+                (sum(coalesce(col("nt"), lit(0L))).over(w) + col("pt"))
+                  .as("cum_tokens"),
+                (sum(coalesce(col("nv"), lit(0L))).over(w) + col("pv"))
+                  .as("cum_types"))
+              .write.mode("overwrite").parquet(s"$root/out/batch=$bid")
+            ft.select("token")
+              .write.mode("overwrite").parquet(s"$root/state/batch=$bid")
+            ft.unpersist()
+            toks.unpersist()
+            batch.unpersist(): Unit
+          }
         }
-        docs.where(expr(s"doc_id div ${wd}L") < ckSplit).coalesce(1)
-          .write.parquet(s"$root/landing")
-        drain()
-        docs.where(expr(s"doc_id div ${wd}L") >= ckSplit).coalesce(1)
-          .write.mode("append").parquet(s"$root/landing")
-        drain()
         val res = s.read.parquet(s"$root/out")
           .select("ck", "n_docs", "new_types", "cum_tokens", "cum_types")
           .orderBy("ck")

@@ -66,7 +66,7 @@ object ArrowIngest {
     * marker. Input schema is the scan contract: (id long, val double
     * nullable, tag string).
     */
-  def writeStreams(df: DataFrame, dir: String, batchRows: Int = 1024): Unit = {
+  def writeArrowStreams(df: DataFrame, dir: String, batchRows: Int = 1024): Unit = {
     import org.apache.hadoop.fs.Path
     import df.sparkSession.implicits._
     val path = new Path(dir)

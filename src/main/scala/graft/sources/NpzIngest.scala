@@ -186,13 +186,7 @@ object NpzIngest {
       .option("pathGlobFilter", "*.npz")
       .load(srcDir)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
-    val q = decodeRows(bin).writeStream
-      .format("parquet")
-      .option("path", dest)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Drain.toParquet(decodeRows(bin), dest, checkpoint)
   }
 
   /** One-time NPZ→Parquet conversion, idempotent exactly like the reference's

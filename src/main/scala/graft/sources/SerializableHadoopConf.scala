@@ -6,8 +6,8 @@ import org.apache.hadoop.conf.Configuration
 
 /** Java-serializable wrapper for a Hadoop `Configuration`, so task-side
   * writers ([[TfRecordIngest.writeExamples]], [[WebDatasetIngest.writeSamples]],
-  * [[ArrowIngest.writeStreams]]) resolve their output `FileSystem` from the
-  * JOB's configuration instead of a task-side `new Configuration()`. On
+  * [[ArrowIngest.writeArrowStreams]]) resolve their output `FileSystem` from
+  * the JOB's configuration instead of a task-side `new Configuration()`. On
   * `local[*]` against `file://` the two are identical; on a cluster the job
   * conf carries the object-store credentials/endpoints (fs.s3a.* etc.) that
   * executor defaults lack. `Configuration` itself is `Writable` but not

@@ -290,12 +290,6 @@ object TfRecordIngest {
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n): Unit)
     val bin = reader.load(srcDir)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
-    val q = decodeRows(bin).writeStream
-      .format("parquet")
-      .option("path", dest)
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.streaming.Drain.toParquet(decodeRows(bin), dest, checkpoint)
   }
 }

@@ -63,9 +63,9 @@ object DocStreams {
     * dropped by contract). A re-arrival after the horizon of a document this
     * stream itself already emitted — but which is not in `corpus` — will be
     * emitted again. Callers wanting dedup against everything ever emitted
-    * must fold the sink back into `corpus`, as [[runIngest]] does at
-    * start-up; downstream exact dedup (q30) remains the safety net, exactly
-    * as in production ingest pipelines.
+    * must fold the sink back into `corpus` at start-up; downstream exact
+    * dedup (q30) remains the safety net, exactly as in production ingest
+    * pipelines.
     */
   def dedupedIngest(newDocs: DataFrame, corpus: DataFrame,
                     horizon: String = "1 hour"): DataFrame = {
@@ -170,11 +170,9 @@ object DocStreams {
                        corpus: DataFrame, outDir: String,
                        checkpointDir: String,
                        minJaccard: Double = 0.5,
-                       compactEvery: Int = 0): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = readLanding(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                       compactEvery: Int = 0): Unit =
+    Drain.toBatchDirs(readLanding(spark, landingDir), outDir, checkpointDir) {
+      (batch, batchId) =>
         // settle any compaction a crash interrupted BEFORE listing anything:
         // a half-finished swap otherwise hides consolidated survivors from
         // this batch's index read (admitting duplicates) or double-counts
@@ -202,12 +200,7 @@ object DocStreams {
           corpus.select("doc_id", "text").unionByName(
             p.select("doc_id", "text")))
         nearDupGate(batch, acc, minJaccard)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Compact the near-dup gate's accumulated output: fold all `batch=*`
     * partition directories — PLUS the contents of any existing
@@ -317,33 +310,5 @@ object DocStreams {
       }
     }
     if (old.isDirectory) rmrf(old)
-  }
-
-  /** Land → dedup → parquet append, exactly-once, drain-all-and-stop
-    * (Trigger.AvailableNow — the same incremental-batch idiom as the
-    * streaming NPZ converter).
-    *
-    * Documents already written to `outDir` by previous runs are folded into
-    * the anti-join side at start-up, so cross-RUN re-arrivals are dropped
-    * even though each run's in-stream state is watermark-bounded (see
-    * [[dedupedIngest]]'s guarantee scope).
-    */
-  def runIngest(spark: SparkSession, landingDir: String, corpus: DataFrame,
-                outDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val prior =
-      if (new java.io.File(outDir).isDirectory)
-        Some(spark.read.schema(landingSchema.add("h", StringType))
-          .parquet(outDir).select("doc_id", "ingest_ts", "text"))
-      else None
-    val known = prior.fold(corpus.select("text"))(p =>
-      corpus.select("text").unionByName(p.select("text")))
-    val q = dedupedIngest(readLanding(spark, landingDir), known)
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

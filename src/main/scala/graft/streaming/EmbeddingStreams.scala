@@ -53,23 +53,16 @@ object EmbeddingStreams {
     Pq.encode(embeddings, "vec_id", "embedding", cb)
 
   /** Land → encode → parquet append, exactly-once, drain-all-and-stop
-    * (Trigger.AvailableNow — the incremental-batch idiom shared with the
-    * NPZ converter and [[DocStreams.runIngest]]): a retried batch never
-    * double-writes codes, and a re-run against an unchanged landing
-    * directory is a no-op against the same checkpoint.
+    * ([[Drain]] — the incremental-batch idiom shared with the NPZ and
+    * TFRecord converters): a retried batch never double-writes codes, and
+    * a re-run against an unchanged landing directory is a no-op against
+    * the same checkpoint.
     */
   def runEncode(spark: SparkSession, landingDir: String, cb: Pq.Codebooks,
                 outDir: String, checkpointDir: String,
-                maxFilesPerTrigger: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val q = encoded(readLanding(spark, landingDir, maxFilesPerTrigger), cb)
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                maxFilesPerTrigger: Option[Int] = None): Unit =
+    Drain.toParquet(encoded(readLanding(spark, landingDir, maxFilesPerTrigger),
+      cb), outDir, checkpointDir)
 
   /** Continuously-MAINTAINED graph-ANN index — the streaming composition
     * of [[graft.operators.NswGraph.upsert]]: each arriving embedding batch
@@ -89,11 +82,9 @@ object EmbeddingStreams {
                           indexDir: String, checkpointDir: String,
                           dim: Int, bands: Int, rbits: Int, seed: Long,
                           cap: Int, kInternal: Int, deg: Int): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.operators.NswGraph
-    val q = readLanding(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
+    Drain.foreachBatch(readLanding(spark, landingDir), checkpointDir) {
+      (batch0, _) =>
         val batch = batch0.persist() // probed by sigs, ids, and the union
         val cur = new java.io.File(s"$indexDir/current")
         // crash-window recovery: the swap below is two renames
@@ -134,9 +125,6 @@ object EmbeddingStreams {
         require(new java.io.File(tmp).renameTo(cur), s"swap in $tmp")
         rmrf(old)
         batch.unpersist(): Unit
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 }

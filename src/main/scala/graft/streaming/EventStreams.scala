@@ -166,14 +166,4 @@ object EventStreams {
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"), col("event_id"))
-
-  /** Run a streaming aggregation to completion against bounded input via the
-    * in-memory sink (batch-parity harness).
-    */
-  def runToMemory(agg: DataFrame, name: String, mode: String = "complete"): DataFrame = {
-    val q = agg.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    agg.sparkSession.table(name)
-  }
 }

@@ -71,20 +71,14 @@ class EventsSchemaSpec extends AnyFunSuite {
     // the live fixture dir is the micros-NTZ generation; prove stream ≡ batch
     val batch = Tables.events(spark, TestSpark.sfDir)
       .select(col("event_id"), unix_micros(col("ts")).as("us"))
-    val streamed = {
-      val q = streaming.EventStreams.readStream(spark, TestSpark.sfDir)
-        .select(col("event_id"), unix_micros(col("ts")).as("us"))
-      val out = java.nio.file.Files.createTempDirectory("events-stream").toString
-      q.writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-      spark.read.parquet(s"$out/data")
+    Scratch.run(spark, "graft_events_stream_") { out =>
+      streaming.Drain.toParquet(
+        streaming.EventStreams.readStream(spark, TestSpark.sfDir)
+          .select(col("event_id"), unix_micros(col("ts")).as("us")),
+        s"$out/data", s"$out/ckpt")
+      val streamed = spark.read.parquet(s"$out/data")
+      assert(streamed.count() === batch.count())
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
     }
-    assert(streamed.count() === batch.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 }

@@ -121,6 +121,56 @@ class PrefixSumSpec extends AnyFunSuite {
       "sorted intermediates still persisted after their emit jobs")
   }
 
+  test("two zips over one sorted plan keep it cached until both emit jobs end") {
+    // inc and exc over the same input, order and fan-out persist ONE cache
+    // entry; releasing it when the first emit job ends let the other side's
+    // still-running stage lose its blocks ("Block rdd_… does not exist")
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    import org.apache.spark.storage.StorageLevel
+    import graft.operators.ScaleZip
+    spark.catalog.clearCache()
+    ScaleZip.sweepPending(spark)
+    val df = data(200, seed = 13L)
+    val ord = Seq(col("x"), col("id"))
+    val inc = PrefixSum.cumsum(df, ord, "v", inclusive = true,
+      sumName = "inc", numPartitions = 3)
+    val exc = PrefixSum.cumsum(df, ord, "v", inclusive = false,
+      sumName = "exc", numPartitions = 3)
+    val shared = df.repartitionByRange(3, ord: _*).sortWithinPartitions(ord: _*)
+    assert(shared.storageLevel != StorageLevel.NONE)
+    assert(ScaleZip.pendingCount(spark) == 2)
+    // registered after the zips' release listener on the same listener
+    // queue, so once it sees a job end the release listener has handled it
+    val jobEnds = new AtomicInteger()
+    val probe = new SparkListener {
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        jobEnds.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(probe)
+    def actionAndDrain(df: org.apache.spark.sql.DataFrame): Unit = {
+      val seen = jobEnds.get
+      df.collect()
+      val deadline = System.currentTimeMillis() + 10000
+      while (jobEnds.get == seen && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(jobEnds.get > seen, "listener bus did not deliver the job end")
+    }
+    try {
+      actionAndDrain(inc)
+      assert(ScaleZip.pendingCount(spark) == 1)
+      assert(shared.storageLevel != StorageLevel.NONE,
+        "shared sorted plan released while the other zip still reads it")
+      actionAndDrain(exc)
+      assert(ScaleZip.pendingCount(spark) == 0)
+      assert(shared.storageLevel == StorageLevel.NONE,
+        "shared sorted plan not released after the last emit job")
+    } finally {
+      spark.sparkContext.removeSparkListener(probe)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("default fan-out derives from the session, not a literal") {
     // verdict r13 #2: a literal partition count bakes a cluster size into
     // the plan; the default must track spark.sql.shuffle.partitions. The

@@ -57,16 +57,16 @@ class Round8Spec extends AnyFunSuite {
   }
 
   test("OrderedEwma survives negative series values (state-existence init)") {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
-    import graft.streaming.StatefulStreams
+    import graft.streaming.{Drain, StatefulStreams}
     import spark.implicits._
     Scratch.run(spark, "graft_ewma_neg_", StatefulStreams.RocksDb) { root =>
       // two waves; the carried state goes NEGATIVE after wave A — the
       // old -1L sentinel would have silently restarted the recurrence
-      Seq(("k", 1L, -100L), ("k", 2L, -50L)).toDF("g", "day", "y")
-        .coalesce(1).write.parquet(s"$root/landing")
-      def drain(): Unit = {
+      Drain.twoWaves(s"$root/landing",
+          Seq(("k", 1L, -100L), ("k", 2L, -50L)).toDF("g", "day", "y").coalesce(1),
+          Seq(("k", 3L, -10L)).toDF("g", "day", "y").coalesce(1)) {
         val st = spark.readStream
           .schema(new StructType().add("g", StringType)
             .add("day", LongType).add("y", LongType))
@@ -75,17 +75,9 @@ class Round8Spec extends AnyFunSuite {
           .groupByKey(_._1)
           .transformWithState(new StatefulStreams.OrderedEwma,
             TimeMode.None(), OutputMode.Update())
-        val q = st.toDF("g", "day", "y", "s")
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        Drain.toParquet(st.toDF("g", "day", "y", "s"), s"$root/out",
+          s"$root/ckpt")
       }
-      drain()
-      Seq(("k", 3L, -10L)).toDF("g", "day", "y")
-        .coalesce(1).write.mode("append").parquet(s"$root/landing")
-      drain()
       val out = spark.read.parquet(s"$root/out")
         .collect().map(r => (r.getLong(1), r.getLong(3))).sortBy(_._1)
       // recurrence: s1=-100, s2=(-50-100)/2=-75, s3=(-10-75)/2=-42

@@ -54,11 +54,9 @@ class SourceSpec extends AnyFunSuite {
   test("streaming read drains the source and matches the batch rows") {
     val stream = spark.readStream.format("graft.sources.ShowerEventsSource")
       .option("rows", "500").option("partitions", "4").load()
-    val q = stream.writeStream.format("memory").queryName("shower_stream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("shower_stream").collect().map(_.toSeq).toSet
+    val streamed = Scratch.run(spark, "graft_shower_stream_") { root =>
+      graft.streaming.Drain.toMemory(stream, s"$root/ckpt", "append")
+    }.collect().map(_.toSeq).toSet
     val batch = read(500).collect().map(_.toSeq).toSet
     assert(streamed == batch)
     assert(streamed.size == 500)

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.EventStreams
+import graft.streaming.{Drain, EventStreams}
 
 /** Streaming/batch parity (SURVEY §2.12, §7.4.6): the same aggregation logic
   * over the same bounded input must agree between a Structured Streaming run
@@ -10,21 +11,29 @@ import graft.streaming.EventStreams
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** `df` drained to a stop through the memory sink, checkpointed in a
+    * scratch dir.
+    */
+  private def drained(df: DataFrame, mode: String = "complete"): DataFrame =
+    Scratch.run(spark, "graft_drain_spec_") { root =>
+      Drain.toMemory(df, s"$root/ckpt", mode)
+    }
+
   test("tumbling-window counts: streaming == batch") {
     val batch = EventStreams.tumblingCounts(Tables.events(spark, TestSpark.sfDir))
       .collect().map(_.toSeq).toSet
-    val stream = EventStreams.runToMemory(
-      EventStreams.tumblingCounts(EventStreams.readStream(spark, TestSpark.sfDir)),
-      "tumbling_parity").collect().map(_.toSeq).toSet
+    val stream = drained(
+      EventStreams.tumblingCounts(EventStreams.readStream(spark, TestSpark.sfDir)))
+      .collect().map(_.toSeq).toSet
     assert(stream == batch)
     assert(batch.nonEmpty)
   }
 
   test("stateful flatMapGroupsWithState profiles match the batch aggregation") {
     import org.apache.spark.sql.functions._
-    val out = EventStreams.runToMemory(
+    val out = drained(
       EventStreams.statefulUserProfiles(EventStreams.readStream(spark, TestSpark.sfDir)).toDF(),
-      "stateful_profiles", mode = "update")
+      "update")
     // last update per user is the final state
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
@@ -41,9 +50,9 @@ class StreamingSpec extends AnyFunSuite {
   test("sliding-window counts: streaming == batch") {
     val batch = EventStreams.slidingCounts(Tables.events(spark, TestSpark.sfDir))
       .collect().map(_.toSeq).toSet
-    val stream = EventStreams.runToMemory(
-      EventStreams.slidingCounts(EventStreams.readStream(spark, TestSpark.sfDir)),
-      "sliding_parity").collect().map(_.toSeq).toSet
+    val stream = drained(
+      EventStreams.slidingCounts(EventStreams.readStream(spark, TestSpark.sfDir)))
+      .collect().map(_.toSeq).toSet
     assert(batch.nonEmpty)
     assert(stream == batch)
   }
@@ -52,20 +61,20 @@ class StreamingSpec extends AnyFunSuite {
     val b = Tables.events(spark, TestSpark.sfDir)
     val batch = EventStreams.viewPurchaseJoin(b, b)
       .collect().map(_.toSeq).toSet
-    val stream = EventStreams.runToMemory(
+    val stream = drained(
       EventStreams.viewPurchaseJoin(
         EventStreams.readStream(spark, TestSpark.sfDir),
         EventStreams.readStream(spark, TestSpark.sfDir)),
-      "ssjoin_parity", mode = "append").collect().map(_.toSeq).toSet
+      "append").collect().map(_.toSeq).toSet
     assert(batch.nonEmpty)
     assert(stream == batch)
   }
 
   test("streaming dedup keeps exactly one row per (user, type) key") {
     import org.apache.spark.sql.functions._
-    val out = EventStreams.runToMemory(
+    val out = drained(
       EventStreams.dedupFirstPerUserType(EventStreams.readStream(spark, TestSpark.sfDir)),
-      "dedup_parity", mode = "append")
+      "append")
     val keys = out.select("user_id", "event_type")
       .collect().map(_.toSeq)
     // one surviving row per key (which event_id survives depends on
@@ -98,10 +107,10 @@ class StreamingSpec extends AnyFunSuite {
       val corpus = Seq((100L, "corpus one"), (101L, "corpus two"))
         .toDF("doc_id", "text")
       // force one file per micro-batch so the dedup state crosses batches
-      val stream = EventStreams.runToMemory(
+      val stream = drained(
         DocStreams.dedupedIngest(
           DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
-        "ingest_dedup_parity", mode = "append")
+        "append")
       val streamDigests = stream.select("h").collect().map(_.getString(0)).toSet
       val batch = DocStreams.dedupedIngest(
         (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
@@ -134,10 +143,10 @@ class StreamingSpec extends AnyFunSuite {
       b2.toDF("doc_id", "ingest_ts", "text").repartition(1)
         .write.mode("append").parquet(dir)
       val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
-      val stream = EventStreams.runToMemory(
+      val stream = drained(
         DocStreams.curatedIngest(
           DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)), corpus),
-        "curated_parity", mode = "append")
+        "append")
       val batch = DocStreams.curatedIngest(
         (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus)
       assert(stream.select("h").collect().map(_.getString(0)).toSet ==
@@ -169,11 +178,11 @@ class StreamingSpec extends AnyFunSuite {
         .write.mode("append").parquet(dir)
       val corpus = Seq((100L, "corpus body the a of")).toDF("doc_id", "text")
       val block = Seq("dark web", "bad crawl")
-      val stream = EventStreams.runToMemory(
+      val stream = drained(
         DocStreams.moderatedIngest(
           DocStreams.readLanding(spark, dir, maxFilesPerTrigger = Some(1)),
           corpus, block),
-        "moderated_parity", mode = "append")
+        "append")
       val batch = DocStreams.moderatedIngest(
         (b1 ++ b2).toDF("doc_id", "ingest_ts", "text"), corpus, block)
       assert(stream.select("h").collect().map(_.getString(0)).toSet ==
@@ -226,7 +235,7 @@ class StreamingSpec extends AnyFunSuite {
           .add("item", org.apache.spark.sql.types.StringType))
         .option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
         .agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
-      val streamed = EventStreams.runToMemory(stream, "cms_stream_parity")
+      val streamed = drained(stream)
         .head().getSeq[Long](0)
       val batch = items.agg(CountMin.sketch(col("item"), 4, 64).as("sk"))
         .head().getSeq[Long](0)
@@ -236,12 +245,15 @@ class StreamingSpec extends AnyFunSuite {
 
   test("TTL state evicts between drains; TTL-free state survives the restart") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import org.apache.spark.sql.types.{LongType, StructType}
     import graft.streaming.StatefulStreams
     import spark.implicits._
     Scratch.run(spark, "graft_ttl_spec_", StatefulStreams.RocksDb) { root =>
-      def drain(): Unit = {
+      // wave A: key 1 ×3, key 2 ×1; wave B: key 1 ×2, key 3 ×1
+      Drain.twoWaves(s"$root/landing",
+          Seq((1L, 0L), (1L, 0L), (1L, 0L), (2L, 0L)).toDF("k", "x").coalesce(1),
+          Seq((1L, 0L), (1L, 0L), (3L, 0L)).toDF("k", "x").coalesce(1)) {
         val st = spark.readStream
           .schema(new StructType().add("k", LongType).add("x", LongType))
           .parquet(s"$root/landing")
@@ -251,20 +263,9 @@ class StreamingSpec extends AnyFunSuite {
             TimeMode.ProcessingTime(), OutputMode.Update())
         // Trigger.Once, not AvailableNow: ProcessingTime mode keeps
         // shouldRunAnotherBatch true forever (see q268)
-        val q = st.toDF("k", "ttl_cnt", "keep_cnt")
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$root/out")
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.Once()).start()
-        q.awaitTermination()
+        Drain.toParquet(st.toDF("k", "ttl_cnt", "keep_cnt"), s"$root/out",
+          s"$root/ckpt", once = true)
       }
-      // wave A: key 1 ×3, key 2 ×1; wave B: key 1 ×2, key 3 ×1
-      Seq((1L, 0L), (1L, 0L), (1L, 0L), (2L, 0L)).toDF("k", "x")
-        .coalesce(1).write.parquet(s"$root/landing")
-      drain()
-      Seq((1L, 0L), (1L, 0L), (3L, 0L)).toDF("k", "x")
-        .coalesce(1).write.mode("append").parquet(s"$root/landing")
-      drain()
       val out = spark.read.parquet(s"$root/out")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(out == Set(
@@ -275,9 +276,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("session windows produce sane sessions under watermark") {
-    val sessions = EventStreams.runToMemory(
-      EventStreams.sessionAggregates(EventStreams.readStream(spark, TestSpark.sfDir)),
-      "session_parity")
+    val sessions = drained(
+      EventStreams.sessionAggregates(EventStreams.readStream(spark, TestSpark.sfDir)))
     val n = sessions.count()
     assert(n > 0)
     // session invariant: start <= end, positive event counts
