@@ -27,13 +27,28 @@ import graft.operators._
   */
 object PipelineDemo {
 
+  /** The deposit pattern sin(0.7·i)·cos(1.3·j) shared by every synthetic
+    * grid, cell (i, j) of the 16×16 station grid.
+    */
+  private val edepPattern: Array[Array[Double]] =
+    Array.tabulate(16, 16)((i, j) => math.sin(i * 0.7) * math.cos(j * 1.3))
+
   /** Deterministic pseudo-random shower_events: label, physics features, and
-    * a 16×16 energy-deposit grid, all pure expressions of event_id.
+    * a 16×16 energy-deposit grid, all pure expressions of event_id. Cell
+    * (i, j) of the grid is `(u7 + pattern(i)(j) + 1) / 3` as float, with one
+    * draw u7 per event.
     */
   def syntheticEvents(spark: SparkSession, n: Long): DataFrame = {
     def u(id: org.apache.spark.sql.Column, salt: Int) = // uniform-ish [0,1)
       (graft.functions.Hashes.mulHash(id, salt).cast("double") / 1000000007.0)
     val id = col("event_id")
+    // `aggregate` over an empty array binds the draw to the accumulator once
+    // per row, and its finish lambda builds the grid from the constant
+    // pattern; a draw projected as a column below would be inlined back into
+    // the per-cell lambda by CollapseProject.
+    val edep = aggregate(typedLit(Array.empty[Double]), u(id, 7), (acc, _) => acc,
+      u7 => transform(array(edepPattern.toSeq.map(r => array(r.toSeq.map(lit): _*)): _*), row =>
+        transform(row, t => ((u7 + t + 1.0) / 3.0).cast("float"))))
     spark.range(0, n).toDF("event_id")
       .select(id,
         (u(id, 1) * 2).cast("int").as("label"),
@@ -42,10 +57,7 @@ object PipelineDemo {
         (u(id, 4) * 360).as("azimuth"),
         (u(id, 5) * 200 - 100).as("core_x"),
         (u(id, 6) * 200 - 100).as("core_y"),
-        transform(sequence(lit(0), lit(15)), i =>
-          transform(sequence(lit(0), lit(15)), j =>
-            ((u(id, 7) + sin(i * 0.7) * cos(j * 1.3) + 1.0) / 3.0).cast("float")))
-          .as("edep"))
+        edep.as("edep"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -92,10 +104,12 @@ object PipelineDemo {
       .withColumn("dir_z", Physics.dirZ(col("zenith")))
       .withColumn("split", Split.assignSplit(col("event_id"), 21))
     events.write.mode("overwrite").partitionBy("split").parquet(s"$out/events")
-    // rotation augmentation: 3× sampled 90°-rotated copies of train only.
-    // Augment from the *materialized* table: rot90's indexed access over the
-    // raw synthesis expression would re-evaluate the whole 256-cell grid per
-    // element (the projection-inlining trap — see TextHashExprs scaladoc).
+    // rotation augmentation: 3× sampled 90°-rotated copies of train only,
+    // read back from the materialized split table. rot90 is one copy loop
+    // that evaluates its grid once per row, so the projection-inlining trap
+    // (see TextHashExprs scaladoc) no longer applies to it: the nested
+    // `transform`/`element_at` form it replaced re-evaluated an inlined
+    // synthesis grid per cell.
     val train = spark.read.parquet(s"$out/events").where(col("split") === "train")
     val augmented = (1 to 3).foldLeft(train) { (acc, k) =>
       acc.unionAll(

@@ -34,11 +34,15 @@ object SqlSmoke {
       "SELECT channel_stats(embedding, 64) AS s FROM embeddings").head()
       .getSeq[org.apache.spark.sql.Row](0)
 
-    // vec family + grid_rot90 through SQL, checked against the Column API
+    // vec family + grid_rot90 through SQL, checked against the Column API;
+    // the nested layout (rows sliced from the flat embedding) must flatten
+    // to the flat rotation
     val vecSql = spark.sql(
       """SELECT vec_dot(embedding, embedding) AS d,
         |       vec_dist_sq(embedding, embedding) AS z,
-        |       grid_rot90(embedding, 8, 1) AS r
+        |       grid_rot90(embedding, 8, 1) AS r,
+        |       flatten(grid_rot90(
+        |         transform(sequence(0, 7), i -> slice(embedding, i * 8 + 1, 8)), 8, 1)) AS rn
         |FROM embeddings ORDER BY vec_id LIMIT 5""".stripMargin).collect()
     val vecCol = Tables.embeddings(spark, sfDir)
       .select(graft.functions.Tensors.dot(col("embedding"), col("embedding")).as("d"),
@@ -46,7 +50,7 @@ object SqlSmoke {
       .orderBy("vec_id").limit(5).collect()
     val vecOk = vecSql.zip(vecCol).forall { case (a, b) =>
       a.getDouble(0) == b.getDouble(0) && a.getDouble(1) == 0.0 &&
-        a.getSeq[Float](2) == b.getSeq[Float](1)
+        a.getSeq[Float](2) == b.getSeq[Float](1) && a.getSeq[Float](3) == b.getSeq[Float](1)
     }
 
     println(s"SQL_SMOKE hash_parity=$hashOk vec_parity=$vecOk rows=${viaSql.length} " +

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Flatten}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
@@ -43,35 +43,73 @@ case class ChannelStatsAgg(
     b
   }
 
-  override def update(b: Array[Double], input: InternalRow): Array[Double] = {
-    val v = child.eval(input)
-    if (v == null) return b
-    val arr = v.asInstanceOf[ArrayData]
-    // exposed to arbitrary SQL via GraftExtensions — fail loudly on ragged or
-    // null-holed arrays rather than reading past the element region
-    // strict equality: a longer array silently truncated would mask an
-    // upstream reshape bug just as badly as a short one read out of bounds
-    if (arr.numElements() != n)
-      throw new IllegalArgumentException(
-        s"channel_stats(dim=$n) got an array of ${arr.numElements()} elements")
+  override def update(b: Array[Double], input: InternalRow): Array[Double] =
+    flattenedChild match {
+      case Some(grid) => updateRows(b, grid.eval(input).asInstanceOf[ArrayData])
+      case None =>
+        val v = child.eval(input)
+        if (v == null) return b
+        val arr = v.asInstanceOf[ArrayData]
+        checkLength(arr.numElements())
+        val cnt = b(0) + 1
+        b(0) = cnt
+        var d = 0
+        while (d < n) { welford(b, cnt, d, arr, d); d += 1 }
+        b
+    }
+
+  /** `flatten(grid)` read in place: the rows of `grid` in row-major order
+    * feed the same per-element update as the flat array would, so a row's
+    * contribution is bit-equal, without materializing the flat array. As
+    * with `Flatten`, a null grid or any null row makes the value null, and
+    * the row is skipped.
+    */
+  private def updateRows(b: Array[Double], grid: ArrayData): Array[Double] = {
+    if (grid == null) return b
+    val rows = grid.numElements()
+    var total = 0
+    var r = 0
+    while (r < rows) {
+      if (grid.isNullAt(r)) return b
+      total += grid.getArray(r).numElements()
+      r += 1
+    }
+    checkLength(total)
     val cnt = b(0) + 1
     b(0) = cnt
     var d = 0
-    while (d < n) {
-      if (arr.isNullAt(d))
-        throw new IllegalArgumentException(
-          s"channel_stats: null element at index $d (nulls unsupported)")
-      val x = if (isFloat) arr.getFloat(d).toDouble else arr.getDouble(d)
-      val mean = b(1 + d)
-      val delta = x - mean
-      val newMean = mean + delta / cnt
-      b(1 + d) = newMean
-      b(1 + n + d) += delta * (x - newMean)
-      if (x < b(1 + 2 * n + d)) b(1 + 2 * n + d) = x
-      if (x > b(1 + 3 * n + d)) b(1 + 3 * n + d) = x
-      d += 1
+    r = 0
+    while (r < rows) {
+      val row = grid.getArray(r)
+      val len = row.numElements()
+      var i = 0
+      while (i < len) { welford(b, cnt, d, row, i); d += 1; i += 1 }
+      r += 1
     }
     b
+  }
+
+  // exposed to arbitrary SQL via GraftExtensions — fail loudly on ragged or
+  // null-holed arrays rather than reading past the element region
+  // strict equality: a longer array silently truncated would mask an
+  // upstream reshape bug just as badly as a short one read out of bounds
+  private def checkLength(len: Int): Unit =
+    if (len != n)
+      throw new IllegalArgumentException(s"channel_stats(dim=$n) got an array of $len elements")
+
+  /** Welford step for dimension `d` with element `i` of `arr`, `cnt` rows in. */
+  @inline private def welford(b: Array[Double], cnt: Double, d: Int, arr: ArrayData, i: Int): Unit = {
+    if (arr.isNullAt(i))
+      throw new IllegalArgumentException(
+        s"channel_stats: null element at index $d (nulls unsupported)")
+    val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+    val mean = b(1 + d)
+    val delta = x - mean
+    val newMean = mean + delta / cnt
+    b(1 + d) = newMean
+    b(1 + n + d) += delta * (x - newMean)
+    if (x < b(1 + 2 * n + d)) b(1 + 2 * n + d) = x
+    if (x > b(1 + 3 * n + d)) b(1 + 3 * n + d) = x
   }
 
   override def merge(a: Array[Double], c: Array[Double]): Array[Double] = {
@@ -118,6 +156,11 @@ case class ChannelStatsAgg(
 
   @transient private lazy val isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  /** The grid when the child is `flatten(grid)`, which [[update]] walks in place. */
+  @transient private lazy val flattenedChild: Option[Expression] = child match {
+    case Flatten(grid) => Some(grid)
+    case _ => None
+  }
 
   override def dataType: DataType = ArrayType(new StructType()
     .add("mean", DoubleType).add("stddev", DoubleType)

@@ -3,56 +3,38 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Higher-order-function builders for the reference's array/tensor operators
-  * (SURVEY §2 rows 32-37). All of these compile to Catalyst `transform` /
-  * `aggregate` expression trees over `ArrayType` columns — no explode, no UDF,
-  * so a 16×16 grid op costs one projection, not a 256× row blow-up.
+/** Builders for the reference's array/tensor operators (SURVEY §2 rows
+  * 32-37). Each compiles to a Catalyst `transform` / `aggregate` tree or a
+  * codegen'd expression over `ArrayType` columns — no explode, no UDF, so a
+  * 16×16 grid op costs one projection, not a 256× row blow-up.
   */
 object Tensors {
 
-  /** 90°·k counter-clockwise rotation of an n×n grid stored as
-    * array<array<T>> (reference `np.rot90(m, k, axes=(1,2))`,
-    * create_train_valid_test_datasets.py:72-74).
-    *
-    * Closed-form index map per k — one transform layer, 2 element accesses
-    * per output cell. Composing single rotations (`once(once(m))`) would
-    * re-evaluate the inner rotation expression per outer element: O(n^(2k))
-    * cell evaluations per row once projections collapse.
-    *
-    * Matrix argument should be a materialized column (attribute), not a
-    * large inline expression, for the same re-evaluation reason.
+  /** 90°·k counter-clockwise rotation of an n×n grid (reference
+    * `np.rot90(m, k, axes=(1,2))`, create_train_valid_test_datasets.py:72-74),
+    * stored either as array<array<T>> or row-major flat array<T>, T float or
+    * double. One codegen'd copy loop (functions/VectorExprs.GridRot90Expr)
+    * with the closed-form index map per k: no `transform` tree, and the grid
+    * expression is evaluated once per row, so an inline (unmaterialized) grid
+    * costs nothing extra. Bit-equal to the nested closed-form
+    * `transform`/`element_at` rotation, null cells and ANSI out-of-bounds
+    * errors included. k ≡ 0 (mod 4) returns the grid itself.
     */
-  def rot90(matrix: Column, n: Int, k: Int): Column = {
+  def rot90(grid: Column, n: Int, k: Int): Column = {
     require(n > 0)
-    val m = matrix
-    def cell(f: (Column, Column) => (Column, Column)): Column =
-      transform(sequence(lit(0), lit(n - 1)), r =>
-        transform(sequence(lit(0), lit(n - 1)), c => {
-          val (row1, col1) = f(r, c) // 1-based
-          element_at(element_at(m, row1), col1)
-        }))
     ((k % 4) + 4) % 4 match {
-      case 0 => m
-      case 1 => cell((r, c) => (c + 1, lit(n) - r))          // out[r][c]=m[c][n-1-r]
-      case 2 => cell((r, c) => (lit(n) - r, lit(n) - c))     // 180°
-      case 3 => cell((r, c) => (lit(n) - c, r + 1))          // out[r][c]=m[n-1-c][r]
+      case 0 => grid
+      case kk =>
+        import org.apache.spark.sql.GraftColumnBridge
+        GraftColumnBridge.column(VectorExprs.GridRot90Expr(
+          GraftColumnBridge.expression(grid), n, kk))
     }
   }
 
-  /** Flat-array form of [[rot90]]: the same permutation on a row-major flat
-    * grid as ONE codegen'd copy loop (functions/VectorExprs.GridRot90Expr) —
-    * no reshape/flatten HOF tree. Bit-equal to
+  /** [[rot90]] on a row-major flat grid: bit-equal to
     * `flatten(rot90(reshape(flat, n, n), n, k))`.
     */
-  def rot90Flat(flat: Column, n: Int, k: Int): Column = {
-    val kk = ((k % 4) + 4) % 4
-    if (kk == 0) flat
-    else {
-      import org.apache.spark.sql.GraftColumnBridge
-      GraftColumnBridge.column(VectorExprs.GridRot90Expr(
-        GraftColumnBridge.expression(flat), n, kk))
-    }
-  }
+  def rot90Flat(flat: Column, n: Int, k: Int): Column = rot90(flat, n, k)
 
   /** Matrix transpose via nested transform (reference dataset.py:11 axis swap). */
   def transposeGrid(matrix: Column, n: Int): Column =

@@ -2,8 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expression for the embedding dot product — the innermost
@@ -91,58 +95,174 @@ object VectorExprs {
     override def prettyName: String = "vec_dot"
   }
 
+  // Closed-form rot90 source cell (numpy convention) of output cell (r, c);
+  // k must be 1..3 (the builders short-circuit k≡0 to the child).
+  @inline private def srcRow(r: Int, c: Int, n: Int, k: Int): Int = k match {
+    case 1 => c                // out[r][c] = in[c][n-1-r]
+    case 2 => n - 1 - r
+    case _ => n - 1 - c        // k = 3: out[r][c] = in[n-1-c][r]
+  }
+  @inline private def srcCol(r: Int, c: Int, n: Int, k: Int): Int = k match {
+    case 1 => n - 1 - r
+    case 2 => n - 1 - c
+    case _ => r
+  }
+
   /** Flat 90°·k rotation of an n×n grid stored row-major — the same index
-    * maps as [[Tensors.rot90]]'s nested-HOF form (numpy rot90 convention),
-    * as one primitive copy loop over the flat array. k must be 1..3 (the
-    * builder short-circuits k≡0 to the child).
+    * maps as [[rot90Grid]] (numpy rot90 convention), as one primitive copy
+    * loop over the flat array.
     */
   def rot90Data(a: ArrayData, n: Int, k: Int, isFloat: Boolean): ArrayData = {
     val sz = n * n
     require(a.numElements() >= sz,
       s"grid_rot90: need $sz elements for an ${n}x$n grid, got ${a.numElements()}")
-    @inline def src(p: Int): Int = {
-      val r = p / n; val c = p % n
-      k match {
-        case 1 => c * n + (n - 1 - r)       // out[r][c] = in[c][n-1-r]
-        case 2 => (n - 1 - r) * n + (n - 1 - c)
-        case _ => (n - 1 - c) * n + r       // k = 3
-      }
-    }
     if (isFloat) {
       val out = new Array[Float](sz)
       var p = 0
-      while (p < sz) { out(p) = a.getFloat(src(p)); p += 1 }
+      while (p < sz) {
+        val r = p / n; val c = p % n
+        out(p) = a.getFloat(srcRow(r, c, n, k) * n + srcCol(r, c, n, k)); p += 1
+      }
       UnsafeArrayData.fromPrimitiveArray(out)
     } else {
       val out = new Array[Double](sz)
       var p = 0
-      while (p < sz) { out(p) = a.getDouble(src(p)); p += 1 }
+      while (p < sz) {
+        val r = p / n; val c = p % n
+        out(p) = a.getDouble(srcRow(r, c, n, k) * n + srcCol(r, c, n, k)); p += 1
+      }
       UnsafeArrayData.fromPrimitiveArray(out)
     }
   }
 
-  /** grid_rot90(flat, n, k): the rot90 permutation without the
-    * reshape→nested-transform→flatten HOF tree (which costs ~9× the scan at
-    * sf0.1 — measured; this is the vec_dot story again). Pure permutation:
-    * results are bit-equal to the HOF form.
+  /** Nested 90°·k rotation of an n×n grid stored as array<array<T>>, with
+    * the semantics of the closed-form `element_at(element_at(m, r1), c1)`
+    * map it replaces: a null grid, row or cell reads as a null cell, cells
+    * past column/row n are ignored, and an index past an array's end throws
+    * INVALID_ARRAY_INDEX_IN_ELEMENT_AT when `failOnError` (ANSI) and reads
+    * as null otherwise. A dense grid — n non-null rows of at least n non-null
+    * cells, the only shape the pipeline writes — takes one primitive copy
+    * loop per output row.
     */
-  case class GridRot90Expr(child: Expression, n: Int, k: Int)
+  def rot90Grid(m: ArrayData, n: Int, k: Int, isFloat: Boolean,
+                failOnError: Boolean): ArrayData = {
+    val rows = denseRows(m, n)
+    val out = new Array[Any](n)
+    var r = 0
+    while (r < n) {
+      out(r) =
+        if (rows == null) rot90RowChecked(m, n, k, r, isFloat, failOnError)
+        else if (isFloat) {
+          val o = new Array[Float](n)
+          var c = 0
+          while (c < n) { o(c) = rows(srcRow(r, c, n, k)).getFloat(srcCol(r, c, n, k)); c += 1 }
+          UnsafeArrayData.fromPrimitiveArray(o)
+        } else {
+          val o = new Array[Double](n)
+          var c = 0
+          while (c < n) { o(c) = rows(srcRow(r, c, n, k)).getDouble(srcCol(r, c, n, k)); c += 1 }
+          UnsafeArrayData.fromPrimitiveArray(o)
+        }
+      r += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The first n rows of `m` if each is non-null with n non-null leading
+    * cells, else null (the cell-by-cell path then keeps the null and
+    * out-of-bounds semantics).
+    */
+  private def denseRows(m: ArrayData, n: Int): Array[ArrayData] = {
+    if (m == null || m.numElements() < n) return null
+    val rows = new Array[ArrayData](n)
+    var i = 0
+    while (i < n) {
+      if (m.isNullAt(i)) return null
+      val row = m.getArray(i)
+      if (row.numElements() < n) return null
+      var c = 0
+      while (c < n) { if (row.isNullAt(c)) return null; c += 1 }
+      rows(i) = row
+      i += 1
+    }
+    rows
+  }
+
+  private def rot90RowChecked(m: ArrayData, n: Int, k: Int, r: Int, isFloat: Boolean,
+                              failOnError: Boolean): ArrayData = {
+    // element_at(a, i + 1) on a non-null array: null past the end unless ANSI
+    def inBounds(a: ArrayData, i: Int): Boolean =
+      i < a.numElements() || (failOnError &&
+        (throw GraftColumnBridge.elementAtIndexError(i + 1, a.numElements())))
+    val o = new Array[Any](n)
+    var c = 0
+    while (c < n) {
+      val sr = srcRow(r, c, n, k)
+      val sc = srcCol(r, c, n, k)
+      if (m != null && inBounds(m, sr) && !m.isNullAt(sr)) {
+        val row = m.getArray(sr)
+        if (inBounds(row, sc) && !row.isNullAt(sc))
+          o(c) = if (isFloat) row.getFloat(sc) else row.getDouble(sc)
+      }
+      c += 1
+    }
+    new GenericArrayData(o)
+  }
+
+  /** grid_rot90(grid, n, k): the rot90 permutation as one codegen'd call,
+    * over a row-major flat array<float|double> or a nested
+    * array<array<float|double>> — no reshape/flatten or nested-transform HOF
+    * tree (the flat HOF form cost ~9× the scan at sf0.1 — measured; this is
+    * the vec_dot story again). Pure permutation: results are bit-equal to the
+    * HOF forms. The nested result has the HOF form's type (non-null outer
+    * array of rows whose cells may be null); `failOnError` is captured from
+    * the session's ANSI setting at construction, as `element_at` does.
+    */
+  case class GridRot90Expr(child: Expression, n: Int, k: Int,
+                           failOnError: Boolean = SQLConf.get.ansiEnabled)
       extends UnaryExpression {
     require(n > 0 && k >= 1 && k <= 3, s"grid_rot90: bad n=$n k=$k")
-    override def dataType: DataType = child.dataType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<float|double>, got ${other.catalogString}")
+    private lazy val nested = child.dataType match {
+      case ArrayType(_: ArrayType, _) => true
+      case _ => false
     }
-    private lazy val isFloat = isFloatArray(child)
+    private lazy val elem = child.dataType match {
+      case ArrayType(ArrayType(e, _), _) => e
+      case ArrayType(e, _) => e
+      case other => other
+    }
+    private lazy val isFloat = elem == FloatType
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (elem == FloatType || elem == DoubleType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects array<float|double> or array<array<float|double>>, " +
+          s"got ${child.dataType.catalogString}")
+    override def dataType: DataType =
+      if (nested) ArrayType(ArrayType(elem, containsNull = true), containsNull = false)
+      else child.dataType
+    override def nullable: Boolean = !nested && child.nullable
+    // failOnError only steers the nested path's ragged grids; left out of
+    // the plan text, which stays `grid_rot90(child, n, k)`
+    override protected def stringArgs: Iterator[Any] = Iterator(child, n, k)
 
-    override def nullSafeEval(a: Any): Any =
-      rot90Data(a.asInstanceOf[ArrayData], n, k, isFloat)
+    override def eval(input: InternalRow): Any = {
+      val a = child.eval(input).asInstanceOf[ArrayData]
+      if (nested) rot90Grid(a, n, k, isFloat, failOnError)
+      else if (a == null) null
+      else rot90Data(a, n, k, isFloat)
+    }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
+      if (!nested) nullSafeCodeGen(ctx, ev, c =>
         s"${ev.value} = graft.functions.VectorExprs.rot90Data($c, $n, $k, $isFloat);")
+      else {
+        val c = child.genCode(ctx)
+        ev.copy(code = code"""
+          |${c.code}
+          |${CodeGenerator.javaType(dataType)} ${ev.value} =
+          |  graft.functions.VectorExprs.rot90Grid(${c.isNull} ? null : ${c.value},
+          |    $n, $k, $isFloat, $failOnError);""".stripMargin, isNull = FalseLiteral)
+      }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the `private[sql]` Column↔Expression and plan→DataFrame
   * converters — the supported path for third-party Catalyst expressions and
-  * logical plans in Spark 4's column-node world.
+  * logical plans in Spark 4's column-node world — and to the error builders
+  * those expressions share with Spark's own.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -16,4 +17,8 @@ object GraftColumnBridge {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `element_at`'s ANSI out-of-bounds error (INVALID_ARRAY_INDEX_IN_ELEMENT_AT). */
+  def elementAtIndexError(index: Int, numElements: Int): RuntimeException =
+    errors.QueryExecutionErrors.invalidElementAtIndexError(index, numElements, null)
 }

@@ -258,7 +258,7 @@ class AdvancedSpec extends AnyFunSuite {
       val grid = Tensors.reshape(col("flat"), n, n)
       val out = df.select(col("id"),
         Tensors.rot90Flat(col("flat"), n, k).as("fast"),
-        flatten(Tensors.rot90(grid, n, k)).as("hof")).collect()
+        flatten(Rot90Reference.rot90(grid, n, k)).as("hof")).collect()
       out.foreach { r =>
         assert(r.getSeq[Float](1) == r.getSeq[Float](2), s"k=$k id=${r.getLong(0)}")
       }
