@@ -51,12 +51,8 @@ object Bench {
     * hygiene (no leaked blocks across queries) and timing honesty: a second
     * rep must not serve the first rep's persisted token relations.
     */
-  private def clearCaches(spark: SparkSession): Unit = {
+  private def clearCaches(spark: SparkSession): Unit =
     spark.catalog.clearCache()
-    // zips built but never actioned leave pending release entries —
-    // sweep them with the caches (ScaleZip scaladoc)
-    graft.operators.ScaleZip.sweepPending(spark)
-  }
 
   /** Cumulative shuffle counters fed by a SparkListener; task-end events
     * arrive asynchronously, so snapshots poll until two consecutive reads

@@ -838,7 +838,6 @@ object ScaleProbe {
         println(f"$name%-18s $t1%8.2f $t10%8.2f ${exp}%5.2f")
       spark.catalog.clearCache() // checkpoint/persist residue must not leak
                                  // into the next shape's timings
-      graft.operators.ScaleZip.sweepPending(spark)
     }
     spark.stop()
   }

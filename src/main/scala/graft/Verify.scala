@@ -26,12 +26,7 @@ object Verify {
       // frames so unpersisting inside them would defeat the cache. The
       // runner owns the action, so it owns the release — without this a
       // full run leaks every persisted plan for the session's lifetime.
-      // The sweep also drops zip release entries whose emit job never ran
-      // (a built-but-never-actioned zip — ScaleZip scaladoc).
-      finally {
-        spark.catalog.clearCache()
-        graft.operators.ScaleZip.sweepPending(spark)
-      }
+      finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Distributed dense global rank over a total order — the scalable
   * replacement for a partition-less `row_number()` window.
@@ -12,29 +11,28 @@ import org.apache.spark.storage.StorageLevel
   * Window.orderBy(...))` funnels the ENTIRE relation through one task —
   * fine for k-sized stats tables, an anti-pattern for unbounded-cardinality
   * relations (a web-corpus vocabulary is 10⁷–10⁸ token types). The
-  * standard two-stage shape instead:
+  * standard two-stage shape instead ([[ScaleZip.zip]]):
   *
   *   1. range-partition by the sort key and sort within partitions — every
   *      partition holds a contiguous, sorted slice of the global order;
-  *   2. census each partition (one tiny count job), prefix-sum the counts
-  *      into per-partition offsets on the driver (P numbers);
+  *   2. census each partition (one tiny count job); each emit task sums
+  *      the counts of the partitions before its own into its offset;
   *   3. stream each partition once, assigning offset + local position.
   *
-  * Steps 2–3 are exactly `RDD.zipWithIndex` over the sorted relation. The
-  * result is IDENTICAL to the single-task window for any partition count —
-  * the order is total (caller must include a unique tie-break column), so
-  * partition boundaries cannot move any row's rank — which is why the q116
-  * oracle keeps stating plain `row_number() OVER (ORDER BY ...)`: same
-  * function, different (scalable) evaluation strategy.
+  * The result is IDENTICAL to the single-task window for any partition
+  * count — the order is total (caller must include a unique tie-break
+  * column), so partition boundaries cannot move any row's rank — which is
+  * why the q116 oracle keeps stating plain `row_number() OVER (ORDER BY
+  * ...)`: same function, different (scalable) evaluation strategy.
   *
-  * The sorted relation is persisted before zipping so the census job and
-  * the emit job read the SAME range boundaries (range partitioning samples
-  * its bounds; two independent recomputations could disagree). The cache is
-  * released eagerly once the first job materializing the zip RDD completes
-  * ([[ScaleZip.releaseAfterJobWith]]); the runner's clearCache lifecycle
-  * remains the backstop.
+  * Nothing is cached: the census and the emit read the same range
+  * exchange's shuffle output, so both see the same partition boundaries
+  * (ScaleZip scaladoc).
   */
 object GlobalRank {
+
+  /** Row count of one partition — the census both zips share. */
+  private def rows(it: Iterator[_]): Long = it.foldLeft(0L)((n, _) => n + 1L)
 
   /** @param order total order (MUST end in a unique key — ties would make
     *              ranks partition-dependent)
@@ -45,19 +43,13 @@ object GlobalRank {
     * @param idName appended LongType column: 0-based dense global rank
     */
   def zipWithRank(df: DataFrame, order: Seq[Column], numPartitions: Int = 0,
-                  idName: String): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(ScaleZip.fanout(df, numPartitions),
-        order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val schema = sorted.schema.add(idName, LongType, nullable = false)
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ i)
+                  idName: String): DataFrame =
+    ScaleZip.zip[Long](df, order, numPartitions,
+        Seq(StructField(idName, LongType, nullable = false)))(rows) {
+      (counts, pid) =>
+        var rn = counts.take(pid).sum // 0-based global rank of the next row
+        _ => { rn += 1L; Seq(rn - 1L) }
     }
-    ScaleZip.releaseAfterJobWith(sorted, indexed.id)
-    spark.createDataFrame(indexed, schema)
-  }
 
   /** `ntile(n) OVER (ORDER BY order)` evaluated with the same two-stage
     * zip — the scalable replacement for a partition-less NTILE window over
@@ -76,39 +68,20 @@ object GlobalRank {
   def zipWithNtile(df: DataFrame, order: Seq[Column], tiles: Int,
                    numPartitions: Int = 0, outName: String): DataFrame = {
     require(tiles >= 1, s"ntile needs at least 1 bucket, got $tiles")
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(ScaleZip.fanout(df, numPartitions),
-        order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val census = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rows = 0L
-      it.foreach(_ => rows += 1L)
-      Iterator((pid, rows))
-    }.collect().sortBy(_._1)
-    val nParts = sorted.rdd.getNumPartitions
-    val rowOff = new Array[Long](nParts)
-    census.foreach { case (pid, rows) =>
-      if (pid + 1 < nParts) rowOff(pid + 1) = rows
+    ScaleZip.zip[Long](df, order, numPartitions,
+        Seq(StructField(outName, LongType, nullable = false)))(rows) {
+      (counts, pid) =>
+        val total = counts.sum
+        val q = if (total >= tiles) total / tiles else 0L
+        val r = if (total >= tiles) total % tiles else total
+        var rn = counts.take(pid).sum // 0-based global rank of the next row
+        _ => {
+          val bucket =
+            if (rn < (q + 1L) * r) rn / (q + 1L)
+            else r + (rn - (q + 1L) * r) / q
+          rn += 1L
+          Seq(bucket + 1L)
+        }
     }
-    var i = 1
-    while (i < nParts) { rowOff(i) += rowOff(i - 1); i += 1 }
-    val total = census.map(_._2).sum
-    val q = if (total >= tiles) total / tiles else 0L
-    val r = if (total >= tiles) total % tiles else total
-    val schema = sorted.schema.add(outName, LongType, nullable = false)
-    val bOff = spark.sparkContext.broadcast(rowOff)
-    val out = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rn = bOff.value(pid) // 0-based global rank of the next row
-      it.map { row =>
-        val bucket =
-          if (rn < (q + 1L) * r) rn / (q + 1L)
-          else r + (rn - (q + 1L) * r) / q
-        rn += 1L
-        Row.fromSeq(row.toSeq :+ (bucket + 1L))
-      }
-    }
-    ScaleZip.releaseAfterJobWith(sorted, out.id)
-    spark.createDataFrame(out, schema)
   }
 }

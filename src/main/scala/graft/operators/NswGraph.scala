@@ -99,15 +99,10 @@ object NswGraph {
     * per-src window, nothing quadratic in the corpus.
     */
   def build(emb: DataFrame, idCol: String, embCol: String, dim: Int,
-            bands: Int, rbits: Int, seed: Long, cap: Int, deg: Int,
-            allSigs: Option[DataFrame] = None): DataFrame = {
+            bands: Int, rbits: Int, seed: Long, cap: Int,
+            deg: Int): DataFrame = {
     require(cap >= 1 && deg >= 1)
-    // allSigs: the precomputed (vec_id, band, sig) relation for EXACTLY
-    // this emb set (the production posture — signatures persist next to
-    // the graph; chained maintenance harnesses slice one corpus-wide
-    // relation instead of recomputing the plane projections per step)
-    val sig = allSigs.getOrElse(
-      signatures(emb, idCol, embCol, dim, bands, rbits, seed))
+    val sig = signatures(emb, idCol, embCol, dim, bands, rbits, seed)
     // bucket census is ≤ bands · 2^rbits rows — broadcast back, no extra
     // exchange on the data path (the SemDedup census posture)
     val cs = sig.groupBy("band", "sig").agg(count(lit(1)).as("bsize"))
@@ -148,11 +143,9 @@ object NswGraph {
     */
   def buildRefined(emb: DataFrame, idCol: String, embCol: String, dim: Int,
                    bands: Int, rbits: Int, seed: Long, cap: Int,
-                   kInternal: Int, rounds: Int, deg: Int,
-                   allSigs: Option[DataFrame] = None): DataFrame =
+                   kInternal: Int, rounds: Int, deg: Int): DataFrame =
     refine(emb, idCol, embCol,
-      build(emb, idCol, embCol, dim, bands, rbits, seed, cap, kInternal,
-          allSigs)
+      build(emb, idCol, embCol, dim, bands, rbits, seed, cap, kInternal)
         .localCheckpoint(),
       kInternal, rounds, deg)
 
@@ -533,7 +526,7 @@ object NswGraph {
     * standard repair candidate set — the deleted neighbors' own neighbors
     * (the two-hop detour around the hole), re-ranked together with its
     * surviving edges by exact cosine. Only affected neighborhoods are
-    * rescored; `delIds` is broadcast twice and never joined wide.
+    * rescored; `delIds` is broadcast and never joined wide.
     */
   def remove(emb: DataFrame, graph: DataFrame, delIds: DataFrame,
              idCol: String, embCol: String, deg: Int): DataFrame = {
@@ -568,10 +561,11 @@ object NswGraph {
       Tensors.norm(col(embCol)).as("nrm"))
     // same join-order layout as [[refine]]: dst-side vector join first,
     // src side LAST so the repair window rides the join's hash(src) layout.
-    // aff is deletion-bounded (nodes that lost an edge to a deleted
-    // neighbor) — the same contract class as the del broadcasts above, so
-    // pin it: survivors never re-exchanges for the semi/anti probes.
-    val candAff = survivors.join(broadcast(aff), Seq("src"), "left_semi")
+    // aff is NOT pinned: it holds the in-neighbours of the deleted ids,
+    // and in-degree is uncapped (one deleted hub can make it corpus-scale),
+    // so the planner, or AQE from its runtime size, picks the strategy for
+    // the semi/anti probes.
+    val candAff = survivors.join(aff, Seq("src"), "left_semi")
       .unionByName(detour).distinct()
     val scored = candAff
       .join(v.select(col("vec_id").as("dst"), col("x").as("xb"),
@@ -585,7 +579,7 @@ object NswGraph {
     val repaired = scored
       .withColumn("rn", row_number().over(w)).where(col("rn") <= deg)
       .select("src", "dst")
-    survivors.join(broadcast(aff), Seq("src"), "left_anti")
+    survivors.join(aff, Seq("src"), "left_anti")
       .unionByName(repaired)
   }
 

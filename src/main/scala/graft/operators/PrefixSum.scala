@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Distributed running sum over a total order — the scalable replacement
   * for a partition-less `sum(x).over(Window.orderBy(...))`.
@@ -17,8 +18,8 @@ import org.apache.spark.storage.StorageLevel
   *   1. range-partition by the sort key and sort within partitions — every
   *      partition holds a contiguous, sorted slice of the global order;
   *   2. census each partition (per-partition row count AND value total — one
-  *      tiny job), prefix-sum the P totals into per-partition offsets on the
-  *      driver;
+  *      tiny job); each emit task prefix-sums the totals of the partitions
+  *      before its own into its offsets;
   *   3. stream each partition once, emitting offset + local running sum
   *      (and, when asked, offset + local position as the row number).
   *
@@ -28,21 +29,14 @@ import org.apache.spark.storage.StorageLevel
   * oracles keep stating plain `sum(x) OVER (ORDER BY ...)`: same function,
   * different (scalable) evaluation strategy.
   *
-  * The sorted relation is persisted before the census so the census job and
-  * the emit job read the SAME range boundaries (range partitioning samples
-  * its bounds; two independent recomputations could disagree). The cache is
-  * released eagerly once the first job materializing the emit RDD completes
-  * ([[ScaleZip.releaseAfterJobWith]]); the runner's clearCache lifecycle
-  * remains the backstop.
-  *
-  * The unique-key precondition is sharper than "ranks would be arbitrary":
-  * after the eager release, a SECOND job over the emit RDD recomputes it,
-  * and that recompute is bit-identical ONLY because the total order pins
-  * every row's position. With tied orders, two jobs in the same query could
-  * see tie rows with swapped running sums/ranks — a failure mode the
-  * always-held cache used to mask. Every zip call site must end `order` in
-  * a unique key; there is no runtime guard (a duplicate-key check would
-  * cost a full extra aggregate per call).
+  * Nothing is cached: the census and the emit read the same range
+  * exchange's shuffle output, so both see the same partition boundaries
+  * ([[ScaleZip.zip]]). The unique-key precondition stays because the emit
+  * numbers rows in within-partition sort order, and a shuffle read hands
+  * tied rows over in no fixed order: with tied orders, two jobs over the
+  * emit RDD could see tie rows with swapped running sums/ranks. Every zip
+  * call site must end `order` in a unique key; there is no runtime guard (a
+  * duplicate-key check would cost a full extra aggregate per call).
   */
 object PrefixSum {
 
@@ -50,8 +44,8 @@ object PrefixSum {
     * number) over the total order `order`.
     *
     * @param order     total order (MUST end in a unique key — ties would
-    *                  make the running sum partition-dependent, and the
-    *                  post-release recompute bit-UNSTABLE: see the object
+    *                  make the running sum partition-dependent and differ
+    *                  between two reads of the emit: see the object
     *                  scaladoc)
     * @param valueCol  non-null LongType column to sum
     * @param inclusive true → sum includes the current row
@@ -85,84 +79,54 @@ object PrefixSum {
               valueCols: Seq[(String, String)], inclusive: Boolean,
               rnName: Option[String] = None,
               numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
     require(valueCols.nonEmpty, "PrefixSum.cumsumN needs a value column")
-    valueCols.foreach { case (v, _) =>
-      require(df.schema(v).dataType == LongType,
-        s"PrefixSum needs LongType value columns; " +
-          s"$v is ${df.schema(v).dataType.catalogString}")
-    }
-    val k = valueCols.size
-    val sorted = df.repartitionByRange(ScaleZip.fanout(df, numPartitions),
-        order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vIdx = valueCols.map { case (v, _) => sorted.schema.fieldIndex(v) }
-      .toArray
-    // census: P (rows, totals[k]) tuples to the driver — the only global
-    // state
-    val census = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rows = 0L
-      val tot = new Array[Long](k)
-      it.foreach { r =>
-        rows += 1L
+    val vIdx = valueCols.map { case (v, _) => longField(df, v) }.toArray
+    val k = vIdx.length
+    val appended = (valueCols.map(_._2) ++ rnName)
+      .map(StructField(_, LongType, nullable = false))
+    // census: per partition (rows, totals[k]) — the only global state
+    ScaleZip.zip[(Long, Array[Long])](df, order, numPartitions, appended) {
+      it =>
+        var rows = 0L
+        val tot = new Array[Long](k)
+        it.foreach { r =>
+          rows += 1L
+          var j = 0
+          while (j < k) { tot(j) += r.getLong(vIdx(j)); j += 1 }
+        }
+        (rows, tot)
+    } { (census, pid) =>
+      var rn = 0L
+      val run = new Array[Long](k)
+      census.take(pid).foreach { case (rows, tot) =>
+        rn += rows
         var j = 0
-        while (j < k) { tot(j) += r.getLong(vIdx(j)); j += 1 }
+        while (j < k) { run(j) += tot(j); j += 1 }
       }
-      Iterator((pid, rows, tot))
-    }.collect().sortBy(_._1)
-    val nParts = sorted.rdd.getNumPartitions
-    val rowOff = new Array[Long](nParts)
-    val sumOff = Array.ofDim[Long](nParts, k)
-    census.foreach { case (pid, rows, tot) =>
-      if (pid + 1 < nParts) {
-        rowOff(pid + 1) = rows
-        Array.copy(tot, 0, sumOff(pid + 1), 0, k)
-      }
-    }
-    var i = 1
-    while (i < nParts) {
-      rowOff(i) += rowOff(i - 1)
-      var j = 0
-      while (j < k) { sumOff(i)(j) += sumOff(i - 1)(j); j += 1 }
-      i += 1
-    }
-    val schema0 = valueCols.foldLeft(sorted.schema) { case (sc, (_, n)) =>
-      sc.add(n, LongType, nullable = false)
-    }
-    val schema = rnName.fold(schema0)(schema0.add(_, LongType, nullable = false))
-    val bRow = spark.sparkContext.broadcast(rowOff)
-    val bSum = spark.sparkContext.broadcast(sumOff)
-    val withRn = rnName.isDefined
-    val out = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val run = bSum.value(pid).clone()
-      var rn = bRow.value(pid)
-      it.map { r =>
+      r => {
         rn += 1L
-        val sums = new Array[Any](k)
+        val out = new Array[Any](k + rnName.size)
         var j = 0
         while (j < k) {
           val v = r.getLong(vIdx(j))
-          sums(j) = if (inclusive) run(j) + v else run(j)
+          out(j) = if (inclusive) run(j) + v else run(j)
           run(j) += v
           j += 1
         }
-        if (withRn) Row.fromSeq(r.toSeq ++ sums :+ rn)
-        else Row.fromSeq(r.toSeq ++ sums)
+        if (rnName.isDefined) out(k) = rn
+        ArraySeq.unsafeWrapArray(out)
       }
     }
-    ScaleZip.releaseAfterJobWith(sorted, out.id)
-    spark.createDataFrame(out, schema)
   }
 
   /** Running MINIMUM/MAXIMUM of `valueCol` over the total order `order` —
     * min/max are associative, so [[cumsum]]'s census shape carries over
-    * verbatim (per-partition extremum census → driver prefix → local walk)
-    * and the result is bit-identical to the partition-less
-    * `min/max(x) OVER (ORDER BY ...)` window for any partition count by the
-    * same total-order argument. The skyline/dominance family's shape: "the
-    * best value any STRICTLY earlier row achieves" is the exclusive prefix
-    * extremum.
+    * verbatim (per-partition extremum census → prefix over the earlier
+    * partitions → local walk) and the result is bit-identical to the
+    * partition-less `min/max(x) OVER (ORDER BY ...)` window for any
+    * partition count by the same total-order argument. The
+    * skyline/dominance family's shape: "the best value any STRICTLY earlier
+    * row achieves" is the exclusive prefix extremum.
     *
     * @param order     total order (MUST end in a unique key — see the
     *                  object scaladoc)
@@ -176,54 +140,31 @@ object PrefixSum {
   def cumExtremum(df: DataFrame, order: Seq[Column], valueCol: String,
                   isMax: Boolean, inclusive: Boolean, outName: String,
                   numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    require(df.schema(valueCol).dataType == LongType,
+    val vIdx = longField(df, valueCol)
+    val comb: (Long, Long) => Long =
+      if (isMax) (a, b) => math.max(a, b) else (a, b) => math.min(a, b)
+    // census: per partition extremum (None for an empty partition)
+    ScaleZip.zip[Option[Long]](df, order, numPartitions,
+        Seq(StructField(outName, LongType, nullable = !inclusive))) {
+      _.map(_.getLong(vIdx)).reduceOption(comb)
+    } { (census, pid) =>
+      // extremum over every row STRICTLY before this partition (None = no
+      // preceding rows anywhere)
+      var run = census.take(pid).flatten.reduceOption(comb)
+      r => {
+        val v = r.getLong(vIdx)
+        val prev = run
+        run = Some(prev.fold(v)(comb(_, v)))
+        Seq((if (inclusive) run else prev).orNull)
+      }
+    }
+  }
+
+  /** Index of `name` in `df`, which must be a LongType column. */
+  private def longField(df: DataFrame, name: String): Int = {
+    require(df.schema(name).dataType == LongType,
       s"PrefixSum needs LongType value columns; " +
-        s"$valueCol is ${df.schema(valueCol).dataType.catalogString}")
-    val sorted = df.repartitionByRange(ScaleZip.fanout(df, numPartitions),
-        order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    def comb(a: Long, b: Long): Long =
-      if (isMax) math.max(a, b) else math.min(a, b)
-    // census: P (rows, extremum) pairs — extremum meaningless when rows=0
-    val census = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rows = 0L
-      var ext = 0L
-      it.foreach { r =>
-        val v = r.getLong(vIdx)
-        ext = if (rows == 0L) v else comb(ext, v)
-        rows += 1L
-      }
-      Iterator((pid, rows, ext))
-    }.collect().sortBy(_._1)
-    val nParts = sorted.rdd.getNumPartitions
-    // prefix extremum over all partitions STRICTLY before pid (None = no
-    // preceding rows anywhere)
-    val extOff = new Array[Option[Long]](nParts)
-    var acc: Option[Long] = None
-    var i = 0
-    while (i < nParts) {
-      extOff(i) = acc
-      census.find(_._1 == i).foreach { case (_, rows, ext) =>
-        if (rows > 0L) acc = Some(acc.fold(ext)(comb(_, ext)))
-      }
-      i += 1
-    }
-    val schema = sorted.schema.add(outName, LongType, nullable = !inclusive)
-    val bExt = spark.sparkContext.broadcast(extOff)
-    val out = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run: Option[Long] = bExt.value(pid)
-      it.map { r =>
-        val v = r.getLong(vIdx)
-        val withV = Some(run.fold(v)(comb(_, v)))
-        val emit = if (inclusive) withV else run
-        run = withV
-        Row.fromSeq(r.toSeq :+ emit.orNull)
-      }
-    }
-    ScaleZip.releaseAfterJobWith(sorted, out.id)
-    spark.createDataFrame(out, schema)
+        s"$name is ${df.schema(name).dataType.catalogString}")
+    df.schema.fieldIndex(name)
   }
 }

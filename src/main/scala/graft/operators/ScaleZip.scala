@@ -1,16 +1,13 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
+import scala.reflect.ClassTag
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
-import scala.jdk.CollectionConverters._
-
-/** Shared plumbing for the range-partition + census + zip operators
-  * ([[GlobalRank]], [[PrefixSum]]): fan-out derivation and eager release of
-  * the persisted sorted intermediate.
+/** The one range-partition → sort → census → emit scaffold behind the
+  * total-order operators ([[GlobalRank]], [[PrefixSum]]), plus their shared
+  * fan-out derivation.
   *
   * Fan-out: a literal partition count bakes a cluster size into the plan —
   * 32 range partitions over a 100 TB relation is ~3 TB per task. When the
@@ -19,41 +16,25 @@ import scala.jdk.CollectionConverters._
   * the CONF ONLY — never `df.rdd.getNumPartitions`: under AQE, touching
   * `.rdd` on a not-yet-executed plan forces every upstream shuffle stage to
   * materialize as real jobs, and the operator's own `repartitionByRange` is
-  * a separate execution with no cross-action exchange reuse — a non-persisted
+  * a separate execution with no cross-action exchange reuse — an uncached
   * shuffled input (the groupBy censuses feeding cumsum/cumsumN) would compute
   * its upstream aggregation TWICE per operator call. The zip operators are
   * partition-count independent by construction (total order + associative
   * combine — PrefixSumSpec proves it across partition counts), so the
   * derived fan-out is hash-neutral.
   *
-  * Release: the sorted relation must stay persisted between the census job
-  * and the emit job so both read the SAME range boundaries. Once the first
-  * job that materializes the emit RDD completes, the cache is dead weight —
-  * but the operator returns a LAZY frame, so it cannot unpersist inline
-  * without defeating the cache. ONE shared listener per SparkContext watches
-  * a pending map (emit RDD id → cached frame) and unpersists each entry when
-  * the first job whose lineage contains its emit RDD completes — unless
-  * another pending entry reads the same cached plan, whose emit job then
-  * does the release. This bounds within-query cache pressure (a nested zip
-  * chain frees each level as the downstream action sweeps through it)
-  * instead of holding every level until the runner's clearCache. A zip that
-  * is BUILT but never actioned leaves its entry pending — [[sweepPending]]
-  * (called from the runners' clearCache lifecycle) unpersists and drops
-  * those, so a long-lived server session can't accrete entries; the
-  * listener itself is a singleton, so listener count never grows with
-  * operator calls. If a later action re-reads a
-  * released emit RDD, the recompute is bit-identical: the range bounds live
-  * in the captured plan's shuffle dependency (sampled once), assignment and
-  * sort are deterministic functions of the total order.
-  *
-  * Deliberate trade: when the zip OUTPUT itself feeds a range partitioner
-  * (a nested zip chain), the downstream exchange's bound-sampling pass is
-  * the first job over the emit RDD, so the release fires before the main
-  * shuffle re-reads it — that second read recomputes the emit from the
-  * parent exchange's still-present shuffle files (one extra in-partition
-  * sort; the map side is not redone, and determinism makes the recompute
-  * bit-identical). Holding k row-scale caches to the end of the query
-  * costs more at 100 TB than one re-sorted pass per nesting level.
+  * Nothing is cached. The census job and the emit both read the SAME
+  * `sorted.rdd`, so both read the same range exchange's shuffle output: the
+  * range bounds are sampled once (they live in that exchange's shuffle
+  * dependency), the map side runs once, and partition boundaries match by
+  * construction. A census (row counts, totals, extrema) depends only on
+  * which partition a row lands in, never on the order within it, so the
+  * census pass needs no agreement on tie order; the emit does — which is
+  * why every caller's order must still end in a unique key (a shuffle read
+  * delivers tied rows in no fixed order, so two reads of one partition
+  * could number them differently). The trade: the emit re-reads the
+  * exchange (shuffle records read double) instead of reading a cache, and
+  * there is no intermediate to hold or release.
   */
 private[graft] object ScaleZip {
 
@@ -65,67 +46,30 @@ private[graft] object ScaleZip {
     if (requested > 0) requested
     else df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Per-context release state: the one shared listener plus its pending
-    * (emit RDD id → cached frame) map and the in-flight (job id → emit RDD
-    * ids) watch set.
+  /** Range-partition `df` by `order`, sort within partitions, run ONE census
+    * job (`census` folds each partition to a `C`), broadcast the census array
+    * (indexed by partition id) to the emit tasks, and append `appended`'s
+    * columns to every row: `emit(censuses, pid)` is called once per emit
+    * task and returns that partition's row walker, which yields the appended
+    * values for each row in sorted order.
     */
-  private final class ReleaseState extends SparkListener {
-    val pending = new ConcurrentHashMap[Int, DataFrame]()
-    private val jobWatch = new ConcurrentHashMap[Int, Set[Int]]()
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      if (!pending.isEmpty) {
-        val hits = pending.keySet.asScala.filter(id =>
-          js.stageInfos.exists(_.rddInfos.exists(_.id == id))).toSet
-        if (hits.nonEmpty) jobWatch.put(js.jobId, hits): Unit
-      }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      val hits = jobWatch.remove(je.jobId)
-      if (hits != null) hits.foreach { id =>
-        val cached = pending.remove(id)
-        if (cached != null && !readByPending(cached))
-          cached.unpersist(blocking = false)
-      }
+  def zip[C: ClassTag](df: DataFrame, order: Seq[Column], numPartitions: Int,
+                       appended: Seq[StructField])(census: Iterator[Row] => C)(
+                       emit: (Array[C], Int) => Row => Seq[Any]): DataFrame = {
+    val spark = df.sparkSession
+    val sorted = df.repartitionByRange(fanout(df, numPartitions), order: _*)
+      .sortWithinPartitions(order: _*).rdd
+    val censuses = spark.sparkContext.broadcast(
+      sorted.mapPartitions(it => Iterator(census(it))).collect())
+    val out = sorted.mapPartitionsWithIndex { (pid, it) =>
+      val walk = emit(censuses.value, pid)
+      it.map(r => Row.fromSeq(r.toSeq ++ walk(r)))
     }
-    /** Two zips over the same input, order and fan-out persist ONE cache
-      * entry: it is released when the last of their emit jobs ends, never
-      * while another side's stage may still be reading its blocks.
-      */
-    private def readByPending(cached: DataFrame): Boolean = {
-      val plan = cached.queryExecution.normalized
-      pending.values.asScala.exists(_.queryExecution.normalized.sameResult(plan))
-    }
-    def sweep(): Unit = {
-      pending.values.asScala.foreach(_.unpersist(blocking = false))
-      pending.clear()
-      jobWatch.clear()
-    }
+    spark.createDataFrame(out, StructType(df.schema ++ appended))
   }
 
-  private val states = new ConcurrentHashMap[SparkContext, ReleaseState]()
-
-  private def state(sc: SparkContext): ReleaseState =
-    states.computeIfAbsent(sc, { c =>
-      val s = new ReleaseState
-      c.addSparkListener(s)
-      s
-    })
-
-  /** Unpersist `cached` after the first completed job whose stages contain
-    * `emitRddId` in their lineage (via the shared per-context listener).
+  /** No-op: zips cache nothing, so there is nothing pending to sweep.
+    * Kept because the perfbench runner still calls it.
     */
-  def releaseAfterJobWith(cached: DataFrame, emitRddId: Int): Unit =
-    state(cached.sparkSession.sparkContext).pending.put(emitRddId, cached): Unit
-
-  /** Entries still awaiting their emit job — zips built but not (yet)
-    * actioned. Exposed for the runners' sweep and PrefixSumSpec.
-    */
-  def pendingCount(spark: SparkSession): Int =
-    Option(states.get(spark.sparkContext)).map(_.pending.size).getOrElse(0)
-
-  /** Unpersist + drop every still-pending entry — the clearCache-lifecycle
-    * backstop for zips that were built but never actioned (their sorted
-    * intermediates would otherwise stay registered for the session's life).
-    */
-  def sweepPending(spark: SparkSession): Unit =
-    Option(states.get(spark.sparkContext)).foreach(_.sweep())
+  def sweepPending(spark: SparkSession): Unit = ()
 }

@@ -430,10 +430,10 @@ object ScaleQueries {
     // as a signed settlement ledger (purchase credits, error debits,
     // exact cents) ordered by event_id; running balance is the prefix
     // SUM, running peak is the prefix MAX **of the balance** — a NESTED
-    // zip (cumsum's output feeds cumExtremum's range partitioner, the
-    // documented ScaleZip release/recompute trade) — and drawdown =
-    // peak − balance is the peak-relative regression every risk/ops
-    // dashboard alarms on. Reported per bounded event-id bucket (floor
+    // zip (cumsum's output feeds cumExtremum's range partitioner, which
+    // re-reads cumsum's range exchange — ScaleZip caches nothing) — and
+    // drawdown = peak − balance is the peak-relative regression every
+    // risk/ops dashboard alarms on. Reported per bounded event-id bucket (floor
     // width ⇒ ≤ ~511 rows, q485's grid posture): ledger rows, end-of-bucket balance
     // and peak (max_by on the unique order — deterministic), max
     // drawdown. Scale: two range-partition zips riding ONE total order +

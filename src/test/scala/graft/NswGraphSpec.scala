@@ -159,6 +159,35 @@ class NswGraphSpec extends AnyFunSuite {
     g.unpersist(): Unit
   }
 
+  test("remove pins only the deleted-id broadcasts; the affected set is left to the planner") {
+    // the affected set holds every node that lost an edge — no size bound —
+    // so it must not carry a broadcast hint. With auto-broadcast off, every
+    // BroadcastExchange left in the plan is a hint: each must be a pin of
+    // the deleted ids (a filtered scan), never the aggregated affected set.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val full = NswGraph.build(emb, "vec_id", "embedding", Dim,
+      bands = 4, rbits = 4, seed = 11L, cap = 64, deg = 8).localCheckpoint()
+    val del = emb.where(col("vec_id") % 10 === 3).select("vec_id")
+    Scratch.run(spark, "graft_nsw_remove_plan_",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { _ =>
+      val plan = NswGraph.remove(emb, full, del, "vec_id", "embedding",
+          deg = 8).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val pins = plan.collect { case b: BroadcastExchangeExec => b }
+      assert(pins.nonEmpty, plan.toString)
+      pins.foreach { b =>
+        assert(!b.child.exists(n => n.isInstanceOf[BaseJoinExec] ||
+          n.isInstanceOf[BaseAggregateExec]),
+          s"broadcast of something other than the deleted ids:\n$b")
+      }
+    }
+  }
+
   test("r15 exchange-riding contract: a top-k window rides the last join's hash layout") {
     // The refine/upsert/localRefine/remove scoring blocks join the
     // window-key side LAST so the per-src top-k window needs no exchange

@@ -8,7 +8,8 @@ import graft.operators.{GlobalRank, PrefixSum}
 /** The bit-identity claims behind round 13's window migrations, pinned
   * mechanically: for ANY data and ANY partition count, the two-pass
   * PrefixSum zip equals the partition-less window form (inclusive and
-  * exclusive cumsum + row number), and GlobalRank.zipWithNtile equals
+  * exclusive cumsum + row number), GlobalRank.zipWithRank equals
+  * `row_number() − 1`, and GlobalRank.zipWithNtile equals
   * `ntile(n) OVER (ORDER BY ...)` — including the N % n ≠ 0 and N < n
   * bucket-boundary cases where the (rank·n) div N rule would diverge.
   * The data is seeded pseudo-random with DUPLICATE sort values (the
@@ -37,20 +38,24 @@ class PrefixSumSpec extends AnyFunSuite {
             Window.currentRow)).as("inc"),
           coalesce(sum("v").over(w.rowsBetween(Window.unboundedPreceding,
             -1)), lit(0L)).as("exc"),
-          row_number().over(w).cast("long").as("rn"))
+          row_number().over(w).cast("long").as("rn"),
+          (row_number().over(w) - 1).cast("long").as("rank"))
         .orderBy("id").collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4)))
       val inc = PrefixSum.cumsum(df, ord, "v", inclusive = true,
         sumName = "inc", rnName = Some("rn"), numPartitions = parts)
       val exc = PrefixSum.cumsum(df, ord, "v", inclusive = false,
         sumName = "exc", numPartitions = parts)
+      val rank = GlobalRank.zipWithRank(df, ord, parts, idName = "rank")
       val got = inc.select("id", "inc", "rn")
         .join(exc.select("id", "exc"), Seq("id"))
-        .select(col("id"), col("inc"), col("exc"), col("rn"))
+        .join(rank.select("id", "rank"), Seq("id"))
+        .select(col("id"), col("inc"), col("exc"), col("rn"), col("rank"))
         .orderBy("id").collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4)))
       assert(got.toSeq === expected.toSeq, s"n=$n parts=$parts")
-      spark.catalog.clearCache()
     }
   }
 
@@ -67,7 +72,6 @@ class PrefixSumSpec extends AnyFunSuite {
         .select("id", "t")
         .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.toSeq === expected.toSeq, s"n=$n tiles=$tiles parts=$parts")
-      spark.catalog.clearCache()
     }
   }
 
@@ -98,76 +102,6 @@ class PrefixSumSpec extends AnyFunSuite {
         .select("id", "cv", "cu").orderBy("id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(got.toSeq === expected.toSeq, s"inclusive=$inclusive desc=$desc")
-      spark.catalog.clearCache()
-    }
-  }
-
-  test("the sorted intermediate is released once the emit job completes") {
-    // ADVICE r13: a nested zip chain must not hold every level's persisted
-    // intermediate until the runner's clearCache — each level frees as the
-    // downstream action sweeps through it (listener is async: spin briefly)
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = data(200, seed = 11L)
-    PrefixSum.cumsum(df, Seq(col("x"), col("id")), "v",
-      inclusive = true, sumName = "c").collect()
-    GlobalRank.zipWithRank(df, Seq(col("x"), col("id")), idName = "r")
-      .collect()
-    def leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
-    val deadline = System.currentTimeMillis() + 10000
-    while (leftover.nonEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    assert(leftover.isEmpty,
-      "sorted intermediates still persisted after their emit jobs")
-  }
-
-  test("two zips over one sorted plan keep it cached until both emit jobs end") {
-    // inc and exc over the same input, order and fan-out persist ONE cache
-    // entry; releasing it when the first emit job ends let the other side's
-    // still-running stage lose its blocks ("Block rdd_… does not exist")
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-    import org.apache.spark.storage.StorageLevel
-    import graft.operators.ScaleZip
-    spark.catalog.clearCache()
-    ScaleZip.sweepPending(spark)
-    val df = data(200, seed = 13L)
-    val ord = Seq(col("x"), col("id"))
-    val inc = PrefixSum.cumsum(df, ord, "v", inclusive = true,
-      sumName = "inc", numPartitions = 3)
-    val exc = PrefixSum.cumsum(df, ord, "v", inclusive = false,
-      sumName = "exc", numPartitions = 3)
-    val shared = df.repartitionByRange(3, ord: _*).sortWithinPartitions(ord: _*)
-    assert(shared.storageLevel != StorageLevel.NONE)
-    assert(ScaleZip.pendingCount(spark) == 2)
-    // registered after the zips' release listener on the same listener
-    // queue, so once it sees a job end the release listener has handled it
-    val jobEnds = new AtomicInteger()
-    val probe = new SparkListener {
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        jobEnds.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(probe)
-    def actionAndDrain(df: org.apache.spark.sql.DataFrame): Unit = {
-      val seen = jobEnds.get
-      df.collect()
-      val deadline = System.currentTimeMillis() + 10000
-      while (jobEnds.get == seen && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(jobEnds.get > seen, "listener bus did not deliver the job end")
-    }
-    try {
-      actionAndDrain(inc)
-      assert(ScaleZip.pendingCount(spark) == 1)
-      assert(shared.storageLevel != StorageLevel.NONE,
-        "shared sorted plan released while the other zip still reads it")
-      actionAndDrain(exc)
-      assert(ScaleZip.pendingCount(spark) == 0)
-      assert(shared.storageLevel == StorageLevel.NONE,
-        "shared sorted plan not released after the last emit job")
-    } finally {
-      spark.sparkContext.removeSparkListener(probe)
-      spark.catalog.clearCache()
     }
   }
 
@@ -185,8 +119,6 @@ class PrefixSumSpec extends AnyFunSuite {
     val ranked = GlobalRank.zipWithRank(df.repartition(2),
       Seq(col("x"), col("id")), idName = "r")
     assert(ranked.rdd.getNumPartitions === conf)
-    spark.catalog.clearCache()
-    graft.operators.ScaleZip.sweepPending(spark)
   }
 
   test("cumExtremum ≡ partition-less min/max window (inclusive + exclusive), any partition count") {
@@ -218,9 +150,7 @@ class PrefixSumSpec extends AnyFunSuite {
           (r.getLong(0), r.getLong(1),
             if (r.isNullAt(2)) None else Some(r.getLong(2))))
       assert(got.toSeq === expected.toSeq, s"n=$n parts=$parts isMax=$isMax")
-      spark.catalog.clearCache()
     }
-    graft.operators.ScaleZip.sweepPending(spark)
   }
 
   test("drawdown carry decomposition: waved cumsum→cumExtremum with a 2-long carry ≡ the whole-ledger walk, any split") {
@@ -264,45 +194,69 @@ class PrefixSumSpec extends AnyFunSuite {
         }
       }
       assert(waved === whole.toSeq, s"n=$n cut=$cut")
-      spark.catalog.clearCache()
     }
-    graft.operators.ScaleZip.sweepPending(spark)
   }
 
-  test("release listener does not accrete: actioned zips drain, un-actioned zips sweep") {
-    import graft.operators.ScaleZip
-    // r14 verdict #3 / ADVICE: the one-shot-listener design leaked a
-    // registered listener per zip that was built but never actioned. The
-    // shared-listener design keeps the SparkContext's listener population
-    // constant; what could still accrete is the pending release map —
-    // assert it drains after (a) a normal emit and (b) the clearCache
-    // sweep for a built-but-never-actioned zip.
-    spark.catalog.clearCache()
-    ScaleZip.sweepPending(spark)
-    assert(ScaleZip.pendingCount(spark) === 0)
-    // (a) a normal emit: the entry drains when the emit job completes
-    val df = data(100, seed = 21L)
-    PrefixSum.cumsum(df, Seq(col("x"), col("id")), "v",
-      inclusive = true, sumName = "c").collect()
-    val deadline = System.currentTimeMillis() + 10000
-    while (ScaleZip.pendingCount(spark) > 0
-        && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    assert(ScaleZip.pendingCount(spark) === 0,
-      "pending release entry survived its emit job")
-    // (b) built but never actioned: the entry stays pending (by design —
-    // no job ever contains the emit RDD) until the runner's clearCache
-    // lifecycle sweeps it
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    GlobalRank.zipWithRank(df, Seq(col("x"), col("id")), idName = "r")
-    assert(ScaleZip.pendingCount(spark) === 1,
-      "a built-but-never-actioned zip should hold exactly its own entry")
-    ScaleZip.sweepPending(spark)
-    assert(ScaleZip.pendingCount(spark) === 0,
-      "sweepPending left entries behind")
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leftover.isEmpty,
-      "sweepPending left the un-actioned zip's sorted intermediate persisted")
-    spark.catalog.clearCache()
+  test("zips persist nothing; the range exchange writes each input row once across census and emit") {
+    // the census job and the emit read the same range exchange's shuffle
+    // output: no cached intermediate at build or after the action, and the
+    // exchange's map side runs once per zip
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val written = new AtomicLong
+    val fenceIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fences = new AtomicInteger
+    val meter = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          written.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten): Unit
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("graft.fence") != null)
+          fenceIds.add(js.jobId): Unit
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (fenceIds.contains(je.jobId)) fences.incrementAndGet(): Unit
+    }
+    // the listener bus delivers in order: once a marked job's end arrives,
+    // every earlier job's task ends have been counted
+    def drain(): Unit = {
+      val want = fences.get + 1
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty("graft.fence", null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (fences.get < want && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(fences.get >= want, "listener bus did not deliver the fence job")
+    }
+    val n = 300
+    val df = data(n, seed = 17L)
+    val ord = Seq(col("x"), col("id"))
+    val zips: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "cumsum" -> (() => PrefixSum.cumsum(df, ord, "v", inclusive = true,
+        sumName = "s")),
+      "cumsumN" -> (() => PrefixSum.cumsumN(df, ord,
+        Seq("v" -> "s", "id" -> "t"), inclusive = false, rnName = Some("rn"))),
+      "cumExtremum" -> (() => PrefixSum.cumExtremum(df, ord, "v",
+        isMax = true, inclusive = false, outName = "m")),
+      "zipWithRank" -> (() => GlobalRank.zipWithRank(df, ord, idName = "r")),
+      "zipWithNtile" -> (() => GlobalRank.zipWithNtile(df, ord, 7,
+        outName = "t")))
+    sc.addSparkListener(meter)
+    try zips.foreach { case (name, mk) =>
+      val cached = sc.getPersistentRDDs.keySet
+      drain()
+      val w0 = written.get
+      val z = mk()
+      assert(sc.getPersistentRDDs.keySet === cached, s"$name persisted at build")
+      assert(z.collect().length === n)
+      assert(sc.getPersistentRDDs.keySet === cached,
+        s"$name persisted at collect")
+      drain()
+      assert(written.get - w0 === n.toLong,
+        s"$name: range exchange shuffle records written")
+    } finally sc.removeSparkListener(meter)
   }
 }
